@@ -71,11 +71,14 @@ object Bench {
     // session warmup: pay codegen/JIT once, outside the timings
     try SparkEntry.queries("cell_encode")(spark, sfDir).count()
     catch { case _: Throwable => }
-    val results = headline.map { name =>
+    // a query that throws is recorded under "failed", never timed
+    val (failed, results) = headline.partitionMap { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); Right(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); Left(name)
+      }
     }
     spark.stop()
 
@@ -162,7 +165,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     def arr(vs: Seq[Double]) = vs.map(v => f"$v%.1f").mkString("[", ",", "]")
+    val failedArr = failed.map(q => "\"" + q + "\"").mkString("[", ",", "]")
     println(
-      f"""{"metric":"pip-join+tile pages/sec @ local[32] (headline secs in queries)","value":$pps32%.1f,"unit":"pages/sec","total_headline_sec":$total%.2f,"queries":$qs,"sf":"$sfDir","flagship_passes_32":${arr(runs32)},"scaling":{"corpus_pages":$corpusN,"n_cores":$n,"pinned":$pinned,"passes_N":${arr(runsN)},"passes_4N":${arr(runs4N)},"pages_per_sec_N":$ppsN%.1f,"pages_per_sec_4N":$pps4N%.1f,"efficiency_4x":$eff%.3f,"aggregation":"median-of-$passes","target":0.8}}""")
+      f"""{"metric":"pip-join+tile pages/sec @ local[32] (headline secs in queries)","value":$pps32%.1f,"unit":"pages/sec","total_headline_sec":$total%.2f,"queries":$qs,"failed":$failedArr,"sf":"$sfDir","flagship_passes_32":${arr(runs32)},"scaling":{"corpus_pages":$corpusN,"n_cores":$n,"pinned":$pinned,"passes_N":${arr(runsN)},"passes_4N":${arr(runs4N)},"pages_per_sec_N":$ppsN%.1f,"pages_per_sec_4N":$pps4N%.1f,"efficiency_4x":$eff%.3f,"aggregation":"median-of-$passes","target":0.8}}""")
   }
 }

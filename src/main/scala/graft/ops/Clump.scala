@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * label = its own cell id; each round every cell takes the min label of
   * its same-value neighbours; converged when nothing changes. Rounds are
   * O(component diameter) — bounded by grid extent, and each round is one
-  * halo join + aggregate. Lineage is truncated per round (localCheckpoint),
-  * exactly like the kNN shell loop.
+  * halo join + aggregate, run by `Dem.converge` (round cap, change check,
+  * per-round lineage truncation).
   *
   * Label choice (min cell id of the component) is deterministic, so
   * results are reproducible though label VALUES differ from the
@@ -23,24 +23,27 @@ import org.apache.spark.sql.functions._
   */
 object Clump {
 
+  /** Round cap: pointer jumping settles in O(log component diameter)
+    * rounds, far below this. */
+  private val maxRounds = 64
+
   /** @param grid (ix: Long, iy: Long, v) cells; nodata cells excluded upstream
     * @param eightConnexity include diagonal neighbours (clump.rs `--diag`) */
   def clump(spark: SparkSession, grid: DataFrame,
-            eightConnexity: Boolean = true, maxRounds: Int = 64): DataFrame = {
+            eightConnexity: Boolean = true): DataFrame = {
     import spark.implicits._
     val offsets = (for {
       dx <- -1 to 1; dy <- -1 to 1
       if (dx, dy) != (0, 0) && (eightConnexity || dx == 0 || dy == 0)
     } yield (dx, dy)).toDF("dx", "dy")
 
-    var labels = grid
+    val init = grid
       .withColumn("label", expr("ix * 1000000 + iy")) // injective for res ≤ ~19
       .select("ix", "iy", "v", "label")
-      .localCheckpoint()
 
-    var round = 0
-    var changedCount = 1L
-    while (changedCount > 0 && round < maxRounds) {
+    // labels only decrease, so an unchanged round is the fixpoint; converge
+    // fails fast instead of emitting partially-propagated labels
+    Dem.converge(init, maxRounds, 1, "clump") { labels =>
       // neighbour labels (same value only — clump.rs connects equal cells)
       val nbr = labels.crossJoin(broadcast(offsets))
         .select((col("ix") + col("dx")).as("ix"), (col("iy") + col("dy")).as("iy"),
@@ -70,19 +73,9 @@ object Clump {
           least(col("cand"), col("gmin")).as("cand2"))
       val idLab = half.select(
         (col("ix") * 1000000 + col("iy")).as("rid"), col("cand2").as("rlab"))
-      val next = half.join(idLab, col("cand2") === col("rid"), "left")
+      half.join(idLab, col("cand2") === col("rid"), "left")
         .select(col("ix"), col("iy"), col("v"),
-          least(col("cand2"), coalesce(col("rlab"), col("cand2"))).as("label"),
-          (least(col("cand2"), coalesce(col("rlab"), col("cand2"))) < col("label")).as("changed"))
-      val materialized = next.localCheckpoint()
-      changedCount = materialized.filter(col("changed") === true).count()
-      labels = materialized.drop("changed")
-      round += 1
+          least(col("cand2"), coalesce(col("rlab"), col("cand2"))).as("label"))
     }
-    // fail fast, never emit partially-propagated labels (the Dem.converge
-    // / dedup_clusters discipline; review r06)
-    require(changedCount == 0,
-      s"clump label propagation did not converge within $maxRounds rounds")
-    labels
   }
 }

@@ -142,10 +142,8 @@ object Cost {
       val p0 = Dem.dem(s, dir).select("ix", "iy")
         .join(backlink(s, dir), Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy", "coalesce(bx, ix) AS rx", "coalesce(by, iy) AS ry")
-      Dem.converge(p0, 64, 1, "cost_allocation") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }.join(src.selectExpr("ix AS rx", "iy AS ry", "src"), Seq("rx", "ry"))
+      Dem.roots(p0, "cost_allocation")
+        .join(src.selectExpr("ix AS rx", "iy AS ry", "src"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "src AS alloc").orderBy("ix", "iy")
     }),
 

@@ -202,15 +202,12 @@ object Dedup {
     // remaining distance to the component minimum at least halves each
     // round, so convergence is O(log diameter) rounds and the 16-round cap
     // covers components of diameter up to 2^16 — far beyond anything a
-    // chain of near-dup pairs can build; the require below still fails
+    // chain of near-dup pairs can build; the converge assert still fails
     // fast (never silently corrupts) if that bound is somehow exceeded.
-    // Per round: the edge-list equi-join + min aggregate, one label-table
-    // self-join for the jump, and ONE tiny change-count job over the
-    // checkpointed frame (the former exceptAll + two count() actions were
-    // three extra Spark jobs per round for the same predicate — the left
-    // join preserves cardinality, so rep-change detection is sufficient).
-    // Convergence asserted; twin re-derives labels by full recursive
-    // transitive closure (round-free).
+    // Per round (Dem.converge, checked every round): the edge-list
+    // equi-join + min aggregate, one label-table self-join for the jump,
+    // and converge's one-job change check. Convergence asserted; twin
+    // re-derives labels by full recursive transitive closure (round-free).
     "dedup_clusters" -> ((s, dir) => {
       val lab = clusterLabels(s, dir)
       val sz = lab.groupBy("rep").agg(count(lit(1)).as("cluster_size"))
@@ -230,29 +227,20 @@ object Dedup {
       val jp = queries("dedup_ngram_jaccard")(s, dir)
         .filter("jaccard >= 0.5e0").select("a", "b")
       val e = jp.unionByName(jp.selectExpr("b AS a", "a AS b")).localCheckpoint()
-      var lab = e.selectExpr("a AS d").distinct()
-        .selectExpr("d", "d AS rep").localCheckpoint()
-      var done = false
-      var rounds = 0
-      while (!done && rounds < 16) {
+      val init = e.selectExpr("a AS d").distinct().selectExpr("d", "d AS rep")
+      Dem.converge(init, 16, 1, "dedup_clusters") { lab =>
         val nbrMin = e.toDF("d", "nb")
           .join(lab.selectExpr("d AS nb", "rep AS nrep"), "nb")
           .groupBy("d").agg(min("nrep").as("mn"))
         // every rep value is a vertex id (labels are propagated ids), so
         // the rep-of-rep lookup always finds a row; left+coalesce keeps
         // the plan null-safe anyway.
-        val next = lab.join(nbrMin, Seq("d"), "left")
-          .selectExpr("d", "rep", "least(rep, coalesce(mn, rep)) AS rep1")
+        lab.join(nbrMin, Seq("d"), "left")
+          .selectExpr("d", "least(rep, coalesce(mn, rep)) AS rep1")
           .join(lab.selectExpr("d AS jd", "rep AS rep2"),
             col("rep1") === col("jd"), "left")
-          .selectExpr("d", "rep AS prev", "least(rep1, coalesce(rep2, rep1)) AS rep")
-          .localCheckpoint()
-        done = next.filter("rep <> prev").isEmpty
-        lab = next.select("d", "rep")
-        rounds += 1
+          .selectExpr("d", "least(rep1, coalesce(rep2, rep1)) AS rep")
       }
-      require(done, "dedup cluster label propagation must converge")
-      lab
     }
 
   /** Chunk-blocked simhash near-dup pairs at hamming ≤ maxH (maxH ≤ 3

@@ -148,19 +148,8 @@ object Dem {
     }
 
   /** (ix, iy, dir, tx, ty): steepest positive descent, first-dir tie rule. */
-  def dd(s: SparkSession, dir: String): DataFrame = memo(s, dir, "dd") {
-    val g = dem(s, dir)
-    val h = halo(g)
-      .withColumn("dir", expr(dirIdxE))
-      .withColumn("slope", expr(slopeE))
-      .filter(col("slope") > 0.0)
-    val best = h.groupBy("ix", "iy")
-      .agg(expr("min_by(named_struct('dir', dir, 'tx', nix, 'ty', niy), " +
-        "named_struct('ns', -slope, 'd', dir))").as("b"))
-      .selectExpr("ix", "iy", "b.dir AS dir", "b.tx AS tx", "b.ty AS ty")
-    g.select("ix", "iy").join(best, Seq("ix", "iy"), "left")
-      .selectExpr("ix", "iy", "cast(coalesce(dir, -1) as bigint) AS dir", "tx", "ty")
-  }
+  def dd(s: SparkSession, dir: String): DataFrame =
+    memo(s, dir, "dd")(d8On(dem(s, dir)))
 
   /** Materialize one round as a FRESH leaf DataFrame. localCheckpoint
     * alone truncates lineage but (Spark 4) rewrites the new LogicalRDD's
@@ -206,18 +195,23 @@ object Dem {
     cur
   }
 
+  /** One pointer-jumping round (P ← P∘P) over a functional forest
+    * (ix, iy) → (rx, ry) whose roots point at themselves: after k rounds
+    * every cell points at its 2^k-th ancestor. */
+  private[ops] def jump(p: DataFrame): DataFrame =
+    p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
+      .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
+
+  /** Every cell's root, in O(log longest path) jumping rounds; the cap of
+    * 64 rounds resolves chains of up to 2^63 cells. */
+  private[ops] def roots(p0: DataFrame, what: String): DataFrame =
+    converge(p0, 64, 1, what)(jump)
+
   /** D8 flow accumulation: fa(c) = 1 + Σ_{u→c} fa(u) Jacobi fixpoint. */
   def fa(s: SparkSession, dir: String): DataFrame = memo(s, dir, "fa") {
     val d = dd(s, dir)
     val edges = d.filter(col("dir") >= 0).select("ix", "iy", "tx", "ty").localCheckpoint()
-    val grid = d.select("ix", "iy")
-    converge(grid.selectExpr("ix", "iy", "cast(1 as bigint) AS fa"), 200, 4, "dem_fa") { acc =>
-      val inflow = edges.join(acc, Seq("ix", "iy"))
-        .groupBy(col("tx").as("ix"), col("ty").as("iy"))
-        .agg(expr("cast(sum(fa) as bigint)").as("inflow"))
-      grid.join(inflow, Seq("ix", "iy"), "left")
-        .selectExpr("ix", "iy", "1 + coalesce(inflow, 0) AS fa")
-    }
+    faOn(d.select("ix", "iy"), edges, "dem_fa")
   }
 
   /** Stream cells: fa > threshold (extract_streams.rs:231-239). The set is
@@ -282,10 +276,7 @@ object Dem {
       .selectExpr("ix", "iy",
         "CASE WHEN tx IS NOT NULL AND n_in = 1 THEN tx ELSE ix END AS rx",
         "CASE WHEN tx IS NOT NULL AND n_in = 1 THEN ty ELSE iy END AS ry")
-    converge(par, 64, 1, "links") { p =>
-      p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-        .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-    }.selectExpr("ix", "iy", "rx * 1000 + ry AS link_id")
+    roots(par, "links").selectExpr("ix", "iy", "rx * 1000 + ry AS link_id")
   }
 
   /** StrahlerStreamOrder (strahler_order.rs): monotone Jacobi fixpoint,
@@ -343,10 +334,7 @@ object Dem {
     val st = streams(s, dir)
     val p0 = st.join(mainIn(s, dir), Seq("ix", "iy"), "left")
       .selectExpr("ix", "iy", "coalesce(ux, ix) AS rx", "coalesce(uy, iy) AS ry")
-    converge(p0, 64, 1, "trib") { p =>
-      p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-        .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-    }.selectExpr("ix", "iy", "rx * 1000 + ry AS trib")
+    roots(p0, "trib").selectExpr("ix", "iy", "rx * 1000 + ry AS trib")
   }
 
   /** Upstream sweep from outlets carrying (topological order, outlet

@@ -143,20 +143,7 @@ object Dinf2 {
     }),
 
     "flow_length_diff" -> ((s, dir) => {
-      val dl = Dem.memo(s, dir, "down_len2") {
-        val e = Dem.edges(s, dir)
-        val grid = Dem.dd(s, dir)
-        val init = grid.selectExpr("ix", "iy",
-          "CASE WHEN dir < 0 THEN cast(0 as bigint) END AS nc",
-          "CASE WHEN dir < 0 THEN cast(0 as bigint) END AS nd")
-        Dem.converge(init, 96, 4, "down_len2") { cur =>
-          val down = e.join(cur.selectExpr("ix AS tx", "iy AS ty", "nc AS dnc", "nd AS dnd"),
-              Seq("tx", "ty"))
-            .selectExpr("ix", "iy", "dnc + ec AS cnc", "dnd + ed AS cnd")
-          cur.join(down, Seq("ix", "iy"), "left")
-            .selectExpr("ix", "iy", "coalesce(nc, cnc) AS nc", "coalesce(nd, cnd) AS nd")
-        }
-      }.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS fl")
+      val dl = Hydro4.downLen(s, dir).selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS fl")
       val nbr = dl.selectExpr("ix AS cix", "iy AS ciy", "fl")
         .withColumn("dx", explode(sequence(lit(-1), lit(1))))
         .withColumn("dy", explode(sequence(lit(-1), lit(1))))

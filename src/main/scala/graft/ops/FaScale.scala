@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.core.SparkD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale prototype for the round-4 verdict's one remaining 100×-scale
@@ -18,10 +17,9 @@ import org.apache.spark.sql.functions._
   * bound is inherent to any synchronous schedule — but the per-round
   * and total work collapse.
   *
-  * `main` measures both variants on a synthetic md5 DEM at G=48 and
-  * G=512 (same zExpr noise field, no corpus dependency), asserts their
-  * outputs identical, and prints rounds + wall seconds per variant —
-  * the PLANS.md §scale table is generated from this run.
+  * It is a worklist loop with its own wave cap, not a state fixpoint, so
+  * it runs outside `Dem.converge`: each round consumes the frontier it
+  * produced and stops when the frontier is empty.
   *
   * `faFrontier` is also production-gated: Hydro registers
   * `d8_flow_accum_frontier` against the same recursive path-count
@@ -59,60 +57,5 @@ object FaScale {
     }
     require(pending.isEmpty, "faFrontier: unresolved cells (cycle?)")
     (parts.reduce(_ unionByName _), waves)
-  }
-
-  /** plain Jacobi (the production Dem.faOn shape, uncapped for the probe). */
-  private def faJacobi(grid: DataFrame, edges: DataFrame): (DataFrame, Int) = {
-    var cur = Dem.fresh(grid.selectExpr("ix", "iy", "cast(1 as bigint) AS fa"))
-    var rounds = 0
-    var done = false
-    while (!done) {
-      rounds += 4
-      require(rounds <= 4096, "faJacobi cap exceeded")
-      var next = cur
-      for (_ <- 0 until 4) {
-        val inflow = edges.join(next, Seq("ix", "iy"))
-          .groupBy(col("tx").as("ix"), col("ty").as("iy"))
-          .agg(expr("cast(sum(fa) as bigint)").as("inflow"))
-        next = Dem.fresh(grid.join(inflow, Seq("ix", "iy"), "left")
-          .selectExpr("ix", "iy", "1 + coalesce(inflow, 0) AS fa"))
-      }
-      done = next.count() == cur.count() && next.exceptAll(cur).isEmpty
-      cur = next
-    }
-    (cur, rounds)
-  }
-
-  private def syntheticDem(s: SparkSession, g: Int): DataFrame = {
-    s.range(g.toLong * g)
-      .selectExpr(s"id div $g AS ix", s"id % $g AS iy")
-      .selectExpr("ix", "iy", s"${Dem.zExpr(SparkD, "ix", "iy", "0")} AS z")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("fa-scale-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    for (g <- Seq(48, 512)) {
-      val dem = syntheticDem(spark, g).localCheckpoint()
-      val d = Dem.d8On(dem).localCheckpoint()
-      val grid = d.select("ix", "iy")
-      val edges = d.filter(col("dir") >= 0).select("ix", "iy", "tx", "ty").localCheckpoint()
-      val t0 = System.nanoTime()
-      val (fw, waves) = faFrontier(grid, edges)
-      val fwC = fw.localCheckpoint(); val nW = fwC.count()
-      val tW = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val (fj, rounds) = faJacobi(grid, edges)
-      val fjC = fj.localCheckpoint(); val nJ = fjC.count()
-      val tJ = (System.nanoTime() - t1) / 1e9
-      require(nW == nJ && fwC.exceptAll(fjC).isEmpty && fjC.exceptAll(fwC).isEmpty,
-        s"variants disagree at G=$g")
-      println(f"""{"g": $g, "cells": ${g * g}, "frontier_waves": $waves, "frontier_sec": $tW%.1f, "jacobi_rounds": $rounds, "jacobi_sec": $tJ%.1f}""")
-    }
-    spark.stop()
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   * Accumulation: the number of cells draining through each cell (every
   * cell contributes 1, routed along pointers). The reference runs a
   * sequential zero-inflow stack peel; the Spark-native equivalent is the
-  * Jacobi fixpoint accum(c) = 1 + Σ_{u→c} accum(u), iterated with
-  * localCheckpoint until no cell changes — the flow graph is a DAG (slope
+  * Jacobi fixpoint accum(c) = 1 + Σ_{u→c} accum(u) — the shared
+  * `Dem.faOn` step run by `Dem.converge`, which owns the round cap, the
+  * change check and lineage truncation. The flow graph is a DAG (slope
   * strictly positive along every edge), so the fixpoint converges in
   * longest-flow-path rounds, each round ONE equi-join + hash aggregate
-  * (the Clump/Distance iterative-join pattern; no driver-side grid state).
+  * (the grid state stays in DataFrames).
   * The DuckDB twin derives the same value independently as path counting:
   * a recursive CTE enumerates (start, current) flow-path pairs (each start
   * has a unique path — functional graph), and accum(c) = #starts whose
@@ -110,37 +111,18 @@ object Hydro {
     }),
 
     "d8_flow_accum" -> ((s, dir) => {
-      val edges = d8dirsKeep(s, dir).filter(col("dir") >= 0)
-        .select("ix", "iy", "tx", "ty").localCheckpoint()
-      val grid = d8dirsKeep(s, dir).select("ix", "iy").localCheckpoint()
-      var accum = grid.selectExpr("ix", "iy", "cast(1 as bigint) AS fa")
-        .localCheckpoint()
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 10000) {
-        val inflow = edges.join(accum, Seq("ix", "iy"))
-          .groupBy(col("tx").as("ix"), col("ty").as("iy"))
-          .agg(expr("cast(sum(fa) as bigint)").as("inflow"))
-        val next = grid.join(inflow, Seq("ix", "iy"), "left")
-          .selectExpr("ix", "iy", "1 + coalesce(inflow, 0) AS fa")
-          .localCheckpoint()
-        changed = next.withColumnRenamed("fa", "fa2")
-          .join(accum, Seq("ix", "iy"))
-          .filter(col("fa2") =!= col("fa")).count()
-        accum = next
-        rounds += 1
-      }
-      accum.orderBy("ix", "iy")
+      val dd = d8dirsKeep(s, dir).localCheckpoint()
+      val edges = dd.filter(col("dir") >= 0).select("ix", "iy", "tx", "ty")
+      Dem.faOn(dd.select("ix", "iy"), edges, "d8_flow_accum").orderBy("ix", "iy")
     }),
 
     // Same tool, the SCALE-PATH schedule: wavefront (frontier-only)
     // accumulation — cells resolve in topological waves, every edge is
     // aggregated exactly once (total edge work O(E) vs the Jacobi's
-    // O(E · depth)); measured 1.9× faster at G=512 (PLANS.md §scale,
-    // graft.ops.FaScale). Gated against the IDENTICAL recursive
-    // path-count oracle as d8_flow_accum, so the variant a 100×-grid
-    // deployment would pick is itself value-checked, not just asserted
-    // equal in the FaScale probe.
+    // O(E · depth)); measured 1.9× faster at G=512 (PLANS.md §scale).
+    // Gated against the IDENTICAL recursive path-count oracle as
+    // d8_flow_accum, so the variant a 100×-grid deployment would pick is
+    // itself value-checked.
     "d8_flow_accum_frontier" -> ((s, dir) => {
       val dd = d8dirsKeep(s, dir)
       val edges = dd.filter(col("dir") >= 0)

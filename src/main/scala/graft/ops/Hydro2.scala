@@ -35,10 +35,13 @@ import org.apache.spark.sql.functions._
   *   lives in Streams2.scala over the dense DEM frame where the network
   *   is genuinely dendritic.)
   *
-  * Every iteration is one equi-join + hash aggregate with localCheckpoint
-  * lineage truncation (the Clump/Distance pattern); rounds = longest flow
-  * path. DuckDB twins re-derive the values independently by recursive
-  * path enumeration over the same (bit-identical) pointer field.
+  * Every fixpoint runs through `Dem.converge` (or `Dem.roots` for the
+  * pointer jumping), which owns the round cap, the change check and the
+  * localCheckpoint lineage truncation, and fails instead of returning a
+  * state that has not converged. Each length round is one equi-join
+  * (+ hash aggregate upslope); rounds = longest flow path + 1. DuckDB
+  * twins re-derive the values independently by recursive path
+  * enumeration over the same (bit-identical) pointer field.
   */
 object Hydro2 {
 
@@ -64,6 +67,24 @@ object Hydro2 {
 
   private def lenOf(nc: String, nd: String) =
     s"cast($nc as double) + cast($nd as double) * $sqrt2"
+
+  /** Round cap of the two flowpath-length fixpoints. Each settles one
+    * round after its longest D8 path is walked: measured 2 rounds at
+    * sf0.001 and sf0.01, 3 at sf0.1. The cap is the one `Dem.faOn` uses
+    * for d8_flow_accum over the same edges, whose round count is bounded
+    * by the same longest path. */
+  private val lenRounds = 200
+
+  /** The length fixpoints' zero-initialised (ix, iy, nc, nd) state over
+    * the res-6 D8 grid, and its edges with step-kind counts (ec
+    * cardinal, ed diagonal). */
+  private def lenFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val dd = Hydro.d8dirsKeep(s, dir).localCheckpoint()
+    val edges = dd.filter(col("dir") >= 0)
+      .selectExpr("ix", "iy", "tx", "ty", s"1 - ($isDiagE) AS ec", s"$isDiagE AS ed")
+      .localCheckpoint()
+    (dd.selectExpr("ix", "iy", "cast(0 as bigint) AS nc", "cast(0 as bigint) AS nd"), edges)
+  }
 
   private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -107,92 +128,43 @@ object Hydro2 {
 
     // L(c) = steps to the terminus, carried as (n_card, n_diag) ints.
     "downslope_flowpath_length" -> ((s, dir) => {
-      val dd = Hydro.d8dirsKeep(s, dir).localCheckpoint()
-      val edges = dd.filter(col("dir") >= 0)
-        .selectExpr("ix", "iy", "tx", "ty", s"1 - ($isDiagE) AS ec", s"$isDiagE AS ed")
-        .localCheckpoint()
-      val grid = dd.select("ix", "iy")
-      var len = grid.selectExpr("ix", "iy", "cast(0 as bigint) AS nc", "cast(0 as bigint) AS nd")
-        .localCheckpoint()
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 10000) {
+      val (zero, edges) = lenFrames(s, dir)
+      Dem.converge(zero, lenRounds, 1, "downslope_flowpath_length") { len =>
         val stepped = edges.join(
             len.selectExpr("ix AS tx", "iy AS ty", "nc AS dnc", "nd AS dnd"),
             Seq("tx", "ty"))
           .selectExpr("ix", "iy", "ec + dnc AS nc2", "ed + dnd AS nd2")
-        // r06: len already covers every grid cell, so joining the step
-        // onto len (not grid) lets the change flag ride INSIDE the
-        // checkpointed frame — one filter-count job per round instead of
-        // a join + count (guide §1.2: fewer driver jobs per round).
-        val next = len.join(stepped, Seq("ix", "iy"), "left")
-          .selectExpr("ix", "iy", "coalesce(nc2, 0) AS nc0", "coalesce(nd2, 0) AS nd0",
-            "(coalesce(nc2, 0) <> nc OR coalesce(nd2, 0) <> nd) AS changed")
-          .localCheckpoint()
-        changed = next.filter(col("changed")).count()
-        len = next.selectExpr("ix", "iy", "nc0 AS nc", "nd0 AS nd")
-        rounds += 1
-      }
-      len.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS flowpath_len")
+        len.join(stepped, Seq("ix", "iy"), "left")
+          .selectExpr("ix", "iy", "coalesce(nc2, 0) AS nc", "coalesce(nd2, 0) AS nd")
+      }.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS flowpath_len")
         .orderBy("ix", "iy")
     }),
 
     // Basins (hydro_analysis/basins.rs semantics): every cell labelled by
     // the terminal (no-flow) cell its D8 path drains to — the drainage
-    // basin partition. Pointer-JUMPING fixpoint (P ← P∘P), so rounds are
-    // O(log longest-path), not O(path length); each round is one
-    // self-equi-join + localCheckpoint (the Clump discipline).
+    // basin partition, by pointer jumping (Dem.roots: O(log longest-path)
+    // rounds, not O(path length)).
     "basins" -> ((s, dir) => {
-      val dd = Hydro.d8dirsKeep(s, dir).localCheckpoint()
-      var p = dd.selectExpr("ix", "iy",
+      val p0 = Hydro.d8dirsKeep(s, dir).selectExpr("ix", "iy",
         "CASE WHEN dir >= 0 THEN tx ELSE ix END AS rx",
-        "CASE WHEN dir >= 0 THEN ty ELSE iy END AS ry").localCheckpoint()
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 64) {
-        // r06: change flag computed inline (old rx/ry are on the join's
-        // left side) — one filter-count job per round instead of join+count
-        val next = p.join(
-            p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"),
-            Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2", "ry2",
-            "(rx2 <> rx OR ry2 <> ry) AS changed")
-          .localCheckpoint()
-        changed = next.filter(col("changed")).count()
-        p = next.selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-        rounds += 1
-      }
-      p.selectExpr("ix", "iy", "rx * 1000000 + ry AS basin")
+        "CASE WHEN dir >= 0 THEN ty ELSE iy END AS ry")
+      Dem.roots(p0, "basins")
+        .selectExpr("ix", "iy", "rx * 1000000 + ry AS basin")
         .orderBy("ix", "iy")
     }),
 
     // longest upslope flowpath ending at each cell
     "max_upslope_flowpath" -> ((s, dir) => {
-      val dd = Hydro.d8dirsKeep(s, dir).localCheckpoint()
-      val edges = dd.filter(col("dir") >= 0)
-        .selectExpr("ix", "iy", "tx", "ty", s"1 - ($isDiagE) AS ec", s"$isDiagE AS ed")
-        .localCheckpoint()
-      val grid = dd.select("ix", "iy")
-      var up = grid.selectExpr("ix", "iy", "cast(0 as bigint) AS nc", "cast(0 as bigint) AS nd")
-        .localCheckpoint()
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 10000) {
+      val (zero, edges) = lenFrames(s, dir)
+      Dem.converge(zero, lenRounds, 1, "max_upslope_flowpath") { up =>
         val cand = edges.join(up, Seq("ix", "iy"))
           .selectExpr("tx AS ix", "ty AS iy", "nc + ec AS cnc", "nd + ed AS cnd")
           .groupBy("ix", "iy")
           .agg(expr(s"max_by(named_struct('nc', cnc, 'nd', cnd), ${lenOf("cnc", "cnd")})").as("b"))
           .selectExpr("ix", "iy", "b.nc AS unc", "b.nd AS und")
-        // r06: inline change flag (up covers the grid), one job per round
-        val next = up.join(cand, Seq("ix", "iy"), "left")
-          .selectExpr("ix", "iy", "coalesce(unc, 0) AS nc0", "coalesce(und, 0) AS nd0",
-            "(coalesce(unc, 0) <> nc OR coalesce(und, 0) <> nd) AS changed")
-          .localCheckpoint()
-        changed = next.filter(col("changed")).count()
-        up = next.selectExpr("ix", "iy", "nc0 AS nc", "nd0 AS nd")
-        rounds += 1
-      }
-      up.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS upslope_len")
+        up.join(cand, Seq("ix", "iy"), "left")
+          .selectExpr("ix", "iy", "coalesce(unc, 0) AS nc", "coalesce(und, 0) AS nd")
+      }.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS upslope_len")
         .orderBy("ix", "iy")
     })
   )

@@ -73,14 +73,11 @@ object Hydro4 {
       val p0 = Dem.dd(s, dir).selectExpr("ix", "iy",
         "CASE WHEN dir >= 0 THEN tx ELSE ix END AS rx",
         "CASE WHEN dir >= 0 THEN ty ELSE iy END AS ry")
-      Dem.converge(p0, 64, 1, "dem_roots") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      Dem.roots(p0, "dem_roots")
     }
 
   /** downslope path length to the terminal as (nc, nd) counts. */
-  private def downLen(s: SparkSession, dir: String): DataFrame =
+  private[ops] def downLen(s: SparkSession, dir: String): DataFrame =
     Dem.memo(s, dir, "down_len") {
       val e = Dem.edges(s, dir)
       val grid = Dem.dd(s, dir)

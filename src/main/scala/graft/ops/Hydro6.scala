@@ -148,10 +148,8 @@ object Hydro6 {
       .selectExpr("ix", "iy",
         "CASE WHEN mk IS NOT NULL OR dir < 0 THEN ix ELSE tx END AS rx",
         "CASE WHEN mk IS NOT NULL OR dir < 0 THEN iy ELSE ty END AS ry")
-    Dem.converge(p0, 64, 1, "isobasins_label") { p =>
-      p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-        .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-    }.selectExpr("ix", "iy", s"rx * $G + ry AS basin").orderBy("ix", "iy")
+    Dem.roots(p0, "isobasins_label")
+      .selectExpr("ix", "iy", s"rx * $G + ry AS basin").orderBy("ix", "iy")
   }
 
   // ---- queries ----------------------------------------------------------
@@ -220,10 +218,7 @@ object Hydro6 {
       val p0 = d.selectExpr("ix", "iy",
         "CASE WHEN dir < 0 THEN ix ELSE tx END AS rx",
         "CASE WHEN dir < 0 THEN iy ELSE ty END AS ry")
-      val rooted = Dem.converge(p0, 64, 1, "ws_minmax_roots") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      val rooted = Dem.roots(p0, "ws_minmax_roots")
       val withZ = rooted.join(Dem.dem(s, dir), Seq("ix", "iy"))
       val mm = withZ.groupBy("rx", "ry")
         .agg(min("z").as("mn"), max("z").as("mx"))

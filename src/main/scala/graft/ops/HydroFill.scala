@@ -97,10 +97,7 @@ object HydroFill {
         .selectExpr("ix", "iy",
           "CASE WHEN pid IS NOT NULL OR dir < 0 THEN ix ELSE tx END AS rx",
           "CASE WHEN pid IS NOT NULL OR dir < 0 THEN iy ELSE ty END AS ry")
-      val rooted = Dem.converge(p0, 64, 1, "watershed") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      val rooted = Dem.roots(p0, "watershed")
       rooted.join(pour.selectExpr("ix AS rx", "iy AS ry", "pid"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "cast(pid as bigint) AS ws")
         .orderBy("ix", "iy")
@@ -123,10 +120,7 @@ object HydroFill {
         .selectExpr("ix", "iy",
           "CASE WHEN is_st = 1 OR dir < 0 THEN ix ELSE tx END AS rx",
           "CASE WHEN is_st = 1 OR dir < 0 THEN iy ELSE ty END AS ry")
-      val rooted = Dem.converge(p0, 64, 1, "hillslopes") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      val rooted = Dem.roots(p0, "hillslopes")
       rooted.join(hl.selectExpr("ix AS rx", "iy AS ry", "hs"), Seq("rx", "ry"))
         .select("ix", "iy", "hs").orderBy("ix", "iy")
     }),
@@ -142,10 +136,7 @@ object HydroFill {
         .selectExpr("ix", "iy",
           "CASE WHEN is_st = 1 OR dir < 0 THEN ix ELSE tx END AS rx",
           "CASE WHEN is_st = 1 OR dir < 0 THEN iy ELSE ty END AS ry")
-      val rooted = Dem.converge(p0, 64, 1, "strahler_basins") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      val rooted = Dem.roots(p0, "strahler_basins")
       rooted.join(Dem.strahler(s, dir).selectExpr("ix AS rx", "iy AS ry", "ord"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "ord AS basin_order")
         .orderBy("ix", "iy")
@@ -158,10 +149,7 @@ object HydroFill {
         .selectExpr("ix", "iy",
           "CASE WHEN is_st = 1 OR dir < 0 THEN ix ELSE tx END AS rx",
           "CASE WHEN is_st = 1 OR dir < 0 THEN iy ELSE ty END AS ry")
-      val rooted = Dem.converge(p0, 64, 1, "subbasins") { p =>
-        p.join(p.selectExpr("ix AS rx", "iy AS ry", "rx AS rx2", "ry AS ry2"), Seq("rx", "ry"))
-          .selectExpr("ix", "iy", "rx2 AS rx", "ry2 AS ry")
-      }
+      val rooted = Dem.roots(p0, "subbasins")
       rooted.join(Dem.links(s, dir).selectExpr("ix AS rx", "iy AS ry", "link_id"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "link_id AS sub")
         .orderBy("ix", "iy")

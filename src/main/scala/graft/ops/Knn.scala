@@ -86,7 +86,7 @@ object Knn {
       val r = 0.01; val w = r // 3×3 block at width r — see withBlock
       // Static semi-join reduction of the big side (guide §3.2): every
       // query qx/qy lies in the NYC box, so a joinable point's bucket must
-      // lie within the box's bucket range ± the 2-bucket block offset —
+      // lie within the box's bucket range ± the blockSpan-bucket block offset —
       // floor is monotone and the bound is computed with the same IEEE
       // double ops as the bucket key, so no matching row can be dropped.
       // At corpus scale this prunes ~everything outside the query region

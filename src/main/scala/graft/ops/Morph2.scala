@@ -75,26 +75,12 @@ object Morph2 {
     flags(m, m).filter(expr(s"NOT ($cond)")).select("ix", "iy")
   }
 
-  /** synchronous per-pattern erosion to convergence (asserted). */
-  private def iterate(s: SparkSession, mask: DataFrame, spur: Boolean,
-      maxRounds: Int, what: String): DataFrame = {
-    var m = Dem.fresh(mask)
-    var before = m.count()
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      var cur = m
-      for (p <- patterns(spur)) cur = applyPattern(cur, p)
-      cur = Dem.fresh(cur)
-      val after = cur.count()
-      done = after == before // erasure-only ⇒ equal count = fixpoint
-      before = after
-      m = cur
-      rounds += 1
-    }
-    require(done, s"$what did not converge within $maxRounds rounds")
-    m
-  }
+  /** synchronous per-pattern erosion to convergence (asserted): one round
+    * applies every pattern once, and the first round that erases nothing
+    * ends the loop. */
+  private def iterate(mask: DataFrame, spur: Boolean, maxRounds: Int,
+      what: String): DataFrame =
+    Dem.converge(mask, maxRounds, 1, what)(m => patterns(spur).foldLeft(m)(applyPattern))
 
   /** res-4 occupancy mask (the morph fixture). */
   private def mask4(s: SparkSession, dir: String): DataFrame =
@@ -120,11 +106,11 @@ object Morph2 {
     // after erasure stops, so each cap passes iff convergence happened
     // within the twin's unrolled rounds (ADVICE r4 parity rule).
     "line_thinning" -> ((s, dir) =>
-      iterate(s, mask4(s, dir), spur = false, 11, "line_thinning")
+      iterate(mask4(s, dir), spur = false, 11, "line_thinning")
         .orderBy("ix", "iy")),
 
     "remove_spurs" -> ((s, dir) =>
-      iterate(s, mask4(s, dir), spur = true, 9, "remove_spurs")
+      iterate(mask4(s, dir), spur = true, 9, "remove_spurs")
         .orderBy("ix", "iy")),
 
     // thicken_line.rs:192-211 synchronous single pass: a background cell
@@ -148,7 +134,7 @@ object Morph2 {
     }),
 
     "find_ridges" -> ((s, dir) =>
-      iterate(s, ridgeMask(s, dir), spur = false, 7, "find_ridges")
+      iterate(ridgeMask(s, dir), spur = false, 7, "find_ridges")
         .orderBy("ix", "iy"))
   )
 

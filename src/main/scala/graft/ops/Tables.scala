@@ -17,7 +17,7 @@ object Tables {
   // `spark.read.parquet` call re-lists the path and re-reads the footer on
   // the DRIVER (~50-60 ms each), and `register` did that for all 10 tables
   // on EVERY Tables.pages call — ~0.6 s of pure driver time per query build
-  // (measured via BenchExtra: pages-based headline queries spent
+  // (timing build apart from execute, pages-based headline queries spent
   // 0.65-1.4 s in build vs 0.13 s for the memoized-free dedup/ann paths).
   // The cache stores the lazy DataFrame (a logical plan — NO data, NO
   // results), keyed per live session so a new session never reuses plans
