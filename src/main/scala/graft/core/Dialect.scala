@@ -150,4 +150,13 @@ object Geo {
        |  ${lat(dl)} AS lat,
        |  ${lon(dl)} AS lon
        |FROM documents""".stripMargin.replace("\n", " ")
+
+  /** `WITH pages AS (…)`: the head of every non-recursive oracle query. */
+  def pagesWith(dl: Dialect): String = s"WITH pages AS (${pagesCte(dl)})"
+
+  /** `g`: the page-count density grid at resolution `res`, the twin of
+    * ops.Raster.density. */
+  def densityCte(dl: Dialect, res: Int): String =
+    s"g AS (SELECT ${ix(dl, "lon", res)} AS ix, ${iy(dl, "lat", res)} AS iy, " +
+      "count(*) AS v FROM pages GROUP BY 1, 2)"
 }

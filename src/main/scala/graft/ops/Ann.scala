@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * rounded to 6 decimals before ranking, with vec_id tie-breaks, so the
   * oracle comparison is exact.
   */
-object Ann {
+object Ann extends Gates {
 
   private val dim = 64
   private val k = 10

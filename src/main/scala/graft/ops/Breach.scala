@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD}
+import graft.core.{Dialect, DuckD, Gates}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * driver state. At 100× grid span the round count is fixed at the
   * channel-length cap, not the grid diameter.
   */
-object Breach {
+object Breach extends Gates {
 
   import Dem.G
 

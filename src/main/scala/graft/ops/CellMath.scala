@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * xor/integer-division). Catalyst folds the whole row into one
   * whole-stage-codegen projection over the grid — one scan, no joins.
   */
-object CellMath {
+object CellMath extends Gates {
 
   /** second operand: md5 stripe 1..7 (never 0 — safe divisor). */
   private def wE(d: Dialect): String =
@@ -119,7 +119,7 @@ object CellMath {
 
   private def duck(arms: Seq[(String, String)]): String = {
     val d = DuckD
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
+    s"${Geo.pagesWith(d)}, " +
       s"g0 AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
       "count(*) AS v FROM pages GROUP BY 1, 2), " +
       s"g AS (SELECT ix, iy, v, ${wE(d)} AS w FROM g0) " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   * All pure per-cell expressions over one 3-way layer join — exact twin
   * parity, no rounding.
   */
-object Color {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
+object Color extends Gates {
 
   private def wide(d: Dialect): String =
     s"l AS (SELECT lang, ${Geo.ix(d, "lon", 5)} AS ix, ${Geo.iy(d, "lat", 5)} AS iy, " +
@@ -65,7 +63,7 @@ object Color {
   }
 
   private def rgbToIhsSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${wide(d)}, $ext, $ihsChain " +
+    s"${Geo.pagesWith(d)}, ${wide(d)}, $ext, $ihsChain " +
       "SELECT ix, iy, i, h, s FROM ss ORDER BY ix, iy"
 
   private def ihsToRgbSql(d: Dialect): String = {
@@ -79,14 +77,14 @@ object Color {
       "CASE WHEN h <= 1.0e0 THEN i * (1.0e0 - s) / 3.0e0 " +
       "WHEN h <= 2.0e0 THEN i * (1.0e0 - s + 3.0e0 * s * (h - 1.0e0)) / 3.0e0 " +
       "ELSE i * (1.0e0 + 2.0e0 * s - 3.0e0 * s * (h - 2.0e0)) / 3.0e0 END AS b FROM ss)"
-    s"${pagesWith(d)}, ${wide(d)}, $ext, $ihsChain, $back " +
+    s"${Geo.pagesWith(d)}, ${wide(d)}, $ext, $ihsChain, $back " +
       "SELECT ix, iy, r, g, b FROM back ORDER BY ix, iy"
   }
 
   private def clamp255(cCol: String) = s"least($cCol, 255)"
 
   private def compositeSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${wide(d)} " +
+    s"${Geo.pagesWith(d)}, ${wide(d)} " +
       "SELECT ix, iy, cast(4278190080 + " + // 255<<24 as a bigint-safe literal
       s"${clamp255("b0")} * 65536 + ${clamp255("g0")} * 256 + ${clamp255("r0")} as bigint) AS composite " +
       "FROM c ORDER BY ix, iy"
@@ -94,7 +92,7 @@ object Color {
   private def splitSql(d: Dialect): String = {
     val comp = s"cast(4278190080 + ${clamp255("b0")} * 65536 + " +
       s"${clamp255("g0")} * 256 + ${clamp255("r0")} as bigint)"
-    s"${pagesWith(d)}, ${wide(d)}, cc AS (SELECT ix, iy, $comp AS composite FROM c) " +
+    s"${Geo.pagesWith(d)}, ${wide(d)}, cc AS (SELECT ix, iy, $comp AS composite FROM c) " +
       "SELECT ix, iy, composite % 256 AS r, " +
       s"${d.idiv("composite", "256")} % 256 AS g, " +
       s"${d.idiv("composite", "65536")} % 256 AS b FROM cc ORDER BY ix, iy"

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, SparkD}
+import graft.core.{DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *   - CostPathway: cells on the backlink chains from two fixed
   *     destination cells (46,46) and (2,40) back to their sources.
   */
-object Cost {
+object Cost extends Gates {
 
   import Dem.{G, sqrt2}
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, SparkD}
+import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * All hashes are md5-hex-derived integers (core/Dialect.md5Bits) so the
   * DuckDB oracle is bit-exact.
   */
-object Dedup {
+object Dedup extends Gates {
 
   private val nHashes = 16
   private val bands = 8 // of 2 rows each

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Lit}
+import graft.core.{Gates, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Facets with a missing neighbour are skipped (border cells), matching
   * the reference's nodata guard. Degrees rounded to 6 (libm ulp rule).
   */
-object Dinf {
+object Dinf extends Gates {
 
   private val sqrt2 = Lit.d(math.sqrt(2.0))
   private val atan1 = "0.7853981633974483e0" // atan(1) = π/4 as a literal

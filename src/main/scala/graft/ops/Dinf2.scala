@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.{DuckD, Gates}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *     |ΔL| of downslope flow-path length over the 8-neighbourhood —
   *     drainage-divide mapping.
   */
-object Dinf2 {
+object Dinf2 extends Gates {
 
   import Dem.lenOf
 

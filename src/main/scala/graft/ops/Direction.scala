@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * (the reference indexes row `y` — the NEGATED row — which always reads
   * off-grid, horizon_angle.rs:370-371).
   */
-object Direction {
+object Direction extends Gates {
 
   import Dem.G
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo}
+import graft.core.{Dialect, DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * Ties broken by min (d², source id) via one packed integer key —
   * deterministic in both engines.
   */
-object Distance {
+object Distance extends Gates {
 
   /** packed candidate key over (ix, iy) cell and (sx, sy) source. */
   private val keyExpr =
@@ -166,9 +166,7 @@ object Distance {
   // ---- DuckDB twins: brute-force min over all (cell, source) pairs ------
 
   private def base(d: Dialect, cond: String = srcCond): String =
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
-      s"g AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
-      "count(*) AS v FROM pages GROUP BY 1, 2), " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       s"srcs AS (SELECT ix AS sx, iy AS sy, v AS sv FROM g WHERE $cond), " +
       // LEFT JOIN ON true so a source-free grid yields every cell with a
       // NULL key (matching the Spark nullOut path) instead of zero rows.

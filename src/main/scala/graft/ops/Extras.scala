@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   * recovered with conditional MAX so every multi-layer combine is a
   * FIXED-ORDER expression (no order-dependent double summation).
   */
-object Extras {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
+object Extras extends Gates {
 
   /** the 3 language layers at res 5 (long form). */
   private def layersOnly(d: Dialect): String =
@@ -35,10 +33,6 @@ object Extras {
       "max(CASE WHEN lang = 'en' THEN v END) AS v_en, " +
       "max(CASE WHEN lang = 'zh' THEN v END) AS v_zh, " +
       "max(CASE WHEN lang = 'es' THEN v END) AS v_es FROM layers GROUP BY 1, 2)"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
 
   // WeightedSum with literal weights; absent layers contribute 0.
   private val weightedE =
@@ -61,35 +55,35 @@ object Extras {
 
   private val builders: Map[String, Dialect => String] = Map(
     "percent_less_than" -> (d =>
-      s"${pagesWith(d)}, ${layersOnly(d)} " +
+      s"${Geo.pagesWith(d)}, ${layersOnly(d)} " +
         "SELECT ix, iy, cast(sum(CASE WHEN v < 3 THEN 1 ELSE 0 END) as bigint) AS n_under, " +
         "count(*) AS n_layers, " +
         "100.0e0 * sum(CASE WHEN v < 3 THEN 1 ELSE 0 END) / count(*) AS pct " +
         "FROM layers GROUP BY 1, 2 ORDER BY ix, iy"),
     "weighted_sum" -> (d =>
-      s"${pagesWith(d)}, ${layersSql(d)} " +
+      s"${Geo.pagesWith(d)}, ${layersSql(d)} " +
         s"SELECT ix, iy, $weightedE AS v_ws FROM wide ORDER BY ix, iy"),
     "pick_from_list" -> (d =>
-      s"${pagesWith(d)}, ${layersSql(d)} " +
+      s"${Geo.pagesWith(d)}, ${layersSql(d)} " +
         s"SELECT ix, iy, $pickE AS v_pick FROM wide WHERE ($pickE) IS NOT NULL ORDER BY ix, iy"),
     "max_absolute_overlay" -> (d =>
-      s"${pagesWith(d)}, ${layersSql(d)} " +
+      s"${Geo.pagesWith(d)}, ${layersSql(d)} " +
         s"SELECT ix, iy, cast($maxAbsE as bigint) AS v_maxabs FROM wide ORDER BY ix, iy"),
     "ndvi" -> (d =>
-      s"${pagesWith(d)}, ${layersSql(d)} " +
+      s"${Geo.pagesWith(d)}, ${layersSql(d)} " +
         "SELECT ix, iy, cast(v_en - v_zh as double) / cast(v_en + v_zh as double) AS ndvi " +
         "FROM wide WHERE v_en IS NOT NULL AND v_zh IS NOT NULL ORDER BY ix, iy"),
     "gamma_correction" -> (d =>
-      s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+      s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
         "ext AS (SELECT min(v) AS mn, max(v) AS mx FROM g) " +
         "SELECT ix, iy, sqrt(cast(v - mn as double) / cast(mx - mn as double)) AS v_gamma " +
         "FROM g, ext ORDER BY ix, iy"),
     "flip_image" -> (d =>
-      s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+      s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
         "ext AS (SELECT max(ix) AS mxx FROM g) " +
         "SELECT mxx - ix AS ix_f, iy, v FROM g, ext ORDER BY ix_f, iy"),
     "find_highest_point" -> (d =>
-      s"${pagesWith(d)}, ${densityG(d, 6)} " +
+      s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)} " +
         "SELECT ix, iy, v FROM g ORDER BY v DESC, ix, iy LIMIT 1")
   )
 
@@ -134,7 +128,7 @@ object Extras {
           "2.5e0 + 0.5e0 * cast(range % 32 as double) - 0.25e0 * cast(range // 32 as double) AS z " +
           "FROM range(1024) ORDER BY ix, iy"),
       "integral_image" ->
-        (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)}, " +
+        (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)}, " +
           "dense AS (SELECT range % 32 AS ix, range // 32 AS iy FROM range(1024)), " +
           "d0 AS (SELECT dense.ix, dense.iy, coalesce(v, 0) AS v0 FROM dense " +
           "LEFT JOIN g ON g.ix = dense.ix AND g.iy = dense.iy), " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,13 +17,7 @@ import org.apache.spark.sql.functions._
   * mask; histogram matching reuses the driver-LUT CDF shape (cdfLut);
   * everything else is cell-wise or one aggregate.
   */
-object Extras2 {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object Extras2 extends Gates {
 
   // binary mask for morphology
   // res-4 occupancy mask: at res 5 / v>=2 erosion empties the sparse world
@@ -50,7 +44,7 @@ object Extras2 {
       .filter(col("c") === 9).select("ix", "iy")
 
   private def duckMorph(d: Dialect): String =
-    s"${densityG(d, 4)}, m AS (SELECT ix, iy FROM g WHERE $maskCond), " +
+    s"${Geo.densityCte(d, 4)}, m AS (SELECT ix, iy FROM g WHERE $maskCond), " +
       "offs AS (SELECT a.d AS dx, b.d AS dy FROM (SELECT unnest([-1, 0, 1]) AS d) a, (SELECT unnest([-1, 0, 1]) AS d) b), " +
       "dil AS (SELECT DISTINCT m.ix + dx AS ix, m.iy + dy AS iy FROM m, offs), " +
       "er AS (SELECT c.ix, c.iy FROM m c JOIN m n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 " +
@@ -71,7 +65,7 @@ object Extras2 {
   // date2 = zh. Sector encodes the sign pattern (change_vector_analysis.rs
   // quadrant coding); magnitude rounded to absorb sqrt-input assembly.
   private def cvaSql(d: Dialect): String =
-    s"${pagesWith(d)}, " +
+    s"${Geo.pagesWith(d)}, " +
       s"l AS (SELECT lang, ${Geo.ix(d, "lon", 5)} AS ix, ${Geo.iy(d, "lat", 5)} AS iy, " +
       "count(*) AS b1, cast(sum(n_chars) as bigint) AS b2 FROM pages " +
       "WHERE lang IN ('en', 'zh') GROUP BY 1, 2, 3), " +
@@ -91,7 +85,7 @@ object Extras2 {
   private val classE = "CASE WHEN v < 2 THEN 1 WHEN v < 5 THEN 2 ELSE 3 END"
 
   private def edgeSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       s"cg AS (SELECT ix, iy, $classE AS cls FROM g), " +
       "h AS (SELECT c.ix, c.iy, c.cls, n.cls AS ncls FROM cg c JOIN cg n " +
       "ON abs(n.ix - c.ix) + abs(n.iy - c.iy) = 1) " +
@@ -104,12 +98,12 @@ object Extras2 {
       "ORDER BY cg.ix, cg.iy"
 
   private def elevSliceSql(d: Dialect): String =
-    s"${pagesWith(d)} SELECT CASE WHEN lat < -20.0e0 THEN 1 WHEN lat < 10.0e0 THEN 2 " +
+    s"${Geo.pagesWith(d)} SELECT CASE WHEN lat < -20.0e0 THEN 1 WHEN lat < 10.0e0 THEN 2 " +
       "WHEN lat < 40.0e0 THEN 3 ELSE 4 END AS slice, count(*) AS n, " +
       "cast(min(doc_id) as bigint) AS min_doc FROM pages GROUP BY 1 ORDER BY slice"
 
   private def nodataSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${densityG(d, 5)} " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 5)} " +
       "SELECT ix, iy, CASE WHEN ((ix + iy) % 13) = 0 THEN 0 ELSE v END AS v0, " +
       "CASE WHEN ((ix + iy) % 13) = 0 THEN 1 ELSE 0 END AS is_nd " +
       "FROM g ORDER BY ix, iy"
@@ -128,7 +122,7 @@ object Extras2 {
       case SparkD => "LATERAL VIEW explode(sequence(iy0, iy1)) t AS riy"
       case DuckD  => ", unnest(range(iy0, iy1 + 1)) AS u(riy)"
     }
-    s"${pagesWith(d)}, nyc AS (SELECT doc_id, lon, lat FROM pages WHERE $nycBox), " +
+    s"${Geo.pagesWith(d)}, nyc AS (SELECT doc_id, lon, lat FROM pages WHERE $nycBox), " +
       "p2 AS (SELECT lon, lat, row_number() OVER (ORDER BY lat, doc_id) AS sid FROM nyc), " +
       "segs AS (SELECT a.lon AS x1, a.lat AS y1, b.lon AS x2, b.lat AS y2 " +
       "FROM p2 a JOIN p2 b ON b.sid = a.sid + 1 AND a.lat <> b.lat), " +
@@ -144,11 +138,11 @@ object Extras2 {
 
   private val builders: Map[String, Dialect => String] = Map(
     "morph_opening" -> (d =>
-      s"${pagesWith(d)}, ${duckMorph(d)}, " +
+      s"${Geo.pagesWith(d)}, ${duckMorph(d)}, " +
         "opened AS (SELECT DISTINCT er.ix + dx AS ix, er.iy + dy AS iy FROM er, offs) " +
         "SELECT ix, iy FROM opened ORDER BY ix, iy"),
     "morph_closing" -> (d =>
-      s"${pagesWith(d)}, ${duckMorph(d)}, " +
+      s"${Geo.pagesWith(d)}, ${duckMorph(d)}, " +
         "closed AS (SELECT c.ix, c.iy FROM dil c JOIN dil n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 " +
         "AND n.iy BETWEEN c.iy - 1 AND c.iy + 1 GROUP BY 1, 2 HAVING count(*) = 9) " +
         "SELECT ix, iy FROM closed ORDER BY ix, iy"),
@@ -272,7 +266,7 @@ object Extras2 {
       "histogram_matching" -> {
         // row-weighted CDFs (value histogram + cumulative / n) mirror
         // cdfLut exactly; the mapping is min target value with cdf ≥.
-        s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+        s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
           s"tg AS (SELECT ${Geo.ix(DuckD, "lon", 6)} AS ix, ${Geo.iy(DuckD, "lat", 6)} AS iy, " +
           "count(*) AS v FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
           "sh AS (SELECT v, count(*) AS c FROM g GROUP BY v), " +

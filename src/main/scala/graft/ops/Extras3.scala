@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD, Zones}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD, Zones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,18 +32,12 @@ import org.apache.spark.sql.functions._
   *     thinning). Spark side uses the bounded TopKByDist aggregator
   *     (O(K) map-side state — no per-cell sort at corpus scale).
   */
-object Extras3 {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object Extras3 extends Gates {
 
   // ---- percent_equal_to ----------------------------------------------------
 
   private def pctEqSql(d: Dialect): String =
-    s"${pagesWith(d)}, layers AS (SELECT lang, ${Geo.ix(d, "lon", 5)} AS ix, " +
+    s"${Geo.pagesWith(d)}, layers AS (SELECT lang, ${Geo.ix(d, "lon", 5)} AS ix, " +
       s"${Geo.iy(d, "lat", 5)} AS iy, count(*) AS v FROM pages " +
       "WHERE lang IN ('en', 'zh', 'es') GROUP BY 1, 2, 3) " +
       "SELECT ix, iy, cast(sum(CASE WHEN v = 2 THEN 1 ELSE 0 END) as bigint) AS n_eq, " +
@@ -96,10 +90,6 @@ object Extras3 {
       s"b$i" -> s"coalesce(max(CASE WHEN dx = $dx AND dy = $dy AND nv > 0 THEN 1 END), 0)"
     }
 
-  private val duckHalo1 =
-    "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
-      "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
-
   // ---- image stack profile -----------------------------------------------------
 
   private def stackProfileSql(d: Dialect): String = {
@@ -107,7 +97,7 @@ object Extras3 {
       s"SELECT $i AS layer, ${Geo.ix(d, "lon", 5)} AS ix, ${Geo.iy(d, "lat", 5)} AS iy, " +
         s"count(*) AS v FROM pages WHERE lang = '$l' GROUP BY 2, 3"
     }.mkString(" UNION ALL ")
-    s"${pagesWith(d)}, stk AS ($layerRows), " +
+    s"${Geo.pagesWith(d)}, stk AS ($layerRows), " +
       s"probes AS (SELECT doc_id, ${Geo.ix(d, "lon", 5)} AS ix, ${Geo.iy(d, "lat", 5)} AS iy " +
       "FROM pages WHERE doc_id % 50 = 0), " +
       "lyr AS (SELECT 1 AS layer UNION ALL SELECT 2 UNION ALL SELECT 3) " +
@@ -125,7 +115,7 @@ object Extras3 {
     val perZone = Zones.fids.map { f =>
       s"SELECT ix, iy, $f AS fid FROM cc WHERE ${Zones.insideZoneSql(f, cx, cy)}"
     }.mkString(" UNION ALL ")
-    s"${pagesWith(d)}, ${densityG(d, res)}, cc AS (SELECT ix, iy FROM g), " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, res)}, cc AS (SELECT ix, iy FROM g), " +
       s"cov AS ($perZone) " +
       "SELECT ix, iy, min(fid) AS fid FROM cov GROUP BY 1, 2 ORDER BY ix, iy"
   }
@@ -179,12 +169,12 @@ object Extras3 {
   def oracles: Map[String, String] = Map(
     "percent_equal_to" -> pctEqSql(DuckD),
     "tophat_white" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, $duckErode, $duckOpen " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckErode, $duckOpen " +
         "SELECT g.ix AS ix, g.iy AS iy, cast(g.v - op.v as bigint) AS v_th FROM g " +
         "JOIN op ON op.ix = g.ix AND op.iy = g.iy ORDER BY g.ix, g.iy"),
     "corner_detection" -> {
       val aggSql = cornerAggs.map { case (nm, e) => s"$e AS $nm" }.mkString(", ")
-      s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, $duckHalo1, " +
+      s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, ${Focal.duckHaloD}, " +
         "h2 AS (SELECT * FROM h WHERE NOT (dx = 0 AND dy = 0)), " +
         s"ag AS (SELECT ix, iy, max(v) AS z, $aggSql FROM h2 GROUP BY ix, iy) " +
         s"SELECT ix, iy, CASE WHEN z > 0 THEN $cornerE ELSE 0 END AS is_corner " +
@@ -194,7 +184,7 @@ object Extras3 {
     "polygons_to_raster" -> polyRasterSql(DuckD),
     "lidar_thin_high_density" -> {
       val d = DuckD
-      s"${pagesWith(d)}, p AS (SELECT doc_id, ${Geo.ix(d, "lon", 8)} AS ix, " +
+      s"${Geo.pagesWith(d)}, p AS (SELECT doc_id, ${Geo.ix(d, "lon", 8)} AS ix, " +
         s"${Geo.iy(d, "lat", 8)} AS iy FROM pages), " +
         "r AS (SELECT ix, iy, doc_id, row_number() OVER (PARTITION BY ix, iy ORDER BY doc_id) AS rn FROM p) " +
         s"SELECT ix, iy, doc_id FROM r WHERE rn <= $thinK ORDER BY ix, iy, doc_id"

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD, Zones}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD, Zones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
   *     contact along shared boundary lines is excluded in BOTH engines
   *     (strict winding parity — documented predicate).
   */
-object Extras4 {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
+object Extras4 extends Gates {
 
   // ---- lines_to_polygons ---------------------------------------------------
 
@@ -106,7 +104,7 @@ object Extras4 {
       (px1, py1, px2, py2) <- edges
     } yield s"(${segCross(px1, py1, px2, py2, ex1, ey1, ex2, ey2)})")
       .mkString(" OR ")
-    s"${pagesWith(d)}, " +
+    s"${Geo.pagesWith(d)}, " +
       "tiles AS (SELECT cast(floor((lon - -180.0e0) / 5.0e0) as bigint) AS tile_x, " +
       "cast(floor((lat - -90.0e0) / 5.0e0) as bigint) AS tile_y, count(*) AS n_points " +
       "FROM pages GROUP BY 1, 2 HAVING count(*) >= 1), " + // min_points 1: >=3 left no tile near zone 6 (vacuous r3 gate)
@@ -121,8 +119,7 @@ object Extras4 {
 
   private def randomSampleSql(d: Dialect): String = {
     val u = s"${d.md5Bits(d.toStr("ix * 1000000 + iy"), 1)} / 4294967296.0e0"
-    s"${pagesWith(d)}, g AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
-      "count(*) AS v FROM pages GROUP BY 1, 2) " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)} " +
       s"SELECT ix, iy, 1 AS sampled FROM g WHERE ($u) < 0.1e0 ORDER BY ix, iy"
   }
 

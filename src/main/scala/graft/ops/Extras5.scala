@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,13 +22,7 @@ import org.apache.spark.sql.functions._
   *     denominator sums are bigint — no distributed double-sum order
   *     hazard — and only the final ratio is floating point.
   */
-object Extras5 {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object Extras5 extends Gates {
 
   private val csvCols = "doc_id, lang, n_chars"
 
@@ -112,7 +106,7 @@ object Extras5 {
         s"SELECT ${tagCols.mkString(", ")} FROM dem"),
 
     "set_nodata_value" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)} " +
         "SELECT ix, iy, CASE WHEN v = 1 THEN NULL ELSE v END AS v_nd FROM g ORDER BY ix, iy"),
 
     "reinitialize_attribute_table" ->
@@ -122,14 +116,14 @@ object Extras5 {
       (s"SELECT $csvCols FROM documents WHERE doc_id < 50 ORDER BY doc_id"),
 
     "count_if" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
         "h AS (SELECT c.ix, c.iy, n.v AS nv FROM g c JOIN g n " +
         "ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1) " +
         "SELECT ix, iy, cast(sum(CASE WHEN nv = 1 THEN 1 ELSE 0 END) as bigint) AS n_eq " +
         "FROM h GROUP BY 1, 2 ORDER BY ix, iy"),
 
     "image_autocorrelation" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
         "tot AS (SELECT count(*) AS n, cast(sum(v) as bigint) AS s FROM g), " +
         "dev AS (SELECT ix, iy, tot.n * v - tot.s AS dv FROM g, tot), " +
         "rook AS (SELECT a.dv AS dvn, b.dv FROM dev a JOIN dev b " +

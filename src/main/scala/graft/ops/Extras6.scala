@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD, Zones}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD, Zones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,14 +39,12 @@ import org.apache.spark.sql.functions._
   *     write_function_memory_insertion.rs): change-detection composite
   *     R = date-1 band, G = B = date-2 band (en vs zh densities).
   */
-object Extras6 {
+object Extras6 extends Gates {
 
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
   private val radius = 0.02
   private val r2 = Lit.d(radius * radius)
   private val res5n = 32
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   private def ptsSql(d: Dialect): String =
     s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y, doc_id % 4 AS fl, " +
@@ -84,7 +82,7 @@ object Extras6 {
 
   private def bands(s: SparkSession, dir: String): DataFrame = {
     Tables.register(s, dir)
-    s.sql(s"${pagesWith(SparkD)}, ${bandsSql(SparkD)} SELECT * FROM c")
+    s.sql(s"${Geo.pagesWith(SparkD)}, ${bandsSql(SparkD)} SELECT * FROM c")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -194,18 +192,14 @@ object Extras6 {
 
   // ---- DuckDB twins ----------------------------------------------------
 
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
-
   def oracles: Map[String, String] = Map(
 
     "flightline_overlap" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         "SELECT cix, ciy, count(DISTINCT fl) AS n_fl FROM pts GROUP BY 1, 2 ORDER BY cix, ciy"),
 
     "classify_overlap_points" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
         "cf AS (SELECT cix, ciy, fl, count(*) AS c FROM pts GROUP BY 1, 2, 3), " +
         "dom AS (SELECT cix, ciy, fl AS dfl FROM (SELECT cix, ciy, fl, " +
         "row_number() OVER (PARTITION BY cix, ciy ORDER BY c DESC, fl) AS rn FROM cf) WHERE rn = 1) " +
@@ -213,24 +207,24 @@ object Extras6 {
         "FROM pts p JOIN dom ON dom.cix = p.cix AND dom.ciy = p.ciy ORDER BY doc_id"),
 
     "find_flightline_edge_points" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         "SELECT DISTINCT a.id AS doc_id FROM pts a JOIN pts b " +
         s"ON (b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y) <= $r2 " +
         "AND b.fl <> a.fl ORDER BY doc_id"),
 
     "erase_polygon_from_raster" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)} " +
         s"SELECT ix, iy, v FROM g WHERE NOT ${Zones.insideZoneSql(3, lonC, latC)} " +
         "ORDER BY ix, iy"),
 
     "raster_centroid" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)} " +
         "SELECT v, round(cast(cast(sum(ix) as bigint) as double) / cast(count(*) as double), 6) AS cx, " +
         "round(cast(cast(sum(iy) as bigint) as double) / cast(count(*) as double), 6) AS cy " +
         "FROM g GROUP BY v ORDER BY v"),
 
     "edge_proportion" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)}, " +
         "h AS (SELECT c.ix, c.iy, c.v, cast(sum(CASE WHEN n.v = c.v THEN 1 ELSE 0 END) as bigint) AS n_same " +
         "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1 " +
         "AND NOT (n.ix = c.ix AND n.iy = c.iy) GROUP BY 1, 2, 3) " +
@@ -238,7 +232,7 @@ object Extras6 {
         "/ cast(count(*) as double), 6) AS edge_prop FROM h GROUP BY v ORDER BY v"),
 
     "new_raster_from_base" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)} " +
         "SELECT ix, iy, 7.0e0 AS v_new FROM g ORDER BY ix, iy"),
 
     "attribute_scattergram" ->
@@ -246,11 +240,11 @@ object Extras6 {
         "FROM documents GROUP BY 1, 2 ORDER BY xa, yb"),
 
     "correct_vignetting" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD, 5)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 5)} " +
         s"SELECT ix, iy, $vigE FROM g ORDER BY ix, iy"),
 
     "panchromatic_sharpening" ->
-      (s"${pagesWith(DuckD)}, ${bandsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${bandsSql(DuckD)} " +
         "SELECT ix, iy, " +
         "round(cast(r0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS r_sharp, " +
         "round(cast(g0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS g_sharp, " +
@@ -258,7 +252,7 @@ object Extras6 {
         "FROM c ORDER BY ix, iy"),
 
     "direct_decorrelation_stretch" ->
-      (s"${pagesWith(DuckD)}, ${bandsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${bandsSql(DuckD)} " +
         "SELECT ix, iy, " +
         "round(cast(r0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS r_dds, " +
         "round(cast(g0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS g_dds, " +
@@ -266,7 +260,7 @@ object Extras6 {
         "FROM c ORDER BY ix, iy"),
 
     "write_function_memory_insertion" ->
-      (s"${pagesWith(DuckD)}, " +
+      (s"${Geo.pagesWith(DuckD)}, " +
         s"ge AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, " +
         "count(*) AS v FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
         s"gz AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, " +

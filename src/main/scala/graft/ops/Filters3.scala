@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,17 +49,7 @@ import org.apache.spark.sql.functions._
   * chained; the grid cell set is invariant across passes (every cell is
   * its own neighbour).
   */
-object Filters3 {
-
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
-
-  private val duckHalo1 =
-    "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
-      "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
+object Filters3 extends Gates {
 
   // ---- shared radius-1 aggregate ------------------------------------------
 
@@ -255,7 +245,7 @@ object Filters3 {
     val aggSql = r1Aggs.map { case (nm, e) =>
       s"${if (e == "__SORTED__") DuckD.sortedList("nv") else e} AS $nm"
     }.mkString(", ")
-    val agg1 = s"$pagesWith, ${densityG(DuckD, 6)}, $duckHalo1, " +
+    val agg1 = s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, ${Focal.duckHaloD}, " +
       s"ag AS (SELECT ix, iy, $aggSql FROM h GROUP BY ix, iy)"
     val base = queryDefs(DuckD).map { case (name, sel) =>
       name -> s"$agg1 SELECT ix, iy, ${sel.mkString(", ")} FROM ag ORDER BY ix, iy"
@@ -263,7 +253,7 @@ object Filters3 {
     val bilatAggSql = bilatAggs.map { case (nm, e) => s"$e AS $nm" }.mkString(", ")
     base ++ Map(
       "bilateral_filter" ->
-        (s"$pagesWith, ${densityG(DuckD, 6)}, $duckBilatHalo, " +
+        (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckBilatHalo, " +
           s"ag AS (SELECT ix, iy, $bilatAggSql FROM h GROUP BY ix, iy), " +
           s"ag2 AS (SELECT *, $bilatSumAlias AS bs FROM ag WHERE z IS NOT NULL) " +
           s"SELECT ix, iy, $bilatInline AS v_bl FROM ag2 ORDER BY ix, iy"),
@@ -271,7 +261,7 @@ object Filters3 {
         val g0 = "g0 AS (SELECT ix, iy, v * 1000000 AS v FROM g)"
         val passes = (1 to 5).map(i => duckBox(if (i == 1) "g0" else s"b${i - 1}", s"b$i"))
           .mkString(", ")
-        s"$pagesWith, ${densityG(DuckD, 6)}, $g0, $passes " +
+        s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $g0, $passes " +
           "SELECT ix, iy, cast(v as double) / 1000000.0e0 AS v_fag FROM b5 ORDER BY ix, iy"
       }
     )

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,13 +17,7 @@ import org.apache.spark.sql.functions._
   * Cells absent from the sparse grid contribute nothing (reference nodata
   * passthrough).
   */
-object Focal {
-
-  private def densityWith(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
-
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
+object Focal extends Gates {
 
   /** Spark-side 3×3 halo join: returns (ix, iy, v, nv) rows — one per
     * (cell, in-grid neighbour incl. self). */
@@ -58,7 +52,7 @@ object Focal {
         col("dx"), col("dy"), col("nv"))
   }
 
-  private val duckHaloD =
+  private[ops] val duckHaloD =
     "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
       "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
 
@@ -407,48 +401,48 @@ object Focal {
 
   def oracles: Map[String, String] = Map(
     "focal_stats" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHalo " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo " +
         "SELECT ix, iy, cast(sum(nv) as bigint) AS f_total, " +
         "cast(sum(nv) as double) / cast(count(*) as double) AS f_mean, " +
         "min(nv) AS f_min, max(nv) AS f_max, max(nv) - min(nv) AS f_range, " +
         "count(*) AS n_nbrs FROM h GROUP BY ix, iy ORDER BY ix, iy"),
     "focal_diversity" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHalo " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo " +
         "SELECT ix, iy, count(DISTINCT nv) AS f_div FROM h GROUP BY ix, iy ORDER BY ix, iy"),
     "focal_median" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHalo, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo, " +
         s"ag AS (SELECT ix, iy, ${DuckD.sortedList("nv")} AS a FROM h GROUP BY ix, iy) " +
         s"SELECT ix, iy, ${medianExpr(DuckD, "a")} AS f_median FROM ag ORDER BY ix, iy"),
     "focal_majority" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHalo, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo, " +
         "cnts AS (SELECT ix, iy, nv, count(*) AS c FROM h GROUP BY 1, 2, 3), " +
         "mx AS (SELECT ix, iy, max(c) AS mc FROM cnts GROUP BY 1, 2) " +
         "SELECT c.ix AS ix, c.iy AS iy, min(nv) AS f_mode, max(c.c) AS mode_n " +
         "FROM cnts c JOIN mx ON c.ix = mx.ix AND c.iy = mx.iy AND c.c = mx.mc " +
         "GROUP BY 1, 2 ORDER BY ix, iy"),
     "focal_percentile" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHalo, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo, " +
         s"ag AS (SELECT ix, iy, ${DuckD.sortedList("nv")} AS a FROM h GROUP BY ix, iy) " +
         s"SELECT ix, iy, ${pctlExpr(DuckD, "a")} AS f_p75 FROM ag ORDER BY ix, iy"),
     "focal_gaussian" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHaloD, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHaloD, " +
         s"ag AS (SELECT ix, iy, cast(sum(nv * $wBinom) as bigint) AS sw, " +
         s"cast(sum($wBinom) as bigint) AS w FROM h GROUP BY ix, iy) " +
         "SELECT ix, iy, cast(sw as double) / cast(w as double) AS v_g FROM ag ORDER BY ix, iy"),
     "sobel_filter" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHaloD, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHaloD, " +
         s"ag AS (SELECT ix, iy, cast(sum(nv * ($wSobelX)) as bigint) AS gx, " +
         s"cast(sum(nv * ($wSobelY)) as bigint) AS gy FROM h GROUP BY ix, iy) " +
         "SELECT ix, iy, gx, gy, sqrt(cast(gx * gx + gy * gy as double)) AS magnitude " +
         "FROM ag ORDER BY ix, iy"),
     "laplacian_filter" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, $duckHaloD " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHaloD " +
         s"SELECT ix, iy, cast(sum(nv * ($wLaplace)) as bigint) AS lap " +
         "FROM h GROUP BY ix, iy ORDER BY ix, iy"),
     "resample_nn" -> {
       val c5 = s"c AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS pix, ${Geo.iy(DuckD, "lat", 5)} AS piy, count(*) AS v FROM pages GROUP BY 1, 2)"
       val f7 = s"f AS (SELECT ${Geo.ix(DuckD, "lon", 7)} AS ix, ${Geo.iy(DuckD, "lat", 7)} AS iy FROM pages GROUP BY 1, 2)"
-      s"$pagesWith, $c5, $f7 SELECT ix, iy, v FROM f JOIN c " +
+      s"${Geo.pagesWith(DuckD)}, $c5, $f7 SELECT ix, iy, v FROM f JOIN c " +
         s"ON ${DuckD.idiv("ix", "4")} = pix AND ${DuckD.idiv("iy", "4")} = piy ORDER BY ix, iy"
     },
     "resample_bilinear" -> {
@@ -469,7 +463,7 @@ object Focal {
         "max(CASE WHEN ox = 1 AND oy = 0 THEN v END) AS v10, " +
         "max(CASE WHEN ox = 0 AND oy = 1 THEN v END) AS v01, " +
         "max(CASE WHEN ox = 1 AND oy = 1 THEN v END) AS v11 FROM j GROUP BY ix, iy)"
-      s"$pagesWith, $c5, $f7, $fine, $fine2, $offs, $j, $ag " +
+      s"${Geo.pagesWith(DuckD)}, $c5, $f7, $fine, $fine2, $offs, $j, $ag " +
         s"SELECT ix, iy, $bilinearE AS v_b FROM ag WHERE np = 4 ORDER BY ix, iy"
     },
     "resample_cc" -> {
@@ -490,21 +484,21 @@ object Focal {
         s"max(CASE WHEN ox = $sx AND oy = $sy THEN v END) AS v_${sx + 1}_${sy + 1}"
       }.mkString(", ")
       val ag = s"ag AS (SELECT ix, iy, max(fx) AS fx, max(fy) AS fy, $ccAggs FROM j GROUP BY ix, iy)"
-      s"$pagesWith, $c5, $f7, $fine, $fine2, $offs, $j, $ag " +
+      s"${Geo.pagesWith(DuckD)}, $c5, $f7, $fine, $fine2, $offs, $j, $ag " +
         s"SELECT ix, iy, $ccCombine AS v_cc FROM ag ORDER BY ix, iy"
     },
     "mosaic" ->
-      (s"$pagesWith, en AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS v_en FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
+      (s"${Geo.pagesWith(DuckD)}, en AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS v_en FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
         s"zh AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS v_zh FROM pages WHERE lang = 'zh' GROUP BY 1, 2) " +
         "SELECT coalesce(en.ix, zh.ix) AS ix, coalesce(en.iy, zh.iy) AS iy, " +
         "coalesce(v_en, v_zh) AS v FROM en FULL OUTER JOIN zh ON en.ix = zh.ix AND en.iy = zh.iy " +
         "ORDER BY ix, iy"),
     "raster_histogram" ->
-      (s"$pagesWith, ${densityWith(DuckD, 6)}, ext AS (SELECT min(v) AS vmin, max(v) AS vmax FROM g) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, ext AS (SELECT min(v) AS vmin, max(v) AS vmax FROM g) " +
         "SELECT least(cast(floor((cast(v - vmin as double)) / (cast(vmax - vmin + 1 as double) / 10.0e0)) as bigint), 9) AS bin, " +
         "count(*) AS n FROM g, ext GROUP BY 1 ORDER BY bin"),
     "image_correlation" ->
-      (s"$pagesWith, en AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS x FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
+      (s"${Geo.pagesWith(DuckD)}, en AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS x FROM pages WHERE lang = 'en' GROUP BY 1, 2), " +
         s"zh AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, ${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS y FROM pages WHERE lang = 'zh' GROUP BY 1, 2), " +
         "j AS (SELECT x, y FROM en JOIN zh ON en.ix = zh.ix AND en.iy = zh.iy), " +
         "a AS (SELECT count(*) AS n, cast(sum(x) as bigint) AS sx, cast(sum(y) as bigint) AS sy, " +
@@ -513,7 +507,7 @@ object Focal {
         "sqrt((cast(n as double) * cast(sxx as double) - cast(sx as double) * cast(sx as double)) * " +
         "(cast(n as double) * cast(syy as double) - cast(sy as double) * cast(sy as double))) AS pearson_r FROM a"),
     "percent_greater_than" ->
-      (s"$pagesWith, layers AS (SELECT lang, ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
+      (s"${Geo.pagesWith(DuckD)}, layers AS (SELECT lang, ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
         s"${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS v FROM pages " +
         "WHERE lang IN ('en', 'zh', 'es') GROUP BY 1, 2, 3) " +
         "SELECT ix, iy, cast(sum(CASE WHEN v > 2 THEN 1 ELSE 0 END) as bigint) AS n_over, " +
@@ -530,7 +524,7 @@ object Focal {
         "(cast(n as double) * cast(syy as double) - cast(sy as double) * cast(sy as double))) AS pearson_r FROM a"),
     "buffer_raster" -> {
       val n = 128; val rx = graft.core.Lit.d(360.0 / n); val ry = graft.core.Lit.d(180.0 / n)
-      s"$pagesWith, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
+      s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
         s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
         s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})) " +
         "SELECT DISTINCT ix, iy FROM cells JOIN pages " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,13 +24,7 @@ import org.apache.spark.sql.functions._
   * equi-join with integer-exact sums; the only doubles are final
   * divisions/sqrt.
   */
-object FocalMore {
-
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object FocalMore extends Gates {
 
   /** radius-2 halo with offsets (Spark: explode equi-join). */
   private[ops] def haloR2(g: DataFrame): DataFrame = {
@@ -48,10 +42,6 @@ object FocalMore {
   private val duckHaloR2 =
     "h2 AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
       "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 2 AND c.ix + 2 AND n.iy BETWEEN c.iy - 2 AND c.iy + 2)"
-
-  private val duckHalo1 =
-    "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
-      "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
 
   // ---- kernel weight expressions (functions of dx, dy) -------------------
   private val wLineV = "CASE WHEN dx = 0 THEN 2 ELSE -1 END"
@@ -171,7 +161,7 @@ object FocalMore {
     val aggSql = r1Aggs.map { case (nm, e) =>
       s"${if (e == "__KS__") ks else e} AS $nm"
     }.mkString(", ")
-    val agg1 = s"$pagesWith, ${densityG(DuckD, 6)}, $duckHalo1, " +
+    val agg1 = s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, ${Focal.duckHaloD}, " +
       s"ag AS (SELECT ix, iy, $aggSql FROM h GROUP BY ix, iy)"
     val base = queryDefs.map { case (name, sel, _) =>
       name -> s"$agg1 SELECT ix, iy, $sel FROM ag ORDER BY ix, iy"
@@ -180,11 +170,11 @@ object FocalMore {
       "knearest_mean_filter" ->
         s"$agg1 SELECT ix, iy, ${kNearestExpr(DuckD)} FROM ag ORDER BY ix, iy",
       "log_filter" ->
-        (s"$pagesWith, ${densityG(DuckD, 6)}, $duckHaloR2 " +
+        (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHaloR2 " +
           s"SELECT ix, iy, cast(sum(nv * ($wLoG)) as bigint) AS v_log " +
           "FROM h2 GROUP BY ix, iy ORDER BY ix, iy"),
       "diff_of_gaussian" ->
-        (s"$pagesWith, ${densityG(DuckD, 6)}, $duckHaloR2, " +
+        (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHaloR2, " +
           s"ag AS (SELECT ix, iy, cast(sum(nv * ($wB1)) as bigint) AS s1, " +
           s"cast(sum($wB1) as bigint) AS w1, cast(sum(nv * ($wB2)) as bigint) AS s2, " +
           s"cast(sum($wB2) as bigint) AS w2 FROM h2 GROUP BY ix, iy) " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Plan: one 1-row extent aggregate + a generator explode — no data
   * shuffle at any scale (output is the lattice, not the points).
   */
-object Grids {
+object Grids extends Gates {
 
   private val w = 10.0
   private val hw = graft.expr.HexBin.hw(w)
@@ -33,8 +33,6 @@ object Grids {
       val a = 2.0 * (math.Pi / 6.0) * (i + 0.5)
       (size * math.cos(a), size * math.sin(a))
     }
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   private def gen(d: Dialect, lo: String, hiExcl: String, as: String): String = d match {
     case SparkD => s"explode(sequence($lo, ($hiExcl) - 1)) AS $as"
@@ -57,7 +55,7 @@ object Grids {
     val verts = hexOffs.zipWithIndex.flatMap { case ((dx, dy), i) =>
       Seq(s"cx + ${L(dx)} AS v${i + 1}x", s"cy + ${L(dy)} AS v${i + 1}y")
     }.mkString(", ")
-    s"${pagesWith(d)}, $ext, " +
+    s"${Geo.pagesWith(d)}, $ext, " +
       s"r AS (SELECT ${gen(d, "0", nrows, "hex_row")}, minx, maxx, maxy FROM ext), " +
       s"rc AS (SELECT hex_row, ${gen(d, "0", colsR, "hex_col")}, minx, maxx, maxy FROM r), " +
       s"cc AS (SELECT cast($fid as bigint) AS fid, hex_row, hex_col, $cx AS cx, $cy AS cy FROM rc) " +
@@ -72,7 +70,7 @@ object Grids {
     val ncols = s"cast(ceil((maxx - minx) / ${L(w)}) as bigint)"
     val x0 = s"minx + cast(gcol as double) * ${L(w)}"
     val y0 = s"miny + cast(grow as double) * ${L(w)}"
-    s"${pagesWith(d)}, $ext, " +
+    s"${Geo.pagesWith(d)}, $ext, " +
       s"r AS (SELECT ${gen(d, "0", nrows, "grow")}, minx, miny, maxx FROM ext), " +
       s"rc AS (SELECT grow, ${gen(d, "0", ncols, "gcol")}, minx, miny FROM r) " +
       s"SELECT grow * 100000 + gcol + 1 AS fid, grow, gcol, " +

@@ -1,10 +1,13 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Zones}
+import graft.core.{DuckD, Gates, Geo, Zones}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** DuckDB oracle SQL for the three operators that round 1 left rows-only:
-  * kmeans (unrolled deterministic Lloyd), minimum_convex_hull (Jarvis
-  * march as a recursive CTE) and clump (transitive-closure labelling).
+/** Gates whose DuckDB oracle had to be written as a structural twin of an
+  * iterative or geometric kernel: kmeans (unrolled deterministic Lloyd),
+  * minimum_convex_hull and minimum_bounding_circle (Jarvis march as a
+  * recursive CTE) and clump (transitive-closure labelling).
   * Oracle-side cost is irrelevant (fixture scale); what matters is that
   * the SQL derives the SAME values independently of the Spark plans.
   *
@@ -14,13 +17,68 @@ import graft.core.{DuckD, Geo, Zones}
   * farthest-collinear) mirrors convex_hull.rs exactly so the vertex
   * SEQUENCE matches Graham's and only the order-free aggregations (area
   * sums, calipers min) need rounding. */
-object HardOracles {
+object HardOracles extends Gates {
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // MinimumBoundingCircle (Welzl result via exhaustive hull
+    // candidates; oracle = circleSql structural twin).
+    "minimum_bounding_circle" -> ((s: SparkSession, dir: String) => {
+      // lon/lat carried through the membership join (keep=) instead of
+      // re-scanning pages and re-joining on doc_id — same rows, one
+      // scan and one join fewer (r06 optimization round).
+      val pts = PipJoin.zoneMembership(s, Tables.pages(s, dir),
+          keep = Seq("lon", "lat"))
+        .select(col("fid"), col("lon").as("x"), col("lat").as("y"))
+      Hull.featureCircles(s, pts)
+        .selectExpr("fid", "round(ccx, 6) AS ccx", "round(ccy, 6) AS ccy",
+          "round(cr, 6) AS cr")
+        .orderBy("fid")
+    }),
+    // Clump (CCL via label propagation); clumpSql is the transitive
+    // closure, ClumpSpec pins the partition against a scalar flood fill.
+    "clump" -> ((s: SparkSession, dir: String) =>
+      Clump.clump(s, Raster.density(s, dir, 5)
+          .filter(!expr(Raster.nodataCond))
+          .withColumn("v", lit(1L)))
+        .orderBy("ix", "iy")),
+    // KMeansClustering — iterative; KMeansSpec also pins it against the
+    // scalar Lloyd loop.
+    "kmeans_clustering" -> ((s: SparkSession, dir: String) => {
+      val cells = Raster.density(s, dir, 6)
+        .selectExpr("ix * 1000000 + iy AS id",
+          "cast(ix as double) AS x", "cast(iy as double) AS y")
+      KMeans.kmeans(s, cells, k = 5).orderBy("id")
+    }),
+    "modified_kmeans_clustering" -> ((s: SparkSession, dir: String) => {
+      val cells = Raster.density(s, dir, 6)
+        .selectExpr("ix * 1000000 + iy AS id",
+          "cast(ix as double) AS x", "cast(iy as double) AS y")
+      KMeans.kmeansMerged(s, cells, k0 = 10, rounds = 10,
+        mergeD2 = 64.0).orderBy("id")
+    }),
+    // MinimumConvexHull / MinimumBoundingBox per zone; HullSpec pins the
+    // kernels to the reference vectors and the two-phase merge.
+    "minimum_convex_hull" -> ((s: SparkSession, dir: String) => {
+      // single-scan membership carry, as in minimum_bounding_circle
+      val pts = PipJoin.zoneMembership(s, Tables.pages(s, dir),
+          keep = Seq("lon", "lat"))
+        .select(col("fid"), col("lon").as("x"), col("lat").as("y"))
+      // rounded: the oracle recomputes the hull by Jarvis march (same
+      // vertex sequence as the Graham clone) but its area/calipers
+      // aggregations are order-free double sums.
+      Hull.featureHulls(s, pts)
+        .selectExpr("fid", "hull_n", "round(hull_area, 6) AS hull_area",
+          "round(mbb_area, 4) AS mbb_area")
+        .orderBy("fid")
+    })
+  )
 
-  private def densityG(res: Int): String =
-    s"g AS (SELECT ${Geo.ix(DuckD, "lon", res)} AS ix, ${Geo.iy(DuckD, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+  def oracles: Map[String, String] = Map(
+    "minimum_bounding_circle" -> circleSql,
+    "kmeans_clustering" -> kmeansSql(),
+    "modified_kmeans_clustering" -> modifiedKmeansSql(),
+    "minimum_convex_hull" -> hullSql,
+    "clump" -> clumpSql)
 
   /** ModifiedKMeansClustering twin: kmeansSql's unrolled Lloyd rounds
     * plus a per-round merge CTE — a centre is dropped when a
@@ -47,7 +105,7 @@ object HardOracles {
       s"df AS MATERIALIZED (SELECT id, p.x, p.y, c, (p.x - cx) * (p.x - cx) + (p.y - cy) * (p.y - cy) AS d2 " +
         s"FROM cells p, (SELECT c, x AS cx, y AS cy FROM k$rounds) cc), " +
         "mf AS (SELECT id, min(d2) AS md FROM df GROUP BY id)"
-    s"$pagesWith, ${densityG(6)}, " +
+    s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
       "cells AS MATERIALIZED (SELECT ix * 1000000 + iy AS id, cast(ix as double) AS x, cast(iy as double) AS y FROM g), " +
       s"$init, $roundCtes, $fin " +
       "SELECT d.id, d.x, d.y, min(c) AS c FROM df d JOIN mf m ON d.id = m.id AND d.d2 = m.md " +
@@ -79,7 +137,7 @@ object HardOracles {
     // MATERIALIZED: DuckDB inlines plain CTEs per reference, so the 10
     // unrolled rounds would re-open the parquet scan dozens of times
     // (fd exhaustion); materializing `cells` evaluates the scan once.
-    s"$pagesWith, ${densityG(6)}, " +
+    s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
       "cells AS MATERIALIZED (SELECT ix * 1000000 + iy AS id, cast(ix as double) AS x, cast(iy as double) AS y FROM g), " +
       s"$init, $roundCtes, $fin " +
       "SELECT d.id, d.x, d.y, min(c) AS c FROM df d JOIN mf m ON d.id = m.id AND d.d2 = m.md " +
@@ -176,7 +234,7 @@ object HardOracles {
     * the canonical relabel ops/Clump produces. */
   def clumpSql: String =
     s"WITH RECURSIVE pages AS (${Geo.pagesCte(DuckD)}), " +
-      s"${densityG(5)}, " +
+      s"${Geo.densityCte(DuckD, 5)}, " +
       "cells AS (SELECT ix, iy, ix * 1000000 + iy AS id FROM g WHERE NOT (((ix + iy) % 13) = 0)), " +
       "e AS (SELECT a.id AS src, b.id AS dst FROM cells a JOIN cells b " +
       "ON abs(a.ix - b.ix) <= 1 AND abs(a.iy - b.iy) <= 1), " +

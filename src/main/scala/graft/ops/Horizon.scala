@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * equi-join form is the declarative equivalent Catalyst can shuffle by
   * row key.
   */
-object Horizon {
+object Horizon extends Gates {
 
   import Dem.G
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * has a unique path — functional graph), and accum(c) = #starts whose
   * path visits c.
   */
-object Hydro {
+object Hydro extends Gates {
 
   private val res = 6
   private val sqrt2 = Lit.d(math.sqrt(2.0))
@@ -45,12 +45,6 @@ object Hydro {
 
   private val slopeE =
     s"cast(v - nv as double) / (CASE WHEN dx = 0 OR dy = 0 THEN 1.0e0 ELSE $sqrt2 END)"
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
 
   // haloD drops nix/niy; rebuild a variant that keeps the neighbour coords
   private def haloKeep(g: DataFrame): DataFrame = {
@@ -84,7 +78,7 @@ object Hydro {
 
   /** the same CTE chain without the WITH keyword (for RECURSIVE reuse). */
   private[ops] def duckDirsCtes: String =
-    s"pages AS (${Geo.pagesCte(DuckD)}), ${densityG(DuckD)}, $duckDirs"
+    s"pages AS (${Geo.pagesCte(DuckD)}), ${Geo.densityCte(DuckD, res)}, $duckDirs"
 
   /** DuckDB dirs CTE chain ending in `dd(ix, iy, dir, tx, ty)`. */
   private def duckDirs: String = {
@@ -134,7 +128,7 @@ object Hydro {
   )
 
   private val faOracle =
-    s"WITH RECURSIVE pages AS (${Geo.pagesCte(DuckD)}), ${densityG(DuckD)}, $duckDirs, " +
+    s"WITH RECURSIVE pages AS (${Geo.pagesCte(DuckD)}), ${Geo.densityCte(DuckD, res)}, $duckDirs, " +
       "e AS (SELECT ix, iy, tx, ty FROM dd WHERE dir >= 0), " +
       "paths AS (SELECT ix AS sx, iy AS sy, ix AS cx, iy AS cy FROM dd " +
       "UNION ALL SELECT p.sx, p.sy, e.tx, e.ty FROM paths p " +
@@ -143,7 +137,7 @@ object Hydro {
 
   def oracles: Map[String, String] = Map(
     "d8_pointer" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD)}, $duckDirs " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, res)}, $duckDirs " +
         "SELECT ix, iy, dir, CASE WHEN dir >= 0 THEN cast(pow(2.0e0, cast(dir as double)) as bigint) ELSE 0 END AS pointer " +
         "FROM dd ORDER BY ix, iy"),
     "d8_flow_accum" -> faOracle,

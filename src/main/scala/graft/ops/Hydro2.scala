@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,19 +43,13 @@ import org.apache.spark.sql.functions._
   * twins re-derive the values independently by recursive path
   * enumeration over the same (bit-identical) pointer field.
   */
-object Hydro2 {
+object Hydro2 extends Gates {
 
   private val sqrt2 = Lit.d(math.sqrt(2.0))
   // extract_streams.rs:231-239 takes the threshold as --threshold; on the
   // sparse world density grid fa tops out at 2-3, so the gate uses 1 (the
   // dense-DEM stream family in Dem/Streams2 uses its own threshold)
   private val streamT = 1L
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
 
   private val duckHalo8 =
     "h AS (SELECT c.ix, c.iy, c.v, n.v AS nv FROM g c JOIN g n " +
@@ -183,14 +177,14 @@ object Hydro2 {
 
   def oracles: Map[String, String] = Map(
     "find_noflow_cells" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD)}, $duckHalo8, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo8, " +
         "ag AS (SELECT ix, iy, " +
         "cast(sum(CASE WHEN nv < v THEN 1 ELSE 0 END) as bigint) AS n_lower " +
         "FROM h GROUP BY ix, iy) " +
         "SELECT g.ix, g.iy FROM g LEFT JOIN ag ON ag.ix = g.ix AND ag.iy = g.iy " +
         "WHERE coalesce(n_lower, 0) = 0 ORDER BY 1, 2"),
     "fill_single_cell_pits" ->
-      (s"${pagesWith(DuckD)}, ${densityG(DuckD)}, $duckHalo8, " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, $duckHalo8, " +
         "ag AS (SELECT ix, iy, min(nv) AS min_zn, " +
         "cast(sum(CASE WHEN nv < v THEN 1 ELSE 0 END) as bigint) AS n_lower " +
         "FROM h GROUP BY ix, iy) " +

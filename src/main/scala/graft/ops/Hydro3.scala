@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * divide accumulators as 40 unrolled ready-gated rounds (> the asserted
   * convergence point).
   */
-object Hydro3 {
+object Hydro3 extends Gates {
 
   import Dem.lenOf
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, SparkD}
+import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *   - RasterStreamsToVector (raster_streams_to_vector.rs): per-link
   *     vector summary (link id, cell count, channel length).
   */
-object Hydro4 {
+object Hydro4 extends Gates {
 
   import Dem.{G, lenOf, sqrt2}
 

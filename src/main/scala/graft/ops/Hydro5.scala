@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,11 +31,9 @@ import org.apache.spark.sql.functions._
   *   - LidarInfo (lidar_analysis/lidar_info.rs): point-cloud summary
   *     (counts, extents, z stats, per-flightline counts).
   */
-object Hydro5 {
+object Hydro5 extends Gates {
 
   import Dem.G
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   // breach geometry (reference row coords; our iy = −row)
   private val dxs = Seq(1, 1, 1, 0, -1, -1, -1, 0)
@@ -163,7 +161,7 @@ object Hydro5 {
     val detA = "(sz * (sxx * syy - sxy * sxy) - sx * (sxz * syy - sxy * syz) + sy * (sxz * sxy - sxx * syz))"
     val detB = "(n * (sxz * syy - sxy * syz) - sz * (sx * syy - sxy * sy) + sy * (sx * syz - sxz * sy))"
     val detC = "(n * (sxx * syz - sxz * sxy) - sx * (sx * syz - sxz * sy) + sz * (sx * sxy - sxx * sy))"
-    s"${pagesWith(d)}, $pts, $ag, $dbl " +
+    s"${Geo.pagesWith(d)}, $pts, $ag, $dbl " +
       s"SELECT cast(n as bigint) AS n, round($detA / $det, 6) AS coef_a, " +
       s"round($detB / $det * 1.0e6, 6) AS coef_b_millionth, " +
       s"round($detC / $det * 1.0e6, 6) AS coef_c_millionth FROM db"
@@ -226,13 +224,12 @@ object Hydro5 {
 
     "convert_raster_format" -> {
       val dD = DuckD
-      s"${pagesWith(dD)}, g AS (SELECT ${Geo.ix(dD, "lon", 5)} AS ix, " +
-        s"${Geo.iy(dD, "lat", 5)} AS iy, count(*) AS v FROM pages GROUP BY 1, 2) " +
+      s"${Geo.pagesWith(dD)}, ${Geo.densityCte(dD, 5)} " +
         "SELECT ix, iy, v FROM g ORDER BY ix, iy"
     },
 
     "lidar_info" ->
-      (s"${pagesWith(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)} " +
         "SELECT doc_id % 4 AS fl, count(*) AS n, min(lon) AS min_x, max(lon) AS max_x, " +
         "min(lat) AS min_y, max(lat) AS max_y, " +
         "min(cast(n_chars as bigint)) AS min_z, max(cast(n_chars as bigint)) AS max_z, " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Lit}
+import graft.core.{Gates, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -40,7 +40,7 @@ import org.apache.spark.sql.expressions.Window
   *     flooded(t(u))) — one fixpoint with one boolean column per site,
   *     integer volume Σ (crest − z_u).
   */
-object Hydro6 {
+object Hydro6 extends Gates {
 
   import Dem.G
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * watershed/subbasins as recursive pointer walks with absorbing stops;
   * sink components as recursive reachability min-label.
   */
-object HydroFill {
+object HydroFill extends Gates {
 
   import Dem.G
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Lit, SparkD}
+import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * expansion (:134-218) — pinned separately in FrsSpec against a scalar
   * transcription.
   */
-object Knn {
+object Knn extends Gates {
 
   private def bucket(e: String, w: Double): String =
     s"cast(floor(($e) / ${Lit.d(w)}) as bigint)"
@@ -167,12 +167,10 @@ object Knn {
     })
   )
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
   def oracles: Map[String, String] = Map(
     "knn_radius" -> {
       val r2 = Lit.d(0.01 * 0.01)
-      s"$pagesWith, q AS (SELECT doc_id AS qid, lon AS qx, lat AS qy FROM pages WHERE $nycBox), " +
+      s"${Geo.pagesWith(DuckD)}, q AS (SELECT doc_id AS qid, lon AS qx, lat AS qy FROM pages WHERE $nycBox), " +
         "cand AS (SELECT qid, p.doc_id AS nid, " +
         "(p.lon - qx) * (p.lon - qx) + (p.lat - qy) * (p.lat - qy) AS d2 " +
         "FROM q JOIN pages p ON p.doc_id <> qid), " +
@@ -182,7 +180,7 @@ object Knn {
     },
     "nn_gridding" -> {
       val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-      s"$pagesWith, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
+      s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
         s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
         s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
         "cand AS (SELECT ix, iy, doc_id, " +
@@ -193,7 +191,7 @@ object Knn {
     },
     "idw_interpolation" -> {
       val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-      s"$pagesWith, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
+      s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
         s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
         s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
         "cand AS (SELECT ix, iy, doc_id, n_chars, " +

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -38,7 +39,7 @@ import org.apache.spark.storage.StorageLevel
   * the k smallest (d², id) among points with shell ≤ S. The twin
   * transcribes exactly that in SQL; the Spark side runs the real iterative
   * KnnShell.knn loop — the compare proves the loop equivalent. */
-object KnnShellGate {
+object KnnShellGate extends Gates {
 
   private val k = 4
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
@@ -63,7 +64,7 @@ object KnnShellGate {
       val qRows = qpts.map { case (i, x, y) =>
         s"($i, ${graft.core.Lit.d(x)}, ${graft.core.Lit.d(y)})"
       }.mkString(", ")
-      s"WITH pages AS (${graft.core.Geo.pagesCte(graft.core.DuckD)}), " +
+      s"${graft.core.Geo.pagesWith(graft.core.DuckD)}, " +
         s"q(qid, qx, qy) AS (VALUES $qRows), " +
         s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y FROM pages WHERE $nycBox), " +
         s"dd AS (SELECT qid, id, " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,15 +19,13 @@ import org.apache.spark.sql.functions._
   *     |z − mean(neighbourhood z, EXCLUDING the point)| exceeds elev_diff;
   *     the self-excluded mean is (Σz − z)/(n − 1), exact integer sums.
   */
-object Lidar {
+object Lidar extends Gates {
 
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
   private val radius = 0.02
   private val r2 = Lit.d(radius * radius)
   private val heightT = 50L // height_threshold in n_chars units
   private val elevDiff = 50.0
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   private def ptsSql(d: Dialect): String =
     s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y, cast(n_chars as bigint) AS z " +
@@ -89,7 +87,7 @@ object Lidar {
 
   def oracles: Map[String, String] = Map(
     "lidar_ground_point_filter" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, $duckPairs, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, $duckPairs, " +
         "er AS (SELECT id, min(nz) AS emin FROM pairs GROUP BY id), " +
         "dil AS (SELECT p.id, max(p.z) AS z, max(er.emin) AS opened FROM pairs p " +
         "JOIN er ON er.id = p.nid GROUP BY p.id) " +
@@ -97,7 +95,7 @@ object Lidar {
         s"CASE WHEN z - opened < $heightT THEN 1 ELSE 0 END AS is_ground " +
         "FROM dil ORDER BY doc_id"),
     "lidar_outliers" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, $duckPairs, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, $duckPairs, " +
         "ag AS (SELECT id, max(z) AS z, cast(sum(nz) as bigint) AS sz, count(*) AS n " +
         "FROM pairs GROUP BY id) " +
         "SELECT id AS doc_id, CASE WHEN n > 1 THEN abs(cast(z as double) - " +

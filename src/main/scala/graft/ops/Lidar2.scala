@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *   - LidarHistogram (lidar_histogram.rs): z histogram with fixed-width
   *     bins (100 n_chars units, origin 0).
   */
-object Lidar2 {
+object Lidar2 extends Gates {
 
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
   private val radius = 0.02
@@ -37,8 +37,6 @@ object Lidar2 {
   private val maxScanAngle = 15L
   private val binW = 100L
   private val pi = Lit.d(math.Pi)
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   private def ptsSql(d: Dialect): String =
     s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y, cast(n_chars as bigint) AS z, " +
@@ -69,7 +67,7 @@ object Lidar2 {
       .orderBy("ix", "iy")
 
   private[ops] def thinDuck(rv: Double): String =
-    s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
+    s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
       s"g AS (SELECT id, z, ${cellIx(rv)} AS ix, ${cellIy(rv)} AS iy, " +
       "row_number() OVER (PARTITION BY " +
       s"${cellIx(rv)}, ${cellIy(rv)} ORDER BY z, id) AS rn FROM pts) " +
@@ -213,7 +211,7 @@ object Lidar2 {
   def oracles: Map[String, String] = Map(
 
     "lidar_normal_vectors" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
         "qp AS (SELECT id, x, y, z, cast(round(x * 1.0e6) as bigint) AS qx, " +
         "cast(round(y * 1.0e6) as bigint) AS qy FROM pts), " +
         "sums AS (SELECT a.id, count(*) AS n, " +
@@ -226,7 +224,7 @@ object Lidar2 {
         s"SELECT id AS doc_id, ${normalSelect.mkString(", ")} FROM sums ORDER BY doc_id"),
 
     "lidar_point_density" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
         s"cells AS (SELECT a.r AS cix, b.r AS ciy FROM range(0, $cellsPerSide) a(r) " +
         s"CROSS JOIN range(0, $cellsPerSide) b(r)), " +
         s"cc AS (SELECT cix, ciy, ${centreX("cix")} AS cx, ${centreY("ciy")} AS cy FROM cells), " +
@@ -239,22 +237,22 @@ object Lidar2 {
     "lidar_thin" -> thinDuck(res),
 
     "lidar_tile_footprint" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         s"SELECT $tileIxE AS tix, $tileIyE AS tiy, count(*) AS n, " +
         "min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y " +
         "FROM pts GROUP BY 1, 2 ORDER BY tix, tiy"),
 
     "filter_lidar_scan_angles" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         s"SELECT id AS doc_id, scan_angle FROM pts WHERE abs(scan_angle) <= $maxScanAngle " +
         "ORDER BY doc_id"),
 
     "las_to_ascii" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         "SELECT id, x, y, z FROM pts ORDER BY id"),
 
     "lidar_colourize" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
         s"bands AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS bx, ${Geo.iy(DuckD, "lat", 5)} AS by, " +
         "cast(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) as bigint) AS r, " +
         "cast(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) as bigint) AS g, " +
@@ -266,7 +264,7 @@ object Lidar2 {
         s"AND bands.by = ${Geo.iy(DuckD, "p.y", 5)} ORDER BY doc_id"),
 
     "lidar_histogram" ->
-      (s"${pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
+      (s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)} " +
         s"SELECT (z // $binW) AS bin, count(*) AS n, min(z) AS min_z, max(z) AS max_z " +
         "FROM pts GROUP BY 1 ORDER BY bin")
   )

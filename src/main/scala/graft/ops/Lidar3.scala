@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *     flightline (doc_id % 4, the flightline convention of the
   *     flightline family) with its point count and bbox.
   */
-object Lidar3 {
+object Lidar3 extends Gates {
 
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
   private val res = 0.0125
@@ -44,8 +44,6 @@ object Lidar3 {
   private val cosThresh = "0.9659e0" // cos 15°
   private val zCap = 150L // max |mean z| difference across a segment edge (z = n_chars, range ~50-400)
   private val groundDz = 150L
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   private def ptsSql(d: Dialect): String =
     s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y, cast(n_chars as bigint) AS z, " +
@@ -88,7 +86,7 @@ object Lidar3 {
   private def cellSegs(s: SparkSession, dir: String): DataFrame =
     Dem.memo(s, dir, "lidar_segs") {
       Tables.register(s, dir)
-      val base = s.sql(s"${pagesWith(SparkD)}, ${ptsSql(SparkD)}, ${cellsSql(SparkD)}, " +
+      val base = s.sql(s"${Geo.pagesWith(SparkD)}, ${ptsSql(SparkD)}, ${cellsSql(SparkD)}, " +
         s"$edgesSql SELECT cn.cx, cn.cy, e.dx_, e.dy_ FROM cn " +
         "LEFT JOIN segedges e ON e.cx = cn.cx AND e.cy = cn.cy").localCheckpoint()
       val nodes = base.select("cx", "cy").distinct()
@@ -122,7 +120,7 @@ object Lidar3 {
 
     "lidar_segmentation_based_filter" -> ((s, dir) => {
       Tables.register(s, dir)
-      val mz = s.sql(s"${pagesWith(SparkD)}, ${ptsSql(SparkD)}, ${cellsSql(SparkD)} " +
+      val mz = s.sql(s"${Geo.pagesWith(SparkD)}, ${ptsSql(SparkD)}, ${cellsSql(SparkD)} " +
         "SELECT cx, cy, mz FROM cn")
       val segs = cellSegs(s, dir).join(mz, Seq("cx", "cy"))
       val segMin = segs.groupBy("seg").agg(min("mz").as("seg_mz"))
@@ -196,7 +194,7 @@ object Lidar3 {
   // ---- DuckDB twins -----------------------------------------------------
 
   private def Wd(body: String): String =
-    s"WITH RECURSIVE ${pagesWith(DuckD).stripPrefix("WITH ")}, ${ptsSql(DuckD)}, $body"
+    s"WITH RECURSIVE pages AS (${Geo.pagesCte(DuckD)}), ${ptsSql(DuckD)}, $body"
 
   def oracles: Map[String, String] = Map(
 

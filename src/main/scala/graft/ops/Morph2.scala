@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * image tools; the N/S-or-W/E-lower ridge mask on the DEM for
   * FindRidges.
   */
-object Morph2 {
+object Morph2 extends Gates {
 
   // reference neighbour order i → (dx, dyRow); our iy grows north, so the
   // neighbour cell is (ix + dx, iy − dyRow)
@@ -140,12 +140,9 @@ object Morph2 {
 
   // ---- DuckDB twins ----------------------------------------------------
 
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG4(d: Dialect): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", 4)} AS ix, ${Geo.iy(d, "lat", 4)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2), " +
-      "q0 AS (SELECT ix, iy FROM g WHERE v >= 1)"
+  /** pages, the res-4 density grid and its occupied-cell mask q0 */
+  private val duckQ0 = s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 4)}, " +
+    "q0 AS (SELECT ix, iy FROM g WHERE v >= 1)"
 
   private def presE(tbl: String, i: Int): String =
     s"(CASE WHEN EXISTS (SELECT 1 FROM $tbl n WHERE n.ix = c.ix + ${dxs(i)} " +
@@ -170,15 +167,15 @@ object Morph2 {
   def oracles: Map[String, String] = Map(
 
     "line_thinning" ->
-      (s"${pagesWith(DuckD)}, ${densityG4(DuckD)}, ${unroll(spur = false, 10)} " +
+      (s"$duckQ0, ${unroll(spur = false, 10)} " +
         s"SELECT ix, iy FROM ${lastQ(10)} ORDER BY ix, iy"),
 
     "remove_spurs" ->
-      (s"${pagesWith(DuckD)}, ${densityG4(DuckD)}, ${unroll(spur = true, 8)} " +
+      (s"$duckQ0, ${unroll(spur = true, 8)} " +
         s"SELECT ix, iy FROM ${lastQ(8)} ORDER BY ix, iy"),
 
     "thicken_raster_line" ->
-      (s"${pagesWith(DuckD)}, ${densityG4(DuckD)}, " +
+      (s"$duckQ0, " +
         "cand AS (SELECT DISTINCT m.ix + a.d AS ix, m.iy + b.d AS iy FROM q0 m, " +
         "(SELECT unnest([-1, 0, 1]) AS d) a, (SELECT unnest([-1, 0, 1]) AS d) b), " +
         "bg AS (SELECT c.ix, c.iy FROM cand c LEFT JOIN q0 ON q0.ix = c.ix AND q0.iy = c.iy " +

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multiscale terrain family (terrain_analysis/max_elev_deviation.rs,
@@ -52,7 +53,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     probe cells (the reference plots DEV/anisotropy vs scale for
   *     sampled points).
   */
-object Multiscale {
+object Multiscale extends Gates {
 
   private val G = Dem.G
   private val devRadii = Seq(1, 2, 4, 8)

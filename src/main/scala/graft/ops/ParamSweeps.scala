@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Lit}
+import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * same plan shape, different constant — so the sweep evidences that the
   * operators are PARAMETERIZED engines, not fixture-tuned one-offs.
   */
-object ParamSweeps {
+object ParamSweeps extends Gates {
 
   // ---- mean filter window sweep (cascaded window aggregates) ------------
 
@@ -105,7 +105,7 @@ object ParamSweeps {
   private def idwDuck(wExp: Int): String = {
     val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
     val (swzE, swE) = idwKernel(wExp)
-    s"WITH pages AS (${Geo.pagesCte(DuckD)}), " +
+    s"${Geo.pagesWith(DuckD)}, " +
       s"cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
       s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
       s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
@@ -146,7 +146,7 @@ object ParamSweeps {
 
   private def bufferDuck(r: Double): String = {
     val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-    s"WITH pages AS (${Geo.pagesCte(DuckD)}), " +
+    s"${Geo.pagesWith(DuckD)}, " +
       s"cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
       s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
       s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})) " +
@@ -195,9 +195,7 @@ object ParamSweeps {
         "FROM fa ORDER BY ix, iy"),
     "buffer_raster_d05" -> bufferDuck(0.5),
     "aggregate_raster_f2" ->
-      (s"WITH pages AS (${Geo.pagesCte(DuckD)}), " +
-        s"g AS (SELECT ${Geo.ix(DuckD, "lon", 7)} AS ix, ${Geo.iy(DuckD, "lat", 7)} AS iy, " +
-        "count(*) AS v FROM pages GROUP BY 1, 2) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 7)} " +
         s"SELECT ${DuckD.idiv("ix", "2")} AS ax, ${DuckD.idiv("iy", "2")} AS ay, " +
         "cast(sum(v) as bigint) AS v_sum, " +
         "cast(sum(v) as double) / cast(count(*) as double) AS v_mean, " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, SparkD}
+import graft.core.{DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   *     alongside the gated k = 5, same deterministic Lloyd loop and
   *     unrolled-round twin (HardOracles.kmeansSql is k-parameterized).
   */
-object ParamSweeps2 {
+object ParamSweeps2 extends Gates {
 
   private val zfSlope =
     "round(degrees(atan(2.0e0 * sqrt(fx * fx + fy * fy))), 6) AS slope_deg"
@@ -59,7 +59,7 @@ object ParamSweeps2 {
 
   private def hexDuck(width: Double): String = {
     val h = graft.expr.HexBin.assignSql("lon", "lat", "minx", "miny", "maxx", "maxy", width)
-    s"WITH pages AS (${Geo.pagesCte(DuckD)}), " +
+    s"${Geo.pagesWith(DuckD)}, " +
       "ext AS (SELECT min(lon) AS minx, min(lat) AS miny, " +
       "max(lon) AS maxx, max(lat) AS maxy FROM pages), " +
       s"assigned AS (SELECT $h AS h FROM pages, ext) " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * ops/Direction.scala with the rest of the Az machinery; the Sibson
   * lattice sweep lives in ops/Sibson.scala.)
   */
-object ParamSweeps3 {
+object ParamSweeps3 extends Gates {
 
   private def resampleNnF8(s: SparkSession, dir: String): DataFrame = {
     val coarse = Raster.density(s, dir, 4)
@@ -40,7 +40,7 @@ object ParamSweeps3 {
       s"${Geo.iy(DuckD, "lat", 4)} AS piy, count(*) AS v FROM pages GROUP BY 1, 2)"
     val f7 = s"f AS (SELECT ${Geo.ix(DuckD, "lon", 7)} AS ix, " +
       s"${Geo.iy(DuckD, "lat", 7)} AS iy FROM pages GROUP BY 1, 2)"
-    s"WITH pages AS (${Geo.pagesCte(DuckD)}), $c4, $f7 " +
+    s"${Geo.pagesWith(DuckD)}, $c4, $f7 " +
       s"SELECT ix, iy, v FROM f JOIN c " +
       s"ON ${DuckD.idiv("ix", "8")} = pix AND ${DuckD.idiv("iy", "8")} = piy " +
       "ORDER BY ix, iy"

@@ -77,10 +77,11 @@ object PipJoin {
     // local relation conversion on every query build. Reference equality
     // on the rings Seq keeps non-default callers uncached. No data or
     // results are cached — this is a driver-side literal table.
-    if (rings eq Zones.worldZones)
+    if (rings eq Zones.worldZones) {
+      Tables.dropStopped(rcGroupedCache)(_._1)
       rcGroupedCache.computeIfAbsent((spark, res),
         _ => buildRingCellsGrouped(spark, rings, res))
-    else buildRingCellsGrouped(spark, rings, res)
+    } else buildRingCellsGrouped(spark, rings, res)
   }
 
   private val rcGroupedCache =

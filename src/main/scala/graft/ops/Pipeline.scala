@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.{DuckD, Gates}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * Reference: whitebox has no corpus pipeline — this is part of the
   * training-data extension mandate (SURVEY §2.10).
   */
-object Pipeline {
+object Pipeline extends Gates {
 
   // 0.55 (not the text_quality gate's illustrative 0.5): the fixture's
   // sub-0.52 docs are exactly the language-unresolved ones, so a 0.5 cut

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Lit
+import graft.core.{Gates, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * Line features: the two deterministic intersecting diagonal wall
   * segments shared with raise_walls (Hydro6).
   */
-object Polygonize {
+object Polygonize extends Gates {
 
   import Dem.G
 

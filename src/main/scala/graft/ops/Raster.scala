@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,12 +16,7 @@ import org.apache.spark.sql.functions._
   * partial count first, so the shuffle carries at most one row per cell per
   * task. No driver-side state anywhere.
   */
-object Raster {
-
-  /** density grid SQL fragment (dialect-shared except pages derivation) */
-  private def densitySelect(dl: Dialect, res: Int): String =
-    s"SELECT ${Geo.ix(dl, "lon", res)} AS ix, ${Geo.iy(dl, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2"
+object Raster extends Gates {
 
   /** Spark-side density grid.
     *
@@ -237,12 +232,10 @@ object Raster {
     })
   )
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
   def oracles: Map[String, String] = Map(
     "rasterize_points" -> {
       val d = DuckD
-      s"$pagesWith SELECT ${Geo.ix(d, "lon", 7)} AS ix, ${Geo.iy(d, "lat", 7)} AS iy, " +
+      s"${Geo.pagesWith(d)} SELECT ${Geo.ix(d, "lon", 7)} AS ix, ${Geo.iy(d, "lat", 7)} AS iy, " +
         s"${d.argMin("n_chars", "doc_id")} AS v_first, ${d.argMax("n_chars", "doc_id")} AS v_last, " +
         s"min(n_chars) AS v_min, max(n_chars) AS v_max, " +
         s"cast(sum(n_chars) as bigint) AS v_sum, count(*) AS n " +
@@ -250,19 +243,19 @@ object Raster {
     },
     "raster_to_points" -> {
       val res = 6; val rx = 360.0 / (1 << res); val ry = 180.0 / (1 << res)
-      s"$pagesWith, g AS (${densitySelect(DuckD, res)}) " +
+      s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, res)} " +
         s"SELECT ix, iy, -180.0e0 + ${rx}e0 / 2.0e0 + ix * ${rx}e0 AS x, " +
         s"-90.0e0 + ${ry}e0 / 2.0e0 + iy * ${ry}e0 AS y, v FROM g " +
         s"WHERE NOT ($nodataCond) AND v <> 0 ORDER BY ix, iy"
     },
     "aggregate_raster" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 7)}) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 7)} " +
         s"SELECT ${DuckD.idiv("ix", "4")} AS ax, ${DuckD.idiv("iy", "4")} AS ay, " +
         s"cast(sum(v) as bigint) AS v_sum, " +
         s"cast(sum(v) as double) / cast(count(*) as double) AS v_mean, " +
         s"min(v) AS v_min, max(v) AS v_max FROM g GROUP BY 1, 2 ORDER BY ax, ay"),
     "overlay_stack" ->
-      (s"$pagesWith, layers AS (SELECT lang, ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
+      (s"${Geo.pagesWith(DuckD)}, layers AS (SELECT lang, ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
         s"${Geo.iy(DuckD, "lat", 5)} AS iy, count(*) AS v FROM pages " +
         s"WHERE lang IN ('en', 'zh', 'es') GROUP BY 1, 2, 3) " +
         s"SELECT ix, iy, cast(sum(v) as double) / cast(count(*) as double) AS v_avg, " +
@@ -270,38 +263,38 @@ object Raster {
         s"count(*) AS n_layers FROM layers GROUP BY 1, 2 ORDER BY ix, iy"),
     "hex_binning" -> {
       val h = graft.expr.HexBin.assignSql("lon", "lat", "minx", "miny", "maxx", "maxy", 10.0)
-      s"$pagesWith, ext AS (SELECT min(lon) AS minx, min(lat) AS miny, " +
+      s"${Geo.pagesWith(DuckD)}, ext AS (SELECT min(lon) AS minx, min(lat) AS miny, " +
         "max(lon) AS maxx, max(lat) AS maxy FROM pages), " +
         s"assigned AS (SELECT $h AS h FROM pages, ext) " +
         "SELECT (h >> 32) AS hex_row, (h & 4294967295) AS hex_col, count(*) AS n " +
         "FROM assigned GROUP BY 1, 2 ORDER BY hex_row, hex_col"
     },
     "z_scores" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 6)}), " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
         "st AS (SELECT cast(sum(v) as bigint) AS s, cast(sum(v * v) as bigint) AS q, count(*) AS n FROM g) " +
         "SELECT ix, iy, (cast(v as double) - cast(s as double) / cast(n as double)) / " +
         "sqrt(greatest(0.0e0, (cast(q as double) - cast(s as double) * cast(s as double) / cast(n as double)) / (cast(n as double) - 1.0e0))) AS z " +
         "FROM g, st ORDER BY ix, iy"),
     "cumulative_distribution" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 6)}) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)} " +
         "SELECT ix, iy, cume_dist() OVER (ORDER BY v) AS cdf FROM g ORDER BY ix, iy"),
     "highest_position" ->
-      (s"$pagesWith, layers AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
+      (s"${Geo.pagesWith(DuckD)}, layers AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
         s"${Geo.iy(DuckD, "lat", 5)} AS iy, " +
         "CASE lang WHEN 'en' THEN 1 WHEN 'zh' THEN 2 ELSE 3 END AS layer, count(*) AS v " +
         "FROM pages WHERE lang IN ('en', 'zh', 'es') GROUP BY 1, 2, 3), " +
         "r AS (SELECT ix, iy, layer, v, row_number() OVER (PARTITION BY ix, iy ORDER BY v DESC, layer) AS rn FROM layers) " +
         "SELECT ix, iy, layer AS pos, v AS v_max FROM r WHERE rn = 1 ORDER BY ix, iy"),
     "histogram_equalization" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 6)}) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)} " +
         "SELECT ix, iy, cast(floor(cume_dist() OVER (ORDER BY v) * 255.0e0) as bigint) AS v_eq " +
         "FROM g ORDER BY ix, iy"),
     "random_field" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 6)}) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)} " +
         s"SELECT ix, iy, ${DuckD.md5Bits("cast(ix * 1000000 + iy as varchar)", 1)} / 4294967296.0e0 AS u " +
         "FROM g ORDER BY ix, iy"),
     "lowest_position" ->
-      (s"$pagesWith, layers AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
+      (s"${Geo.pagesWith(DuckD)}, layers AS (SELECT ${Geo.ix(DuckD, "lon", 5)} AS ix, " +
         s"${Geo.iy(DuckD, "lat", 5)} AS iy, " +
         "CASE lang WHEN 'en' THEN 1 WHEN 'zh' THEN 2 ELSE 3 END AS layer, count(*) AS v " +
         "FROM pages WHERE lang IN ('en', 'zh', 'es') GROUP BY 1, 2, 3), " +
@@ -309,12 +302,12 @@ object Raster {
         "SELECT ix, iy, layer AS pos, v AS v_min FROM r WHERE rn = 1 ORDER BY ix, iy"),
     "raster_cell_assignment" -> {
       val res = 6; val rx = 360.0 / (1 << res); val ry = 180.0 / (1 << res)
-      s"$pagesWith, g AS (${densitySelect(DuckD, res)}) " +
+      s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, res)} " +
         s"SELECT ix, iy, -180.0e0 + ${rx}e0 / 2.0e0 + ix * ${rx}e0 AS x, " +
         s"-90.0e0 + ${ry}e0 / 2.0e0 + iy * ${ry}e0 AS y FROM g ORDER BY ix, iy"
     },
     "raster_summary_stats" ->
-      (s"$pagesWith, g AS (${densitySelect(DuckD, 6)}) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)} " +
         s"SELECT ${Zonal.statsSelect.mkString(", ")} FROM " +
         s"(SELECT cast(sum(v) as bigint) AS s, cast(sum(v * v) as bigint) AS q, " +
         s"count(*) AS n, min(v) AS mn, max(v) AS mx FROM g) t")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Lit, SparkD, Zones}
+import graft.core.{DuckD, Gates, Geo, Lit, Zones}
 import graft.expr.PointInPolygon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Window bounds are computed once from the static zone data (same Scala
   * doubles feed the Spark plan and the generated oracle SQL).
   */
-object RasterClip {
+object RasterClip extends Gates {
   private val res = 6
   private val n = 1 << res
   private val rx = 360.0 / n
@@ -63,8 +63,7 @@ object RasterClip {
 
   def oracles: Map[String, String] = {
     val d = DuckD
-    val g = s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+    val g = Geo.densityCte(d, res)
     def partCond(r: graft.core.Ring): String = {
       val (ix0, ix1, iy0, iy1) = window(r)
       s"(ix >= $ix0 AND ix < $ix1 AND iy >= $iy0 AND iy < $iy1 AND " +
@@ -77,7 +76,7 @@ object RasterClip {
       case hs  => hs.mkString("(", " OR ", ")")
     }
     Map("clip_raster_to_polygon" ->
-      (s"WITH pages AS (${Geo.pagesCte(d)}), $g " +
+      (s"${Geo.pagesWith(d)}, $g " +
         s"SELECT ix, iy, v FROM g WHERE $hulls AND NOT $holes ORDER BY ix, iy"))
   }
 }

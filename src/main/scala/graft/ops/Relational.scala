@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, SparkD}
+import graft.core.{DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * EliminateCoincidentPoints, ExtractRasterValuesAtPoints, plus an events
   * windowed aggregation (batch twin of the streaming pipeline).
   */
-object Relational {
+object Relational extends Gates {
 
   /** Quantiles (quantiles.rs:199-262) parameterized by --num_quantiles k:
     * the reference's 10,000-bin histogram CDF. Shared by the gated k=4
@@ -156,8 +156,6 @@ object Relational {
     a.select(common.map(col): _*).unionByName(b.select(common.map(col): _*))
   }
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
   /** DuckDB twin of `quantilesK` — the reference 10k-bin histogram CDF,
     * same float op order, parameterized by k (100/k is exact in binary
     * for the gated k ∈ {4, 10}). */
@@ -165,7 +163,7 @@ object Relational {
     val binE = "least(cast(floor(cast(n_chars - mn as double) / " +
       "(greatest(ceil(cast(mx - mn as double)), 1.0e0) / 10000.0e0)) as bigint), 9999)"
     val qE = s"floor(((100.0e0 * cum) / n) / ${graft.core.Lit.d(100.0 / k)})"
-    s"$pagesWith, ext AS (SELECT cast(min(n_chars) as bigint) AS mn, " +
+    s"${Geo.pagesWith(DuckD)}, ext AS (SELECT cast(min(n_chars) as bigint) AS mn, " +
       "cast(max(n_chars) as bigint) AS mx, count(*) AS n FROM pages), " +
       s"b AS (SELECT doc_id, n_chars, $binE AS bin FROM pages, ext), " +
       "h AS (SELECT bin, count(*) AS c FROM b GROUP BY bin), " +
@@ -186,18 +184,18 @@ object Relational {
         "UNION ALL SELECT doc_id, text, lang FROM documents WHERE lang = 'zh' " +
         "ORDER BY doc_id"),
     "reclass" ->
-      s"$pagesWith SELECT doc_id, $reclassCase AS class FROM pages ORDER BY doc_id",
+      s"${Geo.pagesWith(DuckD)} SELECT doc_id, $reclassCase AS class FROM pages ORDER BY doc_id",
     "quantiles" -> quantilesDuckK(4),
     "cross_tabulation" ->
       "SELECT lang, source, count(*) AS n FROM documents GROUP BY 1, 2 ORDER BY lang, source",
     "list_unique_values" ->
       "SELECT lang, count(*) AS n FROM documents GROUP BY 1 ORDER BY lang",
     "eliminate_coincident_points" ->
-      (s"$pagesWith SELECT ${Geo.ix(DuckD, "lon", 10)} AS ix, ${Geo.iy(DuckD, "lat", 10)} AS iy, " +
+      (s"${Geo.pagesWith(DuckD)} SELECT ${Geo.ix(DuckD, "lon", 10)} AS ix, ${Geo.iy(DuckD, "lat", 10)} AS iy, " +
         "min(doc_id) AS kept_doc, count(*) - 1 AS n_dropped FROM pages " +
         "GROUP BY 1, 2 ORDER BY ix, iy"),
     "extract_values_at_points" ->
-      (s"$pagesWith SELECT doc_id, count(*) OVER (PARTITION BY ${Geo.ix(DuckD, "lon", 6)}, " +
+      (s"${Geo.pagesWith(DuckD)} SELECT doc_id, count(*) OVER (PARTITION BY ${Geo.ix(DuckD, "lon", 6)}, " +
         s"${Geo.iy(DuckD, "lat", 6)}) AS value1 FROM pages ORDER BY doc_id"),
     "sessionization" ->
       ("WITH e AS (SELECT event_id, ts, user_id, value, " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * (HardOracles pattern) over the same literal vertices, so only the
   * order-free aggregations need rounding (6dp).
   */
-object ShapeMetrics {
+object ShapeMetrics extends Gates {
 
   // ---- pure per-ring expressions (shared builders) -------------------------
 

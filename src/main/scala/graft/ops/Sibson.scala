@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * every 5th grid intersection not coincident with a site (a coincident
   * intersection copies the site value — the IDW d=0 rule — and is omitted).
   */
-object Sibson {
+object Sibson extends Gates {
 
   /** @param qmod query-lattice stride (the tool's output grid resolution
     *             axis): every qmod-th intersection is interpolated. */
@@ -106,9 +106,7 @@ object Sibson {
   // pair tested with the identical integer capture predicate.
   private def twin(qmod: Int = 5): String = {
     val d = DuckD
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
-      s"g AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
-      "count(*) AS v FROM pages GROUP BY 1, 2), " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "srcs AS (SELECT ix AS sx, iy AS sy, v AS sv FROM g WHERE v >= 2), " +
       "ext AS (SELECT min(ix) AS x0, max(ix) AS x1, min(iy) AS y0, max(iy) AS y1 FROM g), " +
       "fxs AS (SELECT unnest(generate_series(x0, x1)) AS fx FROM ext), " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *     (n_card, n_diag) length carry. Paths with no junction take the
   *     full path length (the reference walks to the terminal).
   */
-object Singles {
+object Singles extends Gates {
 
   import Dem.G
 
@@ -42,9 +42,7 @@ object Singles {
       case DuckD => "sum(cast(sc.n * g.v - sc.s as hugeint) * cast(sc.n * g.v - sc.s as hugeint))"
       case SparkD => "sum(cast(sc.n * g.v - sc.s as decimal(38,0)) * cast(sc.n * g.v - sc.s as decimal(38,0)))"
     }
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
-      s"g AS (SELECT ${Geo.ix(d, "lon", 6)} AS ix, ${Geo.iy(d, "lat", 6)} AS iy, " +
-      "count(*) AS v FROM pages GROUP BY 1, 2), " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "sc AS (SELECT cast(sum(v) as bigint) AS s, count(*) AS n, max(v) AS m FROM g), " +
       s"nm AS (SELECT $sq AS num, max(sc.s) AS s, max(sc.n) AS n, max(sc.m) AS m " +
       "FROM g, sc) " +

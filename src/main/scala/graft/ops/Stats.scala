@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,13 +22,7 @@ import org.apache.spark.sql.functions._
   * variant tests uniformity of the hash-random field on the 10k bin edges
   * so the arithmetic stays exact-int + one division).
   */
-object Stats {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object Stats extends Gates {
 
   // classification A: n_chars reclass (5 classes); B: md5-derived class.
   private val classA =
@@ -140,7 +134,7 @@ object Stats {
       "a13 * (a11 - l3) + a23 * a12 + (a33 - l2) * a13 AS v3 FROM e7), " +
       "ln0 AS (SELECT *, sqrt(v1 * v1 + v2 * v2 + v3 * v3) AS vn, " +
       "CASE WHEN v1 < 0.0e0 THEN -1.0e0 ELSE 1.0e0 END AS sg FROM ld)"
-    s"${pagesWith(d)}, $layers, $wide, $sums, $covs, $eig1, $load " +
+    s"${Geo.pagesWith(d)}, $layers, $wide, $sums, $covs, $eig1, $load " +
       "SELECT n, round(l1, 6) AS lambda1, round(l2, 6) AS lambda2, round(l3, 6) AS lambda3, " +
       "round(l1 / (l1 + l2 + l3), 6) AS explained1, " +
       "round(sg * v1 / vn, 6) AS load1, round(sg * v2 / vn, 6) AS load2, " +
@@ -166,7 +160,7 @@ object Stats {
     val detA = "(sz * (sxx * syy - sxy * sxy) - sx * (sxz * syy - sxy * syz) + sy * (sxz * sxy - sxx * syz))"
     val detB = "(n * (sxz * syy - sxy * syz) - sz * (sx * syy - sxy * sy) + sy * (sx * syz - sxz * sy))"
     val detC = "(n * (sxx * syz - sxz * sxy) - sx * (sx * syz - sxz * sy) + sz * (sx * sxy - sxx * sy))"
-    s"${pagesWith(d)}, ${densityG(d, 6)}, $ag " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, $ag " +
       s"SELECT n, cast($detA as double) / cast($det as double) AS coef_a, " +
       s"cast($detB as double) / cast($det as double) AS coef_b, " +
       s"cast($detC as double) / cast($det as double) AS coef_c FROM ag"
@@ -177,7 +171,7 @@ object Stats {
     * integers until one division per edge. */
   private def ksSql(d: Dialect): String = {
     val u = s"${d.md5Bits(d.toStr("ix * 1000000 + iy"), 1)} / 4294967296.0e0"
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       s"uu AS (SELECT cast(floor(($u) * 10000.0e0) as bigint) AS bin FROM g), " +
       "h AS (SELECT bin, count(*) AS c FROM uu GROUP BY bin), " +
       "cm AS (SELECT bin, sum(c) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM h), " +
@@ -196,7 +190,7 @@ object Stats {
     val b = "(cast(n as double) * cast(sxy as double) - cast(sx as double) * cast(sy as double)) / " +
       "(cast(n as double) * cast(sxx as double) - cast(sx as double) * cast(sx as double))"
     val r2num = "(cast(n as double) * cast(sxy as double) - cast(sx as double) * cast(sy as double))"
-    s"${pagesWith(d)}, $en, $zh, " +
+    s"${Geo.pagesWith(d)}, $en, $zh, " +
       "j AS (SELECT x, y FROM en JOIN zh ON en.ix = zh.ix AND en.iy = zh.iy), " +
       "ag AS (SELECT count(*) AS n, cast(sum(x) as bigint) AS sx, cast(sum(y) as bigint) AS sy, " +
       "cast(sum(x * y) as bigint) AS sxy, cast(sum(x * x) as bigint) AS sxx, " +
@@ -215,7 +209,7 @@ object Stats {
       "count(*) AS x FROM pages WHERE lang = 'en' GROUP BY 1, 2)"
     val zh = s"zh AS (SELECT ${Geo.ix(d, "lon", 5)} AS ix, ${Geo.iy(d, "lat", 5)} AS iy, " +
       "count(*) AS y FROM pages WHERE lang = 'zh' GROUP BY 1, 2)"
-    s"${pagesWith(d)}, $en, $zh, " +
+    s"${Geo.pagesWith(d)}, $en, $zh, " +
       "j AS (SELECT x, y FROM en JOIN zh ON en.ix = zh.ix AND en.iy = zh.iy) " +
       "SELECT count(*) AS n, sqrt(cast(sum((x - y) * (x - y)) as double) / cast(count(*) as double)) AS rmse " +
       "FROM j"
@@ -223,7 +217,7 @@ object Stats {
 
   /** RescaleValueRange: linear rescale of the density values to [0, 100]. */
   private def rescaleSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "ext AS (SELECT min(v) AS mn, max(v) AS mx FROM g) " +
       "SELECT ix, iy, cast(v - mn as double) * 100.0e0 / cast(mx - mn as double) AS v_scaled " +
       "FROM g, ext ORDER BY ix, iy"

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, SparkD}
+import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * a loop here so each fill shares the asserted-convergence machinery).
   * The focal mean is the offset-explode equi-join (no range join).
   */
-object Stochastic {
+object Stochastic extends Gates {
 
   private val K = 4
   private val S = 6 // error-amplitude scale (calibrated, see scaladoc)

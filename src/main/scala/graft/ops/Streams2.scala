@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.DuckD
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * are carried as (cardinal, diagonal) INTEGER step counts to the final
   * `nc + nd·√2` expression, so no double chains cross rounds.
   */
-object Streams2 {
+object Streams2 extends Gates {
 
   import Dem.{lenOf, sqrt2}
 

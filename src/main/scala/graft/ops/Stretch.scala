@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,13 +41,7 @@ import org.apache.spark.sql.functions._
   * reference's own bounded-histogram discipline). No global-order windows
   * on the Spark side.
   */
-object Stretch {
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
+object Stretch extends Gates {
 
   private val tones = 256
   private val clipPct = 2.0
@@ -68,7 +62,7 @@ object Stretch {
   // ---- shared-builder stretches -------------------------------------------
 
   private def minMaxSql(d: Dialect): String =
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "ext AS (SELECT min(v) AS mn, max(v) AS mx FROM g) " +
       s"SELECT ix, iy, ${toneMapE("cast(mn as double)", "cast(mx - mn as double)")} AS v_mm " +
       "FROM g, ext ORDER BY ix, iy"
@@ -78,7 +72,7 @@ object Stretch {
     val sd = "sqrt((cast(q as double) - cast(s as double) * cast(s as double) / cast(n as double)) / (cast(n as double) - 1.0e0))"
     val mn = s"(($mean) - ($sd) * ${Lit.d(clipSd)})"
     val range = s"((($mean) + ($sd) * ${Lit.d(clipSd)}) - ($mn))"
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "st AS (SELECT cast(sum(v) as bigint) AS s, cast(sum(v * v) as bigint) AS q, count(*) AS n FROM g) " +
       s"SELECT ix, iy, ${toneMapE(mn, range)} AS v_sd FROM g, st ORDER BY ix, iy"
   }
@@ -87,7 +81,7 @@ object Stretch {
     val u = "((cast(v as double) - cast(mn as double)) / cast(mx - mn as double))"
     val sig = s"(1.0e0 / (1.0e0 + exp(${Lit.d(gain)} * (${Lit.d(cutoff)} - $u))) - ${Lit.d(sigA)}) / ${Lit.d(sigB)}"
     val out = s"floor(least(greatest($sig, 0.0e0), 1.0e0) * ${Lit.d(tones.toDouble)})"
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "ext AS (SELECT min(v) AS mn, max(v) AS mx FROM g) " +
       s"SELECT ix, iy, least($out, ${Lit.d(tones - 1.0)}) AS v_sig FROM g, ext ORDER BY ix, iy"
   }
@@ -105,7 +99,7 @@ object Stretch {
     val aa = s"(($h - $l) / (($bigH - $bigL) * ($bigH + $bigL - 2.0e0 * bcoef)))"
     val cc = s"($l - acoef * (($bigL - bcoef) * ($bigL - bcoef)))"
     val out = "least(greatest(acoef * ((cast(v as double) - bcoef) * (cast(v as double) - bcoef)) + ccoef, 0.0e0), 255.0e0)"
-    s"${pagesWith(d)}, ${densityG(d, 6)}, " +
+    s"${Geo.pagesWith(d)}, ${Geo.densityCte(d, 6)}, " +
       "st0 AS (SELECT cast(sum(v) as bigint) AS sm, cast(sum(v * v) as bigint) AS q, " +
       "count(*) AS n, min(v) AS mn, max(v) AS mx FROM g), " +
       s"st1 AS (SELECT *, $bb AS bcoef FROM st0), " +
@@ -142,7 +136,7 @@ object Stretch {
 
   private def pctDuck: String = {
     // cumulative histogram over distinct values (oracle side may window)
-    s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+    s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
       "h AS (SELECT v, count(*) AS c FROM g GROUP BY v), " +
       "tot AS (SELECT cast(sum(c) as bigint) AS n FROM h), " +
       s"tt AS (SELECT cast((${Lit.d(clipPct)} / 100.0e0 * cast(n as double)) as bigint) AS t, n FROM tot), " +
@@ -210,7 +204,7 @@ object Stretch {
     }.mkString(", ")
     val xval = "CASE WHEN m.i IS NULL THEN 3.0e0 WHEN m.i = 0 THEN r.x " +
       "WHEN r.rcp <> r.rc THEN r.xp + ((r.x - r.xp) * ((m.p - r.rcp) / (r.rc - r.rcp))) ELSE r.xp END"
-    s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+    s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
       s"ref(i, x, rc, xp, rcp) AS (VALUES $refRows), " +
       "h AS (SELECT v, count(*) AS c FROM g GROUP BY v), " +
       "tot AS (SELECT cast(sum(c) as bigint) AS n FROM h), " +

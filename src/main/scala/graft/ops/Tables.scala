@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.core.{Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Input-table access. All parquet tables of an sf dir are registered as
@@ -20,8 +19,9 @@ object Tables {
   // (timing build apart from execute, pages-based headline queries spent
   // 0.65-1.4 s in build vs 0.13 s for the memoized-free dedup/ann paths).
   // The cache stores the lazy DataFrame (a logical plan — NO data, NO
-  // results), keyed per live session so a new session never reuses plans
-  // from a stopped one. Every action still scans the parquet files.
+  // results), keyed per session so a session never reuses another's plans;
+  // dropStopped evicts the entries of stopped sessions. Every action still
+  // scans the parquet files.
   private val dfCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   // current registered dir PER SESSION: registration must re-point the
@@ -37,15 +37,17 @@ object Tables {
       names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // single-generation eviction (the Dem.memo discipline): only the
-    // current session's entries are retained, so stopped sessions' plans
-    // are never pinned by the cache. The map is ≤ #tables entries, so the
-    // sweep is trivial.
-    dfCache.keySet.removeIf(k => k._1 ne spark)
-    registeredDir.keySet.removeIf(k => k ne spark)
+    dropStopped(dfCache)(_._1)
+    dropStopped(registeredDir)(identity)
     dfCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
       k => k._1.read.parquet(k._2))
   }
+
+  /** The eviction rule of the session-keyed plan caches: drop the entries
+    * of sessions whose SparkContext is stopped. Live sessions never evict
+    * each other, and a stopped session's plans are never pinned. */
+  private[ops] def dropStopped[K](cache: java.util.Map[K, _])(session: K => SparkSession): Unit =
+    cache.keySet.removeIf(k => session(k).sparkContext.isStopped)
 
   /** Scale-adaptive parallelism rescue for expensive per-row work (guide
     * §2.2/§2.5 "input skew: one huge unsplittable file"): the fixture

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, SparkD}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * to 6 decimals (hillshade to its integer scale) to absorb libm ulp
   * differences between JVM and DuckDB.
   */
-object Terrain {
+object Terrain extends Gates {
 
   // n[c] offsets in (dx, dyNorth) form: c -> (d_x[c], -d_y[c])
   private val offsets: Seq[(Int, Int)] =
@@ -82,21 +82,14 @@ object Terrain {
 
   // ---- DuckDB twins -----------------------------------------------------
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
   private[ops] def duckFxy(res: Int = 6): String = {
-    val g = s"g AS (SELECT ${Geo.ix(DuckD, "lon", res)} AS ix, " +
-      s"${Geo.iy(DuckD, "lat", res)} AS iy, count(*) AS v FROM pages GROUP BY 1, 2)"
-    val h = "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, " +
-      "n.v AS nv FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 " +
-      "AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
     val ms = offsets.zipWithIndex.map { case ((dx, dy), c) =>
       s"max(CASE WHEN dx = $dx AND dy = $dy THEN nv END) AS m$c"
     }.mkString(", ")
     val ag = s"ag AS (SELECT ix, iy, max(v) AS z, $ms FROM h GROUP BY ix, iy)"
     val nbt = s"nbt AS (SELECT ix, iy, ${nbSelects.mkString(", ")} FROM ag)"
     val fxy = s"fxy AS (SELECT ix, iy, $fyE AS fy, $fxE AS fx FROM nbt)"
-    s"$pagesWith, $g, $h, $ag, $nbt, $fxy"
+    s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, res)}, ${Focal.duckHaloD}, $ag, $nbt, $fxy"
   }
 
   def oracles: Map[String, String] = Map(

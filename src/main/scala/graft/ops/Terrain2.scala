@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,31 +18,20 @@ import org.apache.spark.sql.functions._
   *   - DiffFromMeanElev (diff_from_mean_elev.rs): z − µ.
   *   - RuggednessIndex (ruggedness_index.rs:233-246): √(Σ(zn−z)²/n) over
   *     the present 8-neighbours.
-  *   - NumDownslope/UpslopeNeighbours (num_downslope_neighbours.rs
-  *     :203-209): count of present neighbours strictly below/above z.
   *   - ElevPercentile (elev_percentile.rs semantics): 100·#(window values
   *     < z)/#window — the exact small-window form of the reference's
   *     binned histogram percentile.
   *
   * All integer-exact sums; the only doubles are the final closed forms.
+  * NumDownslope/UpslopeNeighbours are Hydro3's gates, on the Dem.dem frame.
   */
-object Terrain2 {
+object Terrain2 extends Gates {
 
   private val deg100 = Lit.d(180.0 / math.Pi) + " * 100.0e0"
 
   // Terrain.scala neighbour convention: c → (d_x[c], −d_y[c])
   private val offsets: Seq[(Int, Int)] =
     Seq((1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1), (0, 1))
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
-  private def densityG(d: Dialect, res: Int): String =
-    s"g AS (SELECT ${Geo.ix(d, "lon", res)} AS ix, ${Geo.iy(d, "lat", res)} AS iy, " +
-      s"count(*) AS v FROM pages GROUP BY 1, 2)"
-
-  private val duckHalo1 =
-    "h AS (SELECT c.ix, c.iy, c.v, n.ix - c.ix AS dx, n.iy - c.iy AS dy, n.v AS nv " +
-      "FROM g c JOIN g n ON n.ix BETWEEN c.ix - 1 AND c.ix + 1 AND n.iy BETWEEN c.iy - 1 AND c.iy + 1)"
 
   private def aggDefs: Seq[(String, String)] =
     Seq(
@@ -52,8 +41,6 @@ object Terrain2 {
       "q" -> "cast(sum(nv * nv) as bigint)",
       "ss8" -> "cast(sum(CASE WHEN NOT (dx = 0 AND dy = 0) THEN (nv - v) * (nv - v) ELSE 0 END) as bigint)",
       "n8" -> "cast(sum(CASE WHEN NOT (dx = 0 AND dy = 0) THEN 1 ELSE 0 END) as bigint)",
-      "n_dn" -> "cast(sum(CASE WHEN NOT (dx = 0 AND dy = 0) AND nv < v THEN 1 ELSE 0 END) as bigint)",
-      "n_up" -> "cast(sum(CASE WHEN NOT (dx = 0 AND dy = 0) AND nv > v THEN 1 ELSE 0 END) as bigint)",
       "n_less" -> "cast(sum(CASE WHEN nv < v THEN 1 ELSE 0 END) as bigint)",
       "wmn" -> "min(nv)",
       "wmx" -> "max(nv)"
@@ -127,8 +114,6 @@ object Terrain2 {
       "cast(z as double) - cast(s as double) / cast(n as double) AS diff"),
     ("ruggedness_index",
       "CASE WHEN n8 > 0 THEN sqrt(cast(ss8 as double) / cast(n8 as double)) END AS tri"),
-    ("num_downslope_neighbours", "n_dn AS n_downslope"),
-    ("num_upslope_neighbours", "n_up AS n_upslope"),
     ("elev_percentile",
       "100.0e0 * cast(n_less as double) / cast(n as double) AS pctl"),
     // PercentElevRange (percent_elev_range.rs:316-325): windowed
@@ -177,7 +162,7 @@ object Terrain2 {
 
   def oracles: Map[String, String] = {
     val aggSql = aggDefs.map { case (nm, e) => s"$e AS $nm" }.mkString(", ")
-    val base = s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, $duckHalo1, " +
+    val base = s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, ${Focal.duckHaloD}, " +
       s"ag AS (SELECT ix, iy, $aggSql FROM h GROUP BY ix, iy)"
     val curvBase = s"$base, nbt AS (SELECT ix, iy, ${partials.mkString(", ")} FROM ag), " +
       s"cp AS (SELECT ix, iy, ${curvPre.mkString(", ")} FROM nbt)"
@@ -191,7 +176,7 @@ object Terrain2 {
       "pennock_landform_class" ->
         s"$pennockBase SELECT ix, iy, $pennockE AS landform FROM cp ORDER BY ix, iy",
       "elev_relative_to_min_max" ->
-        (s"${pagesWith(DuckD)}, ${densityG(DuckD, 6)}, " +
+        (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
           "ext AS (SELECT min(v) AS mn, max(v) AS mx FROM g) " +
           "SELECT ix, iy, cast(v - mn as double) / cast(mx - mn as double) * 100.0e0 AS rel_elev " +
           "FROM g, ext ORDER BY ix, iy"))

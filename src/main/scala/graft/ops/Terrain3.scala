@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     of the reference's RNG (derivation difference doc'd, operator
   *     semantics — sum of 16 projected 1-D processes — preserved).
   */
-object Terrain3 {
+object Terrain3 extends Gates {
 
   import Dem.lenOf
 
@@ -101,8 +101,6 @@ object Terrain3 {
   private def Wd(extra: String*): String =
     (Seq(Dem.duckDemCtes) ++ extra).mkString("WITH RECURSIVE ", ", ", " ")
 
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
-
   def oracles: Map[String, String] = Map(
 
     "max_downslope_elev_change" -> (Wd() +
@@ -131,8 +129,7 @@ object Terrain3 {
       "ELSE 0.0e0 END AS ds_index FROM fin WHERE rn = 1 ORDER BY ix, iy"),
 
     "turning_bands" ->
-      (s"${pagesWith(DuckD)}, g AS (SELECT ${Geo.ix(DuckD, "lon", 6)} AS ix, " +
-        s"${Geo.iy(DuckD, "lat", 6)} AS iy, count(*) AS v FROM pages GROUP BY 1, 2) " +
+      (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)} " +
         s"SELECT ix, iy, ${tbExpr(DuckD)} AS tb_z FROM g ORDER BY ix, iy")
   )
 }

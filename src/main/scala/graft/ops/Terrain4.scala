@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Last terrain trio (terrain_analysis/feature_preserving_denoise.rs,
@@ -26,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     reference's progressive filter is this min-composition evaluated
   *     with its hill-flattening tolerance.
   */
-object Terrain4 {
+object Terrain4 extends Gates {
 
   private val G = Dem.G
   private val T = "0.92e0" // normal-dot feature threshold

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +32,7 @@ import org.apache.spark.sql.functions._
   * citations there); trig outputs rounded to 6 decimals per the twin-SQL
   * parity rule.
   */
-object TerrainIdx {
+object TerrainIdx extends Gates {
 
   // n[c] offsets in (dx, dyNorth) form — Terrain.scala:31
   private val offsets: Seq[(Int, Int)] =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, SparkD}
+import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (length(t) - length(replace(t, m, ''))) / length(m), which is identical
   * SQL on both engines.
   */
-object Text {
+object Text extends Gates {
 
   /** occurrences of literal `m` in `t` via the replace trick; the double
     * division is exact (numerator is a multiple of length(m)) and `/` is
@@ -174,7 +174,7 @@ object Text {
       // DuckDB md5 takes VARCHAR only; it hashes the UTF-8 bytes, which is
       // exactly what Spark's md5(binary-encoded string) hashes.
       "multimodal_binary_meta" ->
-        (s"WITH pages AS (${graft.core.Geo.pagesCte(d)}) " +
+        (s"${graft.core.Geo.pagesWith(d)} " +
           "SELECT doc_id, octet_length(encode('<html><body>' || text || '</body></html>')) AS byte_len, " +
           "md5('<html><body>' || text || '</body></html>') AS content_hash " +
           "FROM pages ORDER BY doc_id")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{Dialect, DuckD, Geo, Lit, SparkD}
+import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * radius/centre-cell bounds), independent of the partition structure —
   * proving the halo construction lossless on the fixture.
   */
-object Tin {
+object Tin extends Gates {
 
   private val x0 = -74.05; private val y0 = 40.65
   private val cw = 0.1 // coarse partition cell width (2×2)
@@ -41,8 +41,6 @@ object Tin {
   private val fw = 0.2 / nFine
 
   private val nycBox = "lon >= -74.05e0 AND lon <= -73.85e0 AND lat >= 40.65e0 AND lat <= 40.85e0"
-
-  private def pagesWith(d: Dialect) = s"WITH pages AS (${Geo.pagesCte(d)})"
 
   // circumcentre of (a, b, c) — identical op order both engines
   private val dE = "2.0e0 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))"
@@ -175,11 +173,11 @@ object Tin {
   def oracles: Map[String, String] = Map(
 
     "construct_vector_tin" ->
-      (s"${pagesWith(DuckD)}, $duckTriCtes " +
+      (s"${Geo.pagesWith(DuckD)}, $duckTriCtes " +
         s"SELECT a, b, c, round(abs($detE) / 2.0e0, 10) AS area FROM tri ORDER BY a, b, c"),
 
     "voronoi_diagram" ->
-      (s"${pagesWith(DuckD)}, $duckTriCtes, " +
+      (s"${Geo.pagesWith(DuckD)}, $duckTriCtes, " +
         "edges AS (SELECT a AS e1, b AS e2, ux, uy FROM tri " +
         "UNION ALL SELECT b, c, ux, uy FROM tri UNION ALL SELECT a, c, ux, uy FROM tri), " +
         "ev AS (SELECT e1, e2, ux, uy, " +
@@ -193,7 +191,7 @@ object Tin {
 
     "tin_gridding" -> {
       val d = DuckD
-      s"${pagesWith(d)}, " +
+      s"${Geo.pagesWith(d)}, " +
         s"pts AS (SELECT doc_id AS id, lon AS x, lat AS y, cast(n_chars as double) AS z FROM pages WHERE $nycBox), " +
         "t0 AS (SELECT a.id AS a, b.id AS b, c.id AS c, a.x AS ax, a.y AS ay, a.z AS za, " +
         "b.x AS bx, b.y AS by, b.z AS zb, c.x AS cx, c.y AS cy, c.z AS zc, " +

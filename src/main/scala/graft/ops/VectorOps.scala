@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Lit, Zones}
+import graft.core.{DuckD, Gates, Geo, Lit, Zones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * both engines (Spark `aggregate` HOF; DuckDB list_reduce over literal
   * arrays generated from the same Ring data), so no rounding is needed.
   */
-object VectorOps {
+object VectorOps extends Gates {
 
   /** Spark rings DF (fid, ring_id, is_hole_flag, xs, ys). */
   private[ops] def ringsDF(s: SparkSession): DataFrame = {
@@ -339,7 +339,7 @@ object VectorOps {
         "lon AS x1, lat AS y1, " +
         s"lead(lon) OVER (ORDER BY $orderCol) AS x2, " +
         s"lead(lat) OVER (ORDER BY $orderCol) AS y2 FROM nyc"
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
+    s"${Geo.pagesWith(d)}, " +
       s"nyc AS (SELECT doc_id, lon, lat FROM pages WHERE $nycBox), " +
       s"l1 AS (SELECT * FROM (${segs("doc_id")}) t WHERE x2 IS NOT NULL), " +
       s"l2 AS (SELECT * FROM (${segs("lat, doc_id")}) t WHERE x2 IS NOT NULL), " +
@@ -364,7 +364,7 @@ object VectorOps {
         "lon AS x1, lat AS y1, " +
         s"lead(lon) OVER (ORDER BY $orderCol) AS x2, " +
         s"lead(lat) OVER (ORDER BY $orderCol) AS y2 FROM nyc"
-    s"WITH pages AS (${Geo.pagesCte(d)}), " +
+    s"${Geo.pagesWith(d)}, " +
       s"nyc AS (SELECT doc_id, lon, lat FROM pages WHERE $nycBox), " +
       "p1 AS (SELECT row_number() OVER (ORDER BY doc_id) AS sid, lon, lat FROM nyc), " +
       s"l1 AS (SELECT * FROM (${segsQ("doc_id")}) t WHERE x2 IS NOT NULL), " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Geo, Zones}
+import graft.core.{DuckD, Gates, Geo, Zones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle matches bit-for-bit with no tolerance. The reference's
   * stddev is sample (n−1) — extract_statistics.rs:388.
   */
-object Zonal {
+object Zonal extends Gates {
 
   /** Final-select stats over pre-aggregated (s=sum, q=sumsq, n, mn, mx). */
   val statsSelect: Seq[String] = Seq(
@@ -98,18 +98,16 @@ object Zonal {
       s"SELECT $f AS fid, $cols FROM pages WHERE ${Zones.insideZoneSql(f, "lon", "lat")}"
     }.mkString("(", " UNION ALL ", ")")
 
-  private val pagesWith = s"WITH pages AS (${Geo.pagesCte(DuckD)})"
-
   def oracles: Map[String, String] = Map(
     "zonal_statistics" ->
-      (s"$pagesWith SELECT fid, ${statsSelect.mkString(", ")} FROM " +
+      (s"${Geo.pagesWith(DuckD)} SELECT fid, ${statsSelect.mkString(", ")} FROM " +
         s"(SELECT fid, $statsAgg FROM ${zonePagesSql("doc_id, n_chars")} zp GROUP BY fid) t ORDER BY fid"),
     "centroid_vector" ->
-      (s"$pagesWith SELECT fid, round(sum(lon) / cast(count(*) as double), 6) AS cx, " +
+      (s"${Geo.pagesWith(DuckD)} SELECT fid, round(sum(lon) / cast(count(*) as double), 6) AS cx, " +
         s"round(sum(lat) / cast(count(*) as double), 6) AS cy FROM " +
         s"${zonePagesSql("lon, lat")} zp GROUP BY fid ORDER BY fid"),
     "medoid" ->
-      (s"$pagesWith, zp AS (SELECT * FROM ${zonePagesSql("doc_id, lon, lat")} t), " +
+      (s"${Geo.pagesWith(DuckD)}, zp AS (SELECT * FROM ${zonePagesSql("doc_id, lon, lat")} t), " +
         s"cent AS (SELECT fid, round(sum(lon) / cast(count(*) as double), 6) AS cx, " +
         s"round(sum(lat) / cast(count(*) as double), 6) AS cy FROM zp GROUP BY fid), " +
         s"d AS (SELECT zp.fid, doc_id, (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) AS d2 " +
@@ -117,7 +115,7 @@ object Zonal {
         s"r AS (SELECT fid, doc_id, d2, row_number() OVER (PARTITION BY fid ORDER BY d2, doc_id) AS rn FROM d) " +
         s"SELECT fid, doc_id, d2 FROM r WHERE rn = 1 ORDER BY fid"),
     "zone_footprint" ->
-      (s"$pagesWith SELECT fid, min(lon) AS min_x, max(lon) AS max_x, " +
+      (s"${Geo.pagesWith(DuckD)} SELECT fid, min(lon) AS min_x, max(lon) AS max_x, " +
         s"min(lat) AS min_y, max(lat) AS max_y FROM " +
         s"${zonePagesSql("lon, lat")} zp GROUP BY fid ORDER BY fid")
   )
