@@ -1,7 +1,6 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Iceberg-style committed writes: staged data + a snapshot summary with
@@ -59,9 +58,7 @@ object Commit {
     val files = fs.listStatus(dir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
     val perFile = java.util.Arrays.stream(files.toArray).parallel().map[(String, Long)] { st =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, hconf))
-      try (st.getPath.toString, rd.getRecordCount) finally rd.close()
+      st.getPath.toString -> Parquet.footer(st, hconf).getBlocks.stream.mapToLong(_.getRowCount).sum
     }.collect(java.util.stream.Collectors.toList[(String, Long)])
       .toArray(Array.empty[(String, Long)]).toSeq.sortBy(_._1)
     val total = perFile.map(_._2).sum

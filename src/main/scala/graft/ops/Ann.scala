@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.{Dialect, DuckD, Gates, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.{Dialect, DuckD, Gates, Geo, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Colour-space ops over the en/zh/es density layers as R/G/B bands
   * (common cells only):

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object Cost extends Gates {
 
-  import Dem.{G, sqrt2}
+  import Dem.sqrt2
 
   private val srcRows = Seq((5L, 5L, 1L), (40L, 12L, 2L), (20L, 44L, 3L))
   private val dstRows = Seq((46L, 46L), (2L, 40L))

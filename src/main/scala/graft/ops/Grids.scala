@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.{Dialect, DuckD, Gates, Geo, Lit, SparkD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Vector grid generators with POLYGON output (gis_analysis/
   * create_hexagonal_vector_grid.rs:270-330 horizontal orientation,

@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   */
 object Hydro4 extends Gates {
 
-  import Dem.{G, lenOf, sqrt2}
+  import Dem.{G, lenOf}
 
   // reference direction order (d8_pointer.rs): i → (dx, dy)
   private val dirs: Seq[(Int, Int, Int)] =

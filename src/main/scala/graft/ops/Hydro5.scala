@@ -33,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Hydro5 extends Gates {
 
-  import Dem.G
-
   // breach geometry (reference row coords; our iy = −row)
   private val dxs = Seq(1, 1, 1, 0, -1, -1, -1, 0)
   private val dys = Seq(-1, 0, 1, 1, 1, 0, -1, -1)

@@ -163,8 +163,6 @@ object Hydro6 extends Gates {
         .orderBy("ix", "iy")),
 
     "raise_walls" -> ((s, dir) => {
-      val sp = s
-      import sp.implicits._
       Dem.dem(s, dir).createOrReplaceTempView("dem")
       s.sql(s"WITH ser AS (SELECT explode(sequence(0, ${G - 1})) AS t), " +
         s"wc AS (SELECT DISTINCT wx, wy FROM ($wallCellsSql)) " +

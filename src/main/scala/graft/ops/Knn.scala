@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.{DuckD, Gates, Geo, Lit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Cell-local kNN / nearest-neighbour / IDW via FRS-style bucket-ring joins.

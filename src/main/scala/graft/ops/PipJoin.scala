@@ -1,8 +1,8 @@
 package graft.ops
 
 import graft.core.{Geo, Ring, SparkD, Zones}
-import graft.expr.{Cells, Morton, PipAny, PointInPolygon}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.expr.{Cells, Morton, PipAny}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned point-in-polygon join (north-star operator #1).

@@ -33,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Singles extends Gates {
 
-  import Dem.G
-
   // ---- crispness --------------------------------------------------------
 
   private def crispness(d: Dialect): String = {

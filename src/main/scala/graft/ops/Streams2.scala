@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   */
 object Streams2 extends Gates {
 
-  import Dem.{lenOf, sqrt2}
+  import Dem.lenOf
 
   private val minLinkLen = "3.0e0" // RemoveShortStreams --min_length
 

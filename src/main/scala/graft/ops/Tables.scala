@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Input-table access. All parquet tables of an sf dir are registered as
@@ -12,18 +13,16 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Metadata memoization (guide §1/§6 "measure the overhead too"): every
-  // `spark.read.parquet` call re-lists the path and re-reads the footer on
-  // the DRIVER (~50-60 ms each), and `register` did that for all 10 tables
-  // on EVERY Tables.pages call — ~0.6 s of pure driver time per query build
-  // (timing build apart from execute, pages-based headline queries spent
-  // 0.65-1.4 s in build vs 0.13 s for the memoized-free dedup/ann paths).
-  // The cache stores the lazy DataFrame (a logical plan — NO data, NO
-  // results), keyed per session so a session never reuses another's plans;
-  // dropStopped evicts the entries of stopped sessions. Every action still
-  // scans the parquet files.
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // Metadata memoization (guide §1/§6 "measure the overhead too"): opening
+  // a table lists its path and reads one footer on the driver
+  // (graft.io.Parquet, no Spark job; `spark.read.parquet` runs a one-task
+  // schema-inference job instead), and `register` opens all 10 tables on
+  // EVERY Tables.pages call. The cache stores the lazy scan (a logical
+  // plan and the listed files — NO data, NO results), keyed per session so
+  // a session never reuses another's plans; dropStopped evicts the entries
+  // of stopped sessions. Every action still scans the parquet files.
+  private val scans =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Parquet.Scan]()
   // current registered dir PER SESSION: registration must re-point the
   // views whenever the dir CHANGES (a memo keyed on (session, dir) alone
   // would silently leave views at the previous dir when a session
@@ -36,11 +35,13 @@ object Tables {
     if (registeredDir.put(spark, sfDir) != sfDir)
       names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    dropStopped(dfCache)(_._1)
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    scan(spark, sfDir, name).df
+
+  private def scan(spark: SparkSession, sfDir: String, name: String): Parquet.Scan = {
+    dropStopped(scans)(_._1)
     dropStopped(registeredDir)(identity)
-    dfCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      k => k._1.read.parquet(k._2))
+    scans.computeIfAbsent((spark, s"$sfDir/$name.parquet"), k => Parquet.scan(k._1, k._2))
   }
 
   /** The eviction rule of the session-keyed plan caches: drop the entries
@@ -54,21 +55,23 @@ object Tables {
     * tables are ONE parquet file each, so a scan is ONE split and any
     * per-row digest/geometry work downstream of it runs on a single core.
     * When (and only when) the file layout yields fewer splits than the
-    * session's parallelism, hash-repartition by `key` — a tiny shuffle at
-    * fixture scale. At corpus scale the scan already has >= cores splits
-    * and this is the identity, so the heavy payload is never shuffled
-    * (guide §8: move big rows once). */
-  private[ops] def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
+    * session's parallelism, hash-repartition table `name` by `key` — a
+    * tiny shuffle at fixture scale. At corpus scale the scan already has
+    * >= cores splits and this is the identity, so the heavy payload is
+    * never shuffled (guide §8: move big rows once). */
+  private[ops] def spread(spark: SparkSession, sfDir: String, name: String,
+                          key: org.apache.spark.sql.Column): DataFrame = {
+    val t = scan(spark, sfDir, name)
+    val want = spark.sparkContext.defaultParallelism
     // gate on SCAN SPLITS, not file count (review r06): a corpus stored as
     // a few huge parquet files still yields many maxPartitionBytes splits,
     // and shuffling its text payload would be exactly the corpus-scale
-    // regression this helper must never cause.
-    val splits = df.rdd.getNumPartitions
+    // regression this helper must never cause. The count comes from the
+    // listed files (Parquet.Scan.splits), not from planning the scan.
     // explicit numPartitions: an N-less repartition(col) is a coalescable
     // shuffle under AQE, which re-merges the tiny fixture exchange back to
     // ONE partition and defeats the parallelism rescue entirely.
-    if (splits >= want) df else df.repartition(want, key)
+    if (t.splits >= want) t.df else t.df.repartition(want, key)
   }
 
   /** pages(doc_id, url, text, lang, source, n_chars, lat, lon) — geocoded

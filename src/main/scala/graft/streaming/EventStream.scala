@@ -25,7 +25,7 @@ object EventStream {
     * `sfDir` is the table directory; the file source requires a directory
     * basePath, so the single-file table is selected with a glob filter. */
   def hourlyCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = graft.io.Parquet.read(spark, s"$sfDir/events.parquet").schema
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
