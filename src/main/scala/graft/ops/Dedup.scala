@@ -70,7 +70,7 @@ object Dedup extends Gates {
     // per-row expression and every consumer aggregates/sorts on integer
     // keys (order-insensitive; CappedList overflow drops whole buckets
     // regardless of member order).
-    Tables.spread(s, dir, "documents", col("doc_id"))
+    Tables.spread(Tables.table(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), graft.expr.MinHash.minhash16(col("text")).as("mh"))
       .selectExpr(("doc_id" +: (0 until nHashes).map(j => s"mh[$j] AS m$j")): _*)
 
@@ -109,7 +109,7 @@ object Dedup extends Gates {
     // Tables.spread: parallelize the token explode + 2 md5/token off the
     // single-file scan split (same rationale as `signatures`); the sign
     // sums are integer aggregates — order-insensitive.
-    val toks = Tables.spread(s, dir, "documents", col("doc_id"))
+    val toks = Tables.spread(Tables.table(s, dir, "documents"), col("doc_id"))
       .select(col("doc_id"), explode(expr(SparkD.tokens("text"))).as("tok"))
       .withColumn("th", expr(SparkD.md5Bits("tok", 1)))
       .withColumn("th2", expr(SparkD.md5Bits("tok", 9)))
@@ -160,7 +160,7 @@ object Dedup extends Gates {
       // Tables.spread: the shingle explode (~290 rows/doc) otherwise runs
       // on the single scan split; counts/joins downstream are
       // order-insensitive.
-      val shs = Tables.spread(s, dir, "documents", col("doc_id"))
+      val shs = Tables.spread(Tables.table(s, dir, "documents"), col("doc_id"))
         .select(col("doc_id"), explode(expr(
           s"array_distinct(${SparkD.shingles("text")})")).as("sh"))
       val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("nsh"))

@@ -17,12 +17,12 @@ object Tables {
   // a table lists its path and reads one footer on the driver
   // (graft.io.Parquet, no Spark job; `spark.read.parquet` runs a one-task
   // schema-inference job instead), and `register` opens all 10 tables on
-  // EVERY Tables.pages call. The cache stores the lazy scan (a logical
-  // plan and the listed files — NO data, NO results), keyed per session so
-  // a session never reuses another's plans; dropStopped evicts the entries
-  // of stopped sessions. Every action still scans the parquet files.
-  private val scans =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Parquet.Scan]()
+  // EVERY Tables.pages call. The cache stores the lazy DataFrame (a logical
+  // plan — NO data, NO results), keyed per session so a session never
+  // reuses another's plans; dropStopped evicts the entries of stopped
+  // sessions. Every action still scans the parquet files.
+  private val dfCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   // current registered dir PER SESSION: registration must re-point the
   // views whenever the dir CHANGES (a memo keyed on (session, dir) alone
   // would silently leave views at the previous dir when a session
@@ -35,13 +35,10 @@ object Tables {
     if (registeredDir.put(spark, sfDir) != sfDir)
       names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    scan(spark, sfDir, name).df
-
-  private def scan(spark: SparkSession, sfDir: String, name: String): Parquet.Scan = {
-    dropStopped(scans)(_._1)
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    dropStopped(dfCache)(_._1)
     dropStopped(registeredDir)(identity)
-    scans.computeIfAbsent((spark, s"$sfDir/$name.parquet"), k => Parquet.scan(k._1, k._2))
+    dfCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"), k => Parquet.read(k._1, k._2))
   }
 
   /** The eviction rule of the session-keyed plan caches: drop the entries
@@ -55,23 +52,23 @@ object Tables {
     * tables are ONE parquet file each, so a scan is ONE split and any
     * per-row digest/geometry work downstream of it runs on a single core.
     * When (and only when) the file layout yields fewer splits than the
-    * session's parallelism, hash-repartition table `name` by `key` — a
-    * tiny shuffle at fixture scale. At corpus scale the scan already has
-    * >= cores splits and this is the identity, so the heavy payload is
-    * never shuffled (guide §8: move big rows once). */
-  private[ops] def spread(spark: SparkSession, sfDir: String, name: String,
-                          key: org.apache.spark.sql.Column): DataFrame = {
-    val t = scan(spark, sfDir, name)
-    val want = spark.sparkContext.defaultParallelism
+    * session's parallelism, hash-repartition by `key` — a tiny shuffle at
+    * fixture scale. At corpus scale the scan already has >= cores splits
+    * and this is the identity, so the heavy payload is never shuffled
+    * (guide §8: move big rows once). */
+  private[ops] def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
+    val want = df.sparkSession.sparkContext.defaultParallelism
     // gate on SCAN SPLITS, not file count (review r06): a corpus stored as
     // a few huge parquet files still yields many maxPartitionBytes splits,
     // and shuffling its text payload would be exactly the corpus-scale
-    // regression this helper must never cause. The count comes from the
-    // listed files (Parquet.Scan.splits), not from planning the scan.
+    // regression this helper must never cause. `df` is the memoized table
+    // frame and `Dataset.rdd` is a lazy val, so the scan is planned for
+    // this count once per session and table, not once per call.
+    val splits = df.rdd.getNumPartitions
     // explicit numPartitions: an N-less repartition(col) is a coalescable
     // shuffle under AQE, which re-merges the tiny fixture exchange back to
     // ONE partition and defeats the parallelism rescue entirely.
-    if (t.splits >= want) t.df else t.df.repartition(want, key)
+    if (splits >= want) df else df.repartition(want, key)
   }
 
   /** pages(doc_id, url, text, lang, source, n_chars, lat, lon) — geocoded

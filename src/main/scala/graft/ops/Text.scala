@@ -110,7 +110,7 @@ object Text extends Gates {
       // Tables.spread: ~2 md5 digests per shingle per row — the heaviest
       // per-row text expression; parallelized off the single-file scan
       // split (per-row outputs, so results are partitioning-independent).
-      Tables.spread(s, dir, "documents", col("doc_id"))
+      Tables.spread(Tables.table(s, dir, "documents"), col("doc_id"))
         .withColumn("fp48", expr(SparkD.md5Bits("text", 1)) * expr("65536") +
           expr(s"${SparkD.md5Bits("text", 9)} % 65536"))
         .withColumn("min_shingle_hash", expr(

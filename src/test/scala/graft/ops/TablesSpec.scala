@@ -74,20 +74,4 @@ class TablesSpec extends SparkSpec {
     val want = intercept[Exception](spark.read.parquet(missing)).getClass
     assert(intercept[Exception](Parquet.read(spark, missing)).getClass == want)
   }
-
-  test("the listed split count equals the planned scan's, so spread decides as before") {
-    val corpus = Files.createTempDirectory("graft_corpus").resolve("c").toString
-    spark.range(0, 160000, 1, 16).selectExpr("id", "repeat(cast(id AS string), 20) AS text")
-      .write.parquet(corpus)
-    val paths = Seq("sf0.001", "sf0.01", "sf0.1")
-      .flatMap(d => Tables.names.map(n => s"${sf(d)}/$n.parquet")) :+ corpus
-    // the default split size, and one small enough to split every table
-    Seq(None, Some("256k")).foreach { maxBytes =>
-      val s = spark.newSession()
-      maxBytes.foreach(s.conf.set("spark.sql.files.maxPartitionBytes", _))
-      paths.foreach { p =>
-        assert(Parquet.scan(s, p).splits == s.read.parquet(p).rdd.getNumPartitions, s"$p at $maxBytes")
-      }
-    }
-  }
 }
