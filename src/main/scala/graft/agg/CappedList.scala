@@ -1,8 +1,14 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import java.nio.ByteBuffer
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.types._
 
 /** Bounded member collector for skew-capped bucket joins: accumulates ids
   * up to cap + 1 entries and then STOPS GROWING — a bucket that overflows
@@ -12,39 +18,81 @@ import org.apache.spark.sql.functions.udaf
   * member before the size filter discards them.
   *
   * The ≤cap result preserves multiset semantics (order immaterial for the
-  * pair explode, which normalizes with least/greatest).
+  * pair explode, which normalizes with least/greatest). A native aggregate
+  * over a primitive array that grows by doubling up to cap + 1 slots, so a
+  * one-member bucket holds a few longs, not cap + 1. A null id is skipped.
   */
-class CappedList(cap: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
+case class CappedList(child: Expression, cap: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[CappedList.State] with ImplicitCastInputTypes
+    with UnaryLike[Expression] {
   require(cap > 0, "Invalid CappedList cap.")
-  private val lim = cap + 1
 
-  override def zero: Array[Long] = Array.empty
+  override def inputTypes = Seq(LongType)
+  override def nullable: Boolean = true
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_capped"
 
-  override def reduce(buf: Array[Long], v: Long): Array[Long] =
-    if (buf.length >= lim) buf else buf :+ v
+  override def createAggregationBuffer(): CappedList.State = new CappedList.State(cap + 1)
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (a.length >= lim) a
-    else if (b.length >= lim) b
-    else {
-      val n = math.min(a.length + b.length, lim)
-      val out = new Array[Long](n)
-      System.arraycopy(a, 0, out, 0, a.length)
-      System.arraycopy(b, 0, out, a.length, n - a.length)
-      out
-    }
+  override def update(buf: CappedList.State, row: InternalRow): CappedList.State = {
+    val v = child.eval(row)
+    if (v != null) buf.add(v.asInstanceOf[Long])
+    buf
   }
 
-  override def finish(r: Array[Long]): Array[Long] = r
+  /** A full side wins (`buf` first); otherwise `input` is appended to `buf`
+    * up to cap + 1 entries. */
+  override def merge(buf: CappedList.State, input: CappedList.State): CappedList.State =
+    if (buf.full) buf
+    else if (input.full) input
+    else {
+      var j = 0
+      while (j < input.n && !buf.full) { buf.add(input.ids(j)); j += 1 }
+      buf
+    }
 
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  override def eval(buf: CappedList.State): Any =
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf.ids, buf.n))
+
+  override def serialize(buf: CappedList.State): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + 8 * buf.n).putInt(buf.n)
+    var j = 0
+    while (j < buf.n) { bb.putLong(buf.ids(j)); j += 1 }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): CappedList.State = {
+    val bb = ByteBuffer.wrap(bytes)
+    val s = new CappedList.State(cap + 1)
+    val n = bb.getInt
+    var j = 0
+    while (j < n) { s.add(bb.getLong); j += 1 }
+    s
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): CappedList = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CappedList = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): CappedList = copy(child = c)
 }
 
 object CappedList {
+  /** The first `lim` ids added. */
+  final class State(lim: Int) {
+    var ids = new Array[Long](math.min(lim, 4))
+    var n = 0
+
+    def full: Boolean = n >= lim
+
+    def add(v: Long): Unit = if (!full) {
+      if (n == ids.length) ids = java.util.Arrays.copyOf(ids, math.min(lim, 2 * n))
+      ids(n) = v
+      n += 1
+    }
+  }
+
   /** Column form: capped(cap)(idCol) → array<bigint> (≤ cap + 1 entries;
     * length > cap means the bucket overflowed and must be dropped). */
-  def capped(cap: Int)(id: Column): Column = udaf(new CappedList(cap)).apply(id)
+  def capped(cap: Int)(id: Column): Column =
+    Shim.column(CappedList(Shim.expression(id), cap).toAggregateExpression())
 }

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.core.{Dialect, DuckD, Gates, SparkD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.expr.ArrayKernels
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
@@ -18,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     spec: only same-bucket pairs are reported, both engines identically).
   *
   * Dot products accumulate left-to-right in DOUBLE on both engines
-  * (Spark `aggregate` over zip_with; DuckDB list_reduce) and scores are
+  * (Spark `graft_dot`; DuckDB list_reduce) and scores are
   * rounded to 6 decimals before ranking, with vec_id tie-breaks, so the
   * oracle comparison is exact.
   */
@@ -28,13 +29,15 @@ object Ann extends Gates {
   private val k = 10
   private val bucketCap = 1000 // max members per (band, bucket) — skew bound
 
-  /** Spark: L2R double dot product of two float arrays. */
-  private val sparkDot =
-    "aggregate(zip_with(ea, eb, (x, y) -> cast(x as double) * cast(y as double)), " +
-      "cast(0.0e0 as double), (acc, v) -> acc + v)"
+  /** Spark: L2R double dot product of two float arrays (`graft_dot`). */
+  private def dot(a: String, b: String): Column = ArrayKernels.dot(col(a), col(b))
+
+  /** Spark cosine score: round(ea·eb / (na · nb), 6). */
+  private def cosine(na: Column, nb: Column): Column =
+    round(dot("ea", "eb") / (na * nb), 6)
 
   /** DuckDB twin: list_reduce accumulates left-to-right starting from the
-    * first element — identical to Spark's aggregate with 0.0 seed, since
+    * first element — identical to graft_dot's 0.0 seed, since
     * 0.0 + p₁ ≡ p₁ in IEEE-754. */
   private val duckDot =
     "list_reduce(list_transform(list_zip(ea, eb), p -> p[1]::double * p[2]::double), " +
@@ -74,12 +77,12 @@ object Ann extends Gates {
     // the same operation order, so scores are bit-identical.
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("ea"))
-      .withColumn("na", expr(norm(sparkDot.replace("eb", "ea"))))
+      .withColumn("na", sqrt(dot("ea", "ea")))
     val c = emb.select(col("vec_id").as("nid"), col("embedding").as("eb"))
-      .withColumn("nb", expr(norm(sparkDot.replace("ea", "eb"))))
+      .withColumn("nb", sqrt(dot("eb", "eb")))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("nid") =!= col("qid"))
-      .withColumn("cos", expr(s"round(($sparkDot) / (na * nb), 6)"))
+      .withColumn("cos", cosine(col("na"), col("nb")))
     // bounded top-k on (−cos, nid): O(k) state per query, map-side
     // partials — no shuffle+sort of every scored candidate by qid.
     scored.groupBy("qid")
@@ -125,12 +128,12 @@ object Ann extends Gates {
           expr(lshBucketCoarse(SparkD, "embedding")).as("bucket"))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("ea"), col("bucket"))
-        .withColumn("na", expr(norm(sparkDot.replace("eb", "ea"))))
+        .withColumn("na", sqrt(dot("ea", "ea")))
       val c = emb.select(col("vec_id").as("nid"), col("embedding").as("eb"), col("bucket"))
-        .withColumn("nb", expr(norm(sparkDot.replace("ea", "eb"))))
+        .withColumn("nb", sqrt(dot("eb", "eb")))
       val scored = c.join(q, Seq("bucket"))
         .filter(col("nid") =!= col("qid"))
-        .withColumn("cos", expr(s"round(($sparkDot) / (na * nb), 6)"))
+        .withColumn("cos", cosine(col("na"), col("nb")))
       scored.groupBy("qid")
         .agg(graft.agg.TopKByDist.topK(k)(negate(col("cos")), col("nid")).as("tk"))
         .select(col("qid"), posexplode(col("tk")))
@@ -171,8 +174,7 @@ object Ann extends Gates {
       cand
         .join(emb.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
         .join(emb.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-        .withColumn("cos", expr(
-          s"round(($sparkDot) / (${norm(sparkDot.replace("eb", "ea"))} * ${norm(sparkDot.replace("ea", "eb"))}), 6)"))
+        .withColumn("cos", cosine(sqrt(dot("ea", "ea")), sqrt(dot("eb", "eb"))))
         .filter(col("cos") >= 0.95)
         .select("a", "b", "cos")
         .orderBy("a", "b")

@@ -147,9 +147,7 @@ object Dedup extends Gates {
       bandDf.groupBy("band", "h1", "h2")
         .agg(graft.agg.CappedList.capped(bucketCap)(col("doc_id")).as("ms"))
         .filter(size(col("ms")) <= bucketCap)
-        .select(explode(expr(
-          "flatten(transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms)), " +
-            "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))")).as("p"))
+        .select(explode(graft.expr.ArrayKernels.pairs(col("ms"))).as("p"))
         .select("p.a", "p.b").distinct()
         .orderBy("a", "b")
     }),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * The reference iterates the 3×3 pattern tables IN-PLACE in scan order —
   * cells see already-updated neighbours within a pass, making the result
   * depend on the scan direction. Here each pattern is applied
-  * SYNCHRONOUSLY (one halo join + aggregate over the whole mask per
+  * SYNCHRONOUSLY (one halo aggregate over the whole mask per
   * pattern, patterns in the reference's order, repeated until a full
   * 8-pattern round changes nothing) — a documented deviation that is
   * deterministic, partition-order-independent, and identical in both
@@ -53,26 +53,30 @@ object Morph2 extends Gates {
 
   // ---- Spark engine ----------------------------------------------------
 
-  /** presence flags m0..m7 for each row of `cells`, tested against `mask`
-    * (one join + one agg). */
-  private def flags(cells: DataFrame, mask: DataFrame): DataFrame = {
-    val probes = cells
-      .withColumn("i", explode(sequence(lit(0), lit(7))))
-      .withColumn("dx", element_at(typedLit(dxs), col("i") + 1))
-      .withColumn("dy", element_at(typedLit(dys), col("i") + 1))
-      .select(col("ix"), col("iy"), col("i"),
-        (col("ix") + col("dx")).as("nix"), (col("iy") - col("dy")).as("niy"))
-    val withP = probes.join(
-        mask.selectExpr("ix AS nix", "iy AS niy", "1 AS p"), Seq("nix", "niy"), "left")
-      .selectExpr("ix", "iy", "i", "coalesce(p, 0) AS p")
-    val aggs = (0 until 8).map(i =>
-      expr(s"max(CASE WHEN i = $i THEN p ELSE 0 END)").as(s"m$i"))
-    withP.groupBy("ix", "iy").agg(aggs.head, aggs.tail: _*)
+  /** the cell itself (pos 0) and its 8 neighbours (pos i + 1) */
+  private val selfAndNeighbours = array((0 +: dxs).zip(0 +: dys).map { case (dx, dy) =>
+    struct(lit(dx).as("dx"), lit(dy).as("dy"))
+  }: _*)
+
+  /** presence flags of every cell in or next to `mask`: each mask cell
+    * reports itself (pos 0) and, as neighbour i, its presence to the cell
+    * it neighbours (pos i + 1); one aggregate per cell gathers `self` and
+    * m0..m7. It reads `mask` once, so a chain of patterns plans one copy
+    * of its input per pattern, not two. */
+  private def flags(mask: DataFrame): DataFrame = {
+    val reports = mask.select(col("ix"), col("iy"), posexplode(selfAndNeighbours))
+      .select((col("ix") - col("col.dx")).as("ix"), (col("iy") + col("col.dy")).as("iy"),
+        col("pos"))
+    val aggs = (0 to 8).map(j => expr(s"max(CASE WHEN pos = $j THEN 1 ELSE 0 END)")
+      .as(if (j == 0) "self" else s"m${j - 1}"))
+    reports.groupBy("ix", "iy").agg(aggs.head, aggs.tail: _*)
   }
 
+  /** one synchronous pattern pass: the mask cells the pattern matches are
+    * erased. */
   private def applyPattern(m: DataFrame, pat: Seq[(Int, Int)]): DataFrame = {
     val cond = pat.map { case (i, v) => s"m$i = $v" }.mkString(" AND ")
-    flags(m, m).filter(expr(s"NOT ($cond)")).select("ix", "iy")
+    flags(m).filter(expr(s"self = 1 AND NOT ($cond)")).select("ix", "iy")
   }
 
   /** synchronous per-pattern erosion to convergence (asserted): one round
@@ -118,17 +122,12 @@ object Morph2 extends Gates {
     // and the diagonal between them is absent
     "thicken_raster_line" -> ((s, dir) => {
       val m = mask4(s, dir)
-      val cand = m
-        .withColumn("dx", explode(sequence(lit(-1), lit(1))))
-        .withColumn("dy", explode(sequence(lit(-1), lit(1))))
-        .selectExpr("ix + dx AS ix", "iy + dy AS iy").distinct()
-        .join(m, Seq("ix", "iy"), "left_anti")
-      val f = flags(cand, m)
-      // cardinal pairs (n1, n3) with the diagonal n2 between, in reference
-      // order: (7,1,0),(1,3,2),(3,5,4),(5,7,6) mapped from n1/n2/n3 arrays
-      val grown = f.filter(expr(
+      // background cells (self = 0) next to the mask; cardinal pairs
+      // (n1, n3) with the diagonal n2 between, in reference order:
+      // (7,1,0),(1,3,2),(3,5,4),(5,7,6) mapped from n1/n2/n3 arrays
+      val grown = flags(m).filter(expr("self = 0 AND (" +
         "(m7 = 1 AND m1 = 1 AND m0 = 0) OR (m1 = 1 AND m3 = 1 AND m2 = 0) OR " +
-          "(m3 = 1 AND m5 = 1 AND m4 = 0) OR (m5 = 1 AND m7 = 1 AND m6 = 0)"))
+          "(m3 = 1 AND m5 = 1 AND m4 = 0) OR (m5 = 1 AND m7 = 1 AND m6 = 0))"))
         .select("ix", "iy")
       m.unionByName(grown).orderBy("ix", "iy")
     }),

@@ -78,9 +78,7 @@ object ParamSweeps2 extends Gates {
     bandDf.groupBy("band", "h1")
       .agg(graft.agg.CappedList.capped(Dedup.bucketCap)(col("doc_id")).as("ms"))
       .filter(size(col("ms")) <= Dedup.bucketCap)
-      .select(explode(expr(
-        "flatten(transform(ms, (x, i) -> transform(slice(ms, i + 2, size(ms)), " +
-          "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))")).as("p"))
+      .select(explode(graft.expr.ArrayKernels.pairs(col("ms"))).as("p"))
       .select("p.a", "p.b").distinct()
       .orderBy("a", "b")
   }
