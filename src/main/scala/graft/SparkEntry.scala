@@ -3,6 +3,7 @@ package graft
 import graft.core.Gates
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -40,4 +41,13 @@ object SparkEntry {
   /** DuckDB oracle SQL per gate, built on demand: about 2.5 M characters
     * that only the Verify dump reads. */
   def oracleSql: Map[String, String] = gates.flatMap(_.oracles).toMap
+
+  /** The one row-order policy. A gate returns a relation, a multiset of
+    * rows in no promised order; a sink whose order a person or a file
+    * shows (Verify's parquet dump, the CLI's `show`) orders it here: one
+    * partition, sorted within it by every column, so equal results come
+    * out in the same row order. No range shuffle. */
+  def ordered(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(
+      df.columns.map(c => col("`" + c.replace("`", "``") + "`")).toIndexedSeq: _*)
 }

@@ -47,7 +47,7 @@ object Main {
         println(s"committed ${snap.rows} rows in ${snap.files} files to $out" +
           (if (snap.resumed) " (resumed from existing snapshot)" else ""))
       case None =>
-        df.show(50, truncate = false)
+        SparkEntry.ordered(df).show(50, truncate = false)
     }
     spark.stop()
   }

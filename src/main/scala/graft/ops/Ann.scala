@@ -90,7 +90,6 @@ object Ann extends Gates {
       .select(col("qid"), posexplode(col("tk")))
       .select(col("qid"), expr("cast(pos + 1 as int)").as("rank"),
         col("col.id").as("nid"), negate(col("col.dist")).as("cos"))
-      .orderBy("qid", "rank")
   }
 
   /** DuckDB twin of `cosineTopk` at an arbitrary k. */
@@ -114,7 +113,6 @@ object Ann extends Gates {
       Tables.table(s, dir, "embeddings")
         .select(col("vec_id"),
           expr(lshBucket(SparkD, "embedding")).as("bucket"))
-        .orderBy("vec_id")
     }),
 
     // LSH-bucketed top-k: the IVF-style SCALE path for similarity search —
@@ -139,7 +137,6 @@ object Ann extends Gates {
         .select(col("qid"), posexplode(col("tk")))
         .select(col("qid"), expr("cast(pos + 1 as int)").as("rank"),
           col("col.id").as("nid"), negate(col("col.dist")).as("cos"))
-        .orderBy("qid", "rank")
     }),
 
     // Near-duplicate embeddings: multi-band sign-LSH (4 disjoint bands of
@@ -177,7 +174,6 @@ object Ann extends Gates {
         .withColumn("cos", cosine(sqrt(dot("ea", "ea")), sqrt(dot("eb", "eb"))))
         .filter(col("cos") >= 0.95)
         .select("a", "b", "cos")
-        .orderBy("a", "b")
     })
   )
 

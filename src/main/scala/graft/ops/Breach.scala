@@ -157,7 +157,7 @@ object Breach extends Gates {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "breach_depressions" -> ((s, dir) =>
-      breached(s, dir).orderBy("ix", "iy"))
+      breached(s, dir))
   )
 
   // ---- DuckDB twin: unrolled synchronous relaxation + recursive walk ----

@@ -132,10 +132,10 @@ object Cost extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "cost_distance" -> ((s, dir) =>
-      accum(s, dir).selectExpr("ix", "iy", "acc").orderBy("ix", "iy")),
+      accum(s, dir).selectExpr("ix", "iy", "acc")),
 
     "cost_distance_frontier" -> ((s, dir) =>
-      accumFrontier(s, dir).selectExpr("ix", "iy", "acc").orderBy("ix", "iy")),
+      accumFrontier(s, dir).selectExpr("ix", "iy", "acc")),
 
     "cost_allocation" -> ((s, dir) => {
       val src = sources(s, dir)
@@ -144,7 +144,7 @@ object Cost extends Gates {
         .selectExpr("ix", "iy", "coalesce(bx, ix) AS rx", "coalesce(by, iy) AS ry")
       Dem.roots(p0, "cost_allocation")
         .join(src.selectExpr("ix AS rx", "iy AS ry", "src"), Seq("rx", "ry"))
-        .selectExpr("ix", "iy", "src AS alloc").orderBy("ix", "iy")
+        .selectExpr("ix", "iy", "src AS alloc")
     }),
 
     // least-cost path cells from the fixed destinations: marked-set growth
@@ -163,7 +163,7 @@ object Cost extends Gates {
           .distinct()
         cur.join(fromDown, Seq("ix", "iy"), "left")
           .selectExpr("ix", "iy", "greatest(m, coalesce(m2, 0)) AS m")
-      }.filter(col("m") === 1).select("ix", "iy").orderBy("ix", "iy")
+      }.filter(col("m") === 1).select("ix", "iy")
     })
   )
 

@@ -30,7 +30,6 @@ import org.apache.spark.sql.functions._
 object Dedup extends Gates {
 
   private val nHashes = 16
-  private val bands = 8 // of 2 rows each
   private[ops] val bucketCap = 1000 // max members per band bucket (skew bound)
 
   /** One md5 per shingle; the 16 family members derive arithmetically
@@ -77,6 +76,46 @@ object Dedup extends Gates {
   private[ops] def duckSignatures: String =
     s"sigs AS (SELECT doc_id, ${minhashAggs(DuckD).mkString(", ")} FROM " +
       s"(SELECT doc_id, unnest(${DuckD.shingles("text")}) AS sh FROM documents) t GROUP BY doc_id)"
+
+  /** LSH candidate pairs: the 16 signature values cut into bands of
+    * `rows` values; a pair is a candidate when any band collides. Buckets
+    * larger than `bucketCap` members are DROPPED (both engines, so the
+    * oracle stays bit-exact): a viral shingle's bucket would otherwise
+    * contribute O(m²) pairs of near-zero signal — the standard web-dedup
+    * skew bound. Plan: ONE hash aggregate collects each band bucket's
+    * members (state bounded by the cap: oversized buckets are discarded,
+    * so no self-join, no separate hot-list pass, one shuffle of the band
+    * rows total); pairs explode in place from the ≤cap member lists. */
+  private[ops] def lshPairs(s: SparkSession, dir: String, rows: Int): DataFrame = {
+    val hs = (1 to rows).map(i => s"h$i")
+    val bandArgs = (0 until nHashes / rows).map { b =>
+      (b +: (0 until rows).map(i => s"m${rows * b + i}")).mkString(", ")
+    }
+    signatures(s, dir)
+      .selectExpr("doc_id",
+        s"stack(${nHashes / rows}, ${bandArgs.mkString(", ")}) AS (band, ${hs.mkString(", ")})")
+      .groupBy("band", hs: _*)
+      .agg(graft.agg.CappedList.capped(bucketCap)(col("doc_id")).as("ms"))
+      .filter(size(col("ms")) <= bucketCap)
+      .select(explode(graft.expr.ArrayKernels.pairs(col("ms"))).as("p"))
+      .select("p.a", "p.b").distinct()
+  }
+
+  /** DuckDB twin of `lshPairs`: the `cand(a, b)` CTE chain. */
+  private[ops] def duckCand(rows: Int): String = {
+    val hs = (1 to rows).map(i => s"h$i")
+    val bandRows = "bandrows AS (" + (0 until nHashes / rows).map { b =>
+      val cols = hs.zipWithIndex.map { case (h, i) => s"m${rows * b + i} AS $h" }
+      s"SELECT doc_id, $b AS band, ${cols.mkString(", ")} FROM sigs"
+    }.mkString(" UNION ALL ") + ")"
+    bandRows +
+      s", keepb AS (SELECT band, ${hs.mkString(", ")} FROM bandrows " +
+      s"GROUP BY ${(1 to rows + 1).mkString(", ")} HAVING count(*) <= $bucketCap)" +
+      s", pruned AS (SELECT b.* FROM bandrows b JOIN keepb USING (band, ${hs.mkString(", ")}))" +
+      ", cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b " +
+      "FROM pruned l JOIN pruned r ON l.band = r.band AND " +
+      hs.map(h => s"l.$h = r.$h AND ").mkString + "l.doc_id < r.doc_id)"
+  }
 
   // ---- SimHash (64-bit: two independent 32-bit md5 words per token) ----
 
@@ -128,29 +167,10 @@ object Dedup extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MinHash signatures (exact-int oracle twin).
-    "dedup_minhash_signatures" -> ((s, dir) => {
-      signatures(s, dir).orderBy("doc_id")
-    }),
+    "dedup_minhash_signatures" -> ((s, dir) => signatures(s, dir)),
 
-    // LSH candidate pairs: any of the 8 (h1,h2) bands collide. Buckets
-    // larger than `bucketCap` members are DROPPED (both engines, so the
-    // oracle stays bit-exact): a viral shingle's bucket would otherwise
-    // contribute O(m²) pairs of near-zero signal — the standard web-dedup
-    // skew bound. Plan: ONE hash aggregate collects each band bucket's
-    // members (state bounded by the cap: oversized buckets are discarded,
-    // so no self-join, no separate hot-list pass, one shuffle of the band
-    // rows total); pairs explode in place from the ≤cap member lists.
-    "dedup_minhash_lsh" -> ((s, dir) => {
-      val sig = signatures(s, dir)
-      val bandDf = sig.selectExpr("doc_id",
-        s"stack($bands, ${(0 until bands).map(b => s"$b, m${2 * b}, m${2 * b + 1}").mkString(", ")}) AS (band, h1, h2)")
-      bandDf.groupBy("band", "h1", "h2")
-        .agg(graft.agg.CappedList.capped(bucketCap)(col("doc_id")).as("ms"))
-        .filter(size(col("ms")) <= bucketCap)
-        .select(explode(graft.expr.ArrayKernels.pairs(col("ms"))).as("p"))
-        .select("p.a", "p.b").distinct()
-        .orderBy("a", "b")
-    }),
+    // LSH candidate pairs: any of the 8 (h1, h2) bands collide.
+    "dedup_minhash_lsh" -> ((s, dir) => lshPairs(s, dir, 2)),
 
     // Exact n-gram Jaccard on the LSH candidates (verify stage).
     "dedup_ngram_jaccard" -> ((s, dir) => {
@@ -174,13 +194,10 @@ object Dedup extends Gates {
         .withColumn("jaccard", expr(
           "cast(common as double) / cast(na + nb - common as double)"))
         .select("a", "b", "na", "nb", "common", "jaccard")
-        .orderBy("a", "b")
     }),
 
     // SimHash per document.
-    "dedup_simhash" -> ((s, dir) => {
-      simhashes(s, dir).orderBy("doc_id")
-    }),
+    "dedup_simhash" -> ((s, dir) => simhashes(s, dir)),
 
     // SimHash near-dup pairs via the 16-bit chunk-blocking join (with the
     // minhash-style hot-bucket cap before the self-join); oracle
@@ -211,7 +228,6 @@ object Dedup extends Gates {
       val sz = lab.groupBy("rep").agg(count(lit(1)).as("cluster_size"))
       lab.join(sz, "rep")
         .selectExpr("d AS doc_id", "rep", "cluster_size")
-        .orderBy("doc_id")
     })
   )
 
@@ -263,7 +279,6 @@ object Dedup extends Gates {
       .filter(expr(s"($hamming) <= $maxH"))
       .withColumn("hamming", expr(hamming))
       .select("a", "b", "hamming")
-      .orderBy("a", "b")
   }
 
   /** Shared CTE chain ending at `lab(doc_id, rep)` — the near-dup
@@ -272,7 +287,7 @@ object Dedup extends Gates {
     * Reused by the dedup_clusters twin and the corpus_clean pipeline
     * twins (Pipeline.scala), so the two gates prove the SAME SQL. */
   private[ops] def duckClusterCtes: String =
-    s"$duckSignatures, $duckCand, " +
+    s"$duckSignatures, ${duckCand(2)}, " +
       s"shs AS (SELECT doc_id, unnest(list_distinct(${DuckD.shingles("text")})) AS sh FROM documents), " +
       "cm AS (SELECT c.a, c.b, count(*) AS common FROM cand c " +
       "JOIN shs sa ON sa.doc_id = c.a JOIN shs sb ON sb.doc_id = c.b AND sb.sh = sa.sh " +
@@ -285,26 +300,13 @@ object Dedup extends Gates {
       "reach AS (SELECT a AS s, a AS t FROM e UNION SELECT r.s, e.b FROM reach r JOIN e ON e.a = r.t), " +
       "lab AS (SELECT s AS doc_id, min(t) AS rep FROM reach GROUP BY s)"
 
-  private def duckBandRows: String =
-    "bandrows AS (" + (0 until bands).map(b =>
-      s"SELECT doc_id, $b AS band, m${2 * b} AS h1, m${2 * b + 1} AS h2 FROM sigs")
-      .mkString(" UNION ALL ") + ")"
-
-  private def duckCand: String =
-    duckBandRows +
-      s", keepb AS (SELECT band, h1, h2 FROM bandrows GROUP BY 1, 2, 3 HAVING count(*) <= $bucketCap)" +
-      ", pruned AS (SELECT b.* FROM bandrows b JOIN keepb USING (band, h1, h2))" +
-      ", cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b " +
-      "FROM pruned l JOIN pruned r ON l.band = r.band AND l.h1 = r.h1 " +
-      "AND l.h2 = r.h2 AND l.doc_id < r.doc_id)"
-
   def oracles: Map[String, String] = Map(
     "dedup_minhash_signatures" ->
       s"WITH $duckSignatures SELECT * FROM sigs ORDER BY doc_id",
     "dedup_minhash_lsh" ->
-      s"WITH $duckSignatures, $duckCand SELECT a, b FROM cand ORDER BY a, b",
+      s"WITH $duckSignatures, ${duckCand(2)} SELECT a, b FROM cand ORDER BY a, b",
     "dedup_ngram_jaccard" ->
-      (s"WITH $duckSignatures, $duckCand, " +
+      (s"WITH $duckSignatures, ${duckCand(2)}, " +
         s"shs AS (SELECT doc_id, unnest(list_distinct(${DuckD.shingles("text")})) AS sh FROM documents), " +
         "sizes AS (SELECT doc_id, count(*) AS nsh FROM shs GROUP BY doc_id), " +
         "cm AS (SELECT c.a, c.b, count(*) AS common FROM cand c " +

@@ -59,7 +59,7 @@ object Dinf extends Gates {
     Dem.memo(s, dir, "dinf_dir") { dirDF(s, dir) }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dinf_pointer" -> ((s, dir) => dirFrame(s, dir).orderBy("ix", "iy"))
+    "dinf_pointer" -> ((s, dir) => dirFrame(s, dir))
   )
 
   private def dirDF(s: SparkSession, dir: String): DataFrame = {

@@ -103,16 +103,14 @@ object Dinf2 extends Gates {
     // (ADVICE r4 parity rule — a deeper corpus fails loudly, not silently).
     "dinf_flow_accum" -> ((s, dir) =>
       route(s, dir, dinfEdges(s, dir), "dinf_accum", maxRounds = routeRounds + 8)
-        .selectExpr("ix", "iy", s"cast(flux as double) / $M.0e0 AS fa_dinf")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", s"cast(flux as double) / $M.0e0 AS fa_dinf")),
 
     "fd8_flow_accum" -> ((s, dir) =>
       // FD8 routes along EVERY descending edge: its DAG depth is the
       // longest strictly-descending path (measured 140 on the fixture),
       // far beyond the D8 flow-path bound — hence the larger round cap
       route(s, dir, fd8Edges(s, dir), "fd8_accum", maxRounds = fd8Rounds + 8)
-        .selectExpr("ix", "iy", s"cast(flux as double) / $M.0e0 AS fa_fd8")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", s"cast(flux as double) / $M.0e0 AS fa_fd8")),
 
     // DInfMassFlux (hydro_analysis/dinf_mass_flux.rs): the mass-flux
     // recursion (loading, efficiency, absorption 0) routed along the D-inf
@@ -139,7 +137,6 @@ object Dinf2 extends Gates {
           .selectExpr("ix", "iy", "load", "eff",
             "CASE WHEN flux IS NOT NULL THEN flux WHEN nnull = 0 THEN load + inflow END AS flux")
       }.selectExpr("ix", "iy", s"cast(flux as double) / $M.0e0 AS mass_flux")
-        .orderBy("ix", "iy")
     }),
 
     "flow_length_diff" -> ((s, dir) => {
@@ -152,7 +149,6 @@ object Dinf2 extends Gates {
       dl.join(nbr, Seq("ix", "iy"))
         .groupBy("ix", "iy")
         .agg(expr("round(max(abs(fl - nfl)), 6)").as("max_fl_diff"))
-        .orderBy("ix", "iy")
     })
   )
 

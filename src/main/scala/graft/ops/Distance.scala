@@ -138,7 +138,7 @@ object Distance extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "euclidean_distance" -> ((s, dir) =>
       euclidean(s, Raster.density(s, dir, 6), srcCond)
-        .select("ix", "iy", "d2").orderBy("ix", "iy")),
+        .select("ix", "iy", "d2")),
 
     // Coarsening-knob invariance: the SAME output at B=4 — the kr refine
     // bound (⌊√d²⌋+3, header proof) must hold at every B, so this gate
@@ -146,20 +146,19 @@ object Distance extends Gates {
     // brute-force twin (the round-4 bound bug lived exactly here).
     "euclidean_distance_b4" -> ((s, dir) =>
       euclidean(s, Raster.density(s, dir, 6), srcCond, coarse = 4)
-        .select("ix", "iy", "d2").orderBy("ix", "iy")),
+        .select("ix", "iy", "d2")),
 
     // Sparser sources (1-2 cells match v >= 30): larger coarse rings and
     // kr radii than the 3-source default exercises.
     "euclidean_distance_sparse" -> ((s, dir) =>
       euclidean(s, Raster.density(s, dir, 6), srcCondSparse)
-        .select("ix", "iy", "d2").orderBy("ix", "iy")),
+        .select("ix", "iy", "d2")),
     "euclidean_allocation" -> ((s, dir) => {
       val g = Raster.density(s, dir, 6)
       euclidean(s, g, srcCond)
         .join(g.selectExpr("ix AS src_ix", "iy AS src_iy", "v AS src_v"),
           Seq("src_ix", "src_iy"))
         .select("ix", "iy", "src_ix", "src_iy", "src_v")
-        .orderBy("ix", "iy")
     })
   )
 

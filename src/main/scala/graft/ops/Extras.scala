@@ -100,8 +100,7 @@ object Extras extends Gates {
         s.range(32L * 32)
           .selectExpr("id % 32 AS ix", "id div 32 AS iy")
           .selectExpr("ix", "iy",
-            "2.5e0 + 0.5e0 * cast(ix as double) - 0.25e0 * cast(iy as double) AS z")
-          .orderBy("ix", "iy")),
+            "2.5e0 + 0.5e0 * cast(ix as double) - 0.25e0 * cast(iy as double) AS z")),
       // IntegralImage (integral_image.rs): dense grid + two PARTITIONED
       // cumulative windows (row pass then column pass).
       "integral_image" -> ((s: SparkSession, dir: String) => {
@@ -117,7 +116,6 @@ object Extras extends Gates {
           sum("rc").over(Window.partitionBy("ix").orderBy("iy")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .select("ix", "iy", "ii")
-          .orderBy("ix", "iy")
       })
     )
 

@@ -173,9 +173,9 @@ object Extras2 extends Gates {
     } ++ Map(
       // morphology via the explode-equi-join halo (never a range join)
       "morph_opening" -> ((s: SparkSession, dir: String) =>
-        sparkDilate(sparkErode(sparkMask(s, dir))).orderBy("ix", "iy")),
+        sparkDilate(sparkErode(sparkMask(s, dir)))),
       "morph_closing" -> ((s: SparkSession, dir: String) =>
-        sparkErode(sparkDilate(sparkMask(s, dir))).orderBy("ix", "iy")),
+        sparkErode(sparkDilate(sparkMask(s, dir)))),
       // distributed rank build (no global window) + row-crossing scanline
       "lines_to_raster" -> (linesToRasterSpark _),
       // run vectorization over PARTITIONED (per grid row) windows
@@ -188,7 +188,6 @@ object Extras2 extends Gates {
           .agg(min("ix").as("ix_start"), max("ix").as("ix_end"),
             count(lit(1)).as("n_cells"))
           .select("iy", "ix_start", "ix_end", "n_cells")
-          .orderBy("iy", "ix_start")
       }),
       // HistogramMatching: CDF LUTs of source (full density) and target
       // (en-layer density), composed on the driver, broadcast back.
@@ -213,7 +212,7 @@ object Extras2 extends Gates {
           }
         }.toSeq.toDF("v", "v_m")
         src.join(broadcast(mapping), "v")
-          .select("ix", "iy", "v_m").orderBy("ix", "iy")
+          .select("ix", "iy", "v_m")
       }),
       // MergeTableWithCsv: write the deterministic CSV, read it back as a
       // REAL csv source, last-wins left join onto nation.
@@ -230,7 +229,6 @@ object Extras2 extends Gates {
         Tables.table(s, dir, "nation")
           .join(csv, col("n_nationkey") === col("rid"), "left")
           .select(col("n_nationkey"), col("n_name"), col("rname"), col("score"))
-          .orderBy("n_nationkey")
       })
     )
 
@@ -258,7 +256,6 @@ object Extras2 extends Gates {
       .withColumn("xc", expr(xcrossE))
       .select(expr(ixE).as("ix"), col("riy").as("iy"))
       .groupBy("ix", "iy").agg(count(lit(1)).as("n_cross"))
-      .orderBy("ix", "iy")
   }
 
   def oracles: Map[String, String] =

@@ -134,7 +134,6 @@ object Extras3 extends Gates {
         .withColumnRenamed("v", "vo")
       g.join(opened, Seq("ix", "iy"))
         .selectExpr("ix", "iy", "cast(v - vo as bigint) AS v_th")
-        .orderBy("ix", "iy")
     }),
     "corner_detection" -> ((s, dir) => {
       val h = Focal.haloD(Raster.density(s, dir, 6))
@@ -145,7 +144,6 @@ object Extras3 extends Gates {
       h.groupBy("ix", "iy").agg(expr("max(v)").as("z"), aggs: _*)
         .selectExpr("ix", "iy",
           s"CASE WHEN z > 0 THEN $cornerE ELSE 0 END AS is_corner")
-        .orderBy("ix", "iy")
     }),
     "image_stack_profile" -> ((s, dir) => {
       Tables.register(s, dir); s.sql(stackProfileSql(SparkD))
@@ -162,7 +160,6 @@ object Extras3 extends Gates {
           col("doc_id").cast("double"), col("doc_id")).as("tk"))
         .select(col("ix"), col("iy"), explode(col("tk")).as("e"))
         .select(col("ix"), col("iy"), col("e.id").as("doc_id"))
-        .orderBy("ix", "iy", "doc_id")
     })
   )
 

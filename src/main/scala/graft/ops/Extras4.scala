@@ -129,7 +129,6 @@ object Extras4 extends Gates {
         .selectExpr("fid", "ring_id", "'POLYGON' AS shape_type",
           s"${closedN(SparkD)} AS n_points_closed",
           s"${ringAreaE(SparkD)} AS area")
-        .orderBy("fid", "ring_id")
     }),
     "random_sample" -> ((s, dir) => {
       Tables.register(s, dir); s.sql(randomSampleSql(SparkD))
@@ -146,7 +145,6 @@ object Extras4 extends Gates {
         .join(broadcast(ranges),
           col("n_chars") >= col("lo") && col("n_chars") < col("hi"))
         .select(col("doc_id"), col("cls").as("class"))
-        .orderBy("doc_id")
     }),
     "num_inflowing_neighbours" -> ((s, dir) => {
       val dd = Hydro.d8dirsKeep(s, dir)
@@ -155,7 +153,6 @@ object Extras4 extends Gates {
         .agg(count(lit(1)).as("n_in"))
       dd.select("ix", "iy").join(inflow, Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy", "cast(coalesce(n_in, 0) as bigint) AS n_in")
-        .orderBy("ix", "iy")
     }),
     "select_tiles_by_polygon" -> ((s, dir) => {
       Tables.register(s, dir); s.sql(tilesSelectSql(SparkD))

@@ -53,12 +53,11 @@ object Extras5 extends Gates {
 
     "set_nodata_value" -> ((s, dir) =>
       Raster.density(s, dir, 5)
-        .selectExpr("ix", "iy", "CASE WHEN v = 1 THEN NULL ELSE v END AS v_nd")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "CASE WHEN v = 1 THEN NULL ELSE v END AS v_nd")),
 
     "reinitialize_attribute_table" -> ((s, dir) =>
       Tables.table(s, dir, "documents")
-        .selectExpr("doc_id AS fid").orderBy("fid")),
+        .selectExpr("doc_id AS fid")),
 
     "export_table_to_csv" -> ((s, dir) => {
       val tmp = s"/tmp/graft_csv_export_${Math.abs(dir.hashCode)}"
@@ -70,14 +69,12 @@ object Extras5 extends Gates {
       s.read.option("header", "true")
         .schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
         .csv(tmp)
-        .orderBy("doc_id")
     }),
 
     "count_if" -> ((s, dir) =>
       Focal.haloD(Raster.density(s, dir, 6))
         .groupBy("ix", "iy")
-        .agg(expr("cast(sum(CASE WHEN nv = 1 THEN 1 ELSE 0 END) as bigint)").as("n_eq"))
-        .orderBy("ix", "iy")),
+        .agg(expr("cast(sum(CASE WHEN nv = 1 THEN 1 ELSE 0 END) as bigint)").as("n_eq"))),
 
     "image_autocorrelation" -> ((s, dir) => {
       val g = Raster.density(s, dir, 6)

@@ -89,8 +89,7 @@ object Extras6 extends Gates {
 
     "flightline_overlap" -> ((s, dir) =>
       pts(s, dir).groupBy("cix", "ciy")
-        .agg(countDistinct("fl").as("n_fl"))
-        .orderBy("cix", "ciy")),
+        .agg(countDistinct("fl").as("n_fl"))),
 
     "classify_overlap_points" -> ((s, dir) => {
       val p = pts(s, dir)
@@ -99,7 +98,6 @@ object Extras6 extends Gates {
         .agg(expr("min_by(fl, named_struct('nc', -c, 'fl', fl))").as("dfl"))
       p.join(dom, Seq("cix", "ciy"))
         .selectExpr("id AS doc_id", "CASE WHEN fl = dfl THEN 0 ELSE 1 END AS overlap")
-        .orderBy("doc_id")
     }),
 
     "find_flightline_edge_points" -> ((s, dir) => {
@@ -118,13 +116,13 @@ object Extras6 extends Gates {
           Seq("nbx", "nby"))
         .filter(expr(s"(nx - x) * (nx - x) + (ny - y) * (ny - y) <= $r2 AND nfl <> fl"))
         .select("id").distinct()
-        .selectExpr("id AS doc_id").orderBy("doc_id")
+        .selectExpr("id AS doc_id")
     }),
 
     "erase_polygon_from_raster" -> ((s, dir) =>
       Raster.density(s, dir, 5)
         .filter(expr(s"NOT ${Zones.insideZoneSql(3, lonC, latC)}"))
-        .select("ix", "iy", "v").orderBy("ix", "iy")),
+        .select("ix", "iy", "v")),
 
     "raster_centroid" -> ((s, dir) =>
       Raster.density(s, dir, 5)
@@ -132,8 +130,7 @@ object Extras6 extends Gates {
         .agg(expr("cast(sum(ix) as bigint)").as("sx"),
           expr("cast(sum(iy) as bigint)").as("sy"), count(lit(1)).as("n"))
         .selectExpr("v", "round(cast(sx as double) / cast(n as double), 6) AS cx",
-          "round(cast(sy as double) / cast(n as double), 6) AS cy")
-        .orderBy("v")),
+          "round(cast(sy as double) / cast(n as double), 6) AS cy")),
 
     "edge_proportion" -> ((s, dir) =>
       Focal.haloD(Raster.density(s, dir, 5))
@@ -144,36 +141,32 @@ object Extras6 extends Gates {
         .groupBy("v")
         .agg(count(lit(1)).as("n_cells"),
           expr("cast(sum(CASE WHEN n_same < 8 THEN 1 ELSE 0 END) as bigint)").as("n_edge"))
-        .selectExpr("v", "round(cast(n_edge as double) / cast(n_cells as double), 6) AS edge_prop")
-        .orderBy("v")),
+        .selectExpr("v", "round(cast(n_edge as double) / cast(n_cells as double), 6) AS edge_prop")),
 
     "new_raster_from_base" -> ((s, dir) =>
       Raster.density(s, dir, 5)
-        .selectExpr("ix", "iy", "7.0e0 AS v_new").orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "7.0e0 AS v_new")),
 
     "attribute_scattergram" -> ((s, dir) =>
       Tables.table(s, dir, "documents")
         .selectExpr("n_chars div 200 AS xa", "length(text) div 400 AS yb")
-        .groupBy("xa", "yb").agg(count(lit(1)).as("n"))
-        .orderBy("xa", "yb")),
+        .groupBy("xa", "yb").agg(count(lit(1)).as("n"))),
 
     "correct_vignetting" -> ((s, dir) =>
       Raster.density(s, dir, 5)
-        .selectExpr("ix", "iy", vigE).orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", vigE)),
 
     "panchromatic_sharpening" -> ((s, dir) =>
       bands(s, dir).selectExpr("ix", "iy",
         "round(cast(r0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS r_sharp",
         "round(cast(g0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS g_sharp",
-        "round(cast(b0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS b_sharp")
-        .orderBy("ix", "iy")),
+        "round(cast(b0 as double) * cast(p as double) / cast(r0 + g0 + b0 as double), 6) AS b_sharp")),
 
     "direct_decorrelation_stretch" -> ((s, dir) =>
       bands(s, dir).selectExpr("ix", "iy",
         "round(cast(r0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS r_dds",
         "round(cast(g0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS g_dds",
-        "round(cast(b0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS b_dds")
-        .orderBy("ix", "iy")),
+        "round(cast(b0 as double) - 0.5e0 * cast(least(r0, g0, b0) as double), 6) AS b_dds")),
 
     "write_function_memory_insertion" -> ((s, dir) => {
       val en = langDensity(s, dir, "en")
@@ -181,7 +174,6 @@ object Extras6 extends Gates {
       en.join(zh, Seq("ix", "iy"), "full")
         .selectExpr("ix", "iy", "coalesce(v_en, 0) AS mem_r",
           "coalesce(v_zh, 0) AS mem_g", "coalesce(v_zh, 0) AS mem_b")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -210,7 +210,7 @@ object Filters3 extends Gates {
     val base: Map[String, (SparkSession, String) => DataFrame] =
       queryDefs(SparkD).map { case (name, sel) =>
         name -> ((s: SparkSession, dir: String) =>
-          r1(s, dir).selectExpr(Seq("ix", "iy") ++ sel: _*).orderBy("ix", "iy"))
+          r1(s, dir).selectExpr(Seq("ix", "iy") ++ sel: _*))
       }.toMap
     base ++ Map(
       "bilateral_filter" -> ((s: SparkSession, dir: String) => {
@@ -230,13 +230,11 @@ object Filters3 extends Gates {
           .filter(col("z").isNotNull) // centre must exist (it always does)
           .withColumn("bs", expr(bilatSumAlias))
           .selectExpr("ix", "iy", s"$bilatInline AS v_bl")
-          .orderBy("ix", "iy")
       }),
       "fast_almost_gaussian" -> ((s: SparkSession, dir: String) => {
         var g = sparkBox(Raster.density(s, dir, 6), scaleIn = true)
         (2 to 5).foreach(_ => g = sparkBox(g, scaleIn = false))
         g.selectExpr("ix", "iy", "cast(v as double) / 1000000.0e0 AS v_fag")
-          .orderBy("ix", "iy")
       })
     )
   }

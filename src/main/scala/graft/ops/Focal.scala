@@ -127,6 +127,44 @@ object Focal extends Gates {
       s"WHEN ($den) > 0.0e0 THEN ($num) / ($den) END"
   }
 
+  /** BufferRaster (buffer_raster.rs): res-7 cells within `r` (the
+    * --size parameter) of any page — a LEFT SEMI join on the FRS bucket
+    * block with the distance residual in the join condition (EXISTS
+    * semantics): no per-cell ranking, no candidate aggregation; the probe
+    * short-circuits on first match. The bucket width scales with the
+    * radius (w = r/2), so the 5×5 block covers every r at any size. */
+  private[ops] def bufferRaster(s: SparkSession, dir: String, r: Double): DataFrame = {
+    import graft.core.Lit.{d => L}
+    val res = 7; val n = 1 << res
+    val rx = 360.0 / n; val ry = 180.0 / n
+    val w = r / 2.0
+    val cells = s.range(n.toLong * n)
+      .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
+      .withColumn("cx", expr(s"-180.0e0 + ${L(rx)} / 2.0e0 + ix * ${L(rx)}"))
+      .withColumn("cy", expr(s"-90.0e0 + ${L(ry)} / 2.0e0 + iy * ${L(ry)}"))
+      .withColumn("dx", explode(sequence(lit(-2), lit(2))))
+      .withColumn("dy", explode(sequence(lit(-2), lit(2))))
+      .withColumn("bx", expr(s"cast(floor(cx / ${L(w)}) as bigint)") + col("dx"))
+      .withColumn("by", expr(s"cast(floor(cy / ${L(w)}) as bigint)") + col("dy"))
+    val pts = Tables.pages(s, dir).select(col("lon"), col("lat"),
+      expr(s"cast(floor(lon / ${L(w)}) as bigint)").as("pbx"),
+      expr(s"cast(floor(lat / ${L(w)}) as bigint)").as("pby"))
+    cells.join(pts,
+        col("bx") === col("pbx") && col("by") === col("pby") &&
+          expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)") <= lit(r * r),
+        "left_semi")
+      .select("ix", "iy").distinct()
+  }
+
+  private[ops] def bufferRasterDuck(r: Double): String = {
+    val n = 128; val rx = graft.core.Lit.d(360.0 / n); val ry = graft.core.Lit.d(180.0 / n)
+    s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
+      s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
+      s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})) " +
+      "SELECT DISTINCT ix, iy FROM cells JOIN pages " +
+      s"ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= ${graft.core.Lit.d(r * r)} ORDER BY ix, iy"
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MeanFilter / TotalFilter / Min-Max / RangeFilter in one pass (exact:
@@ -139,7 +177,6 @@ object Focal extends Gates {
              min("nv").as("f_min"), max("nv").as("f_max"),
              (max("nv") - min("nv")).as("f_range"),
              count(lit(1)).as("n_nbrs"))
-        .orderBy("ix", "iy")
     }),
 
     // MedianFilter (median_filter.rs): exact 3×3 median via sorted array.
@@ -148,7 +185,6 @@ object Focal extends Gates {
         .groupBy("ix", "iy")
         .agg(expr(SparkD.sortedList("nv")).as("a"))
         .selectExpr("ix", "iy", s"${medianExpr(SparkD, "a")} AS f_median")
-        .orderBy("ix", "iy")
     }),
 
     // MajorityFilter (majority_filter.rs): modal neighbour value, ties →
@@ -159,7 +195,6 @@ object Focal extends Gates {
       val mx = cnts.groupBy("ix", "iy").agg(max("c").as("mc"))
       cnts.join(mx, Seq("ix", "iy")).filter(col("c") === col("mc"))
         .groupBy("ix", "iy").agg(min("nv").as("f_mode"), max("c").as("mode_n"))
-        .orderBy("ix", "iy")
     }),
 
     // PercentileFilter: nearest-rank p75 of the 3×3 window.
@@ -168,7 +203,6 @@ object Focal extends Gates {
         .groupBy("ix", "iy")
         .agg(expr(SparkD.sortedList("nv")).as("a"))
         .selectExpr("ix", "iy", s"${pctlExpr(SparkD, "a")} AS f_p75")
-        .orderBy("ix", "iy")
     }),
 
     // GaussianFilter via the integer binomial kernel; exact sums, one
@@ -180,7 +214,6 @@ object Focal extends Gates {
              expr(s"cast(sum($wBinom) as bigint)").as("w"))
         .selectExpr("ix", "iy",
           "cast(sw as double) / cast(w as double) AS v_g")
-        .orderBy("ix", "iy")
     }),
 
     // SobelFilter: gradient magnitude from the two integer kernel sums.
@@ -191,7 +224,6 @@ object Focal extends Gates {
              expr(s"cast(sum(nv * ($wSobelY)) as bigint)").as("gy"))
         .selectExpr("ix", "iy", "gx", "gy",
           "sqrt(cast(gx * gx + gy * gy as double)) AS magnitude")
-        .orderBy("ix", "iy")
     }),
 
     // LaplacianFilter: 4-connected integer kernel sum.
@@ -199,7 +231,6 @@ object Focal extends Gates {
       haloD(Raster.density(s, dir, 6))
         .groupBy("ix", "iy")
         .agg(expr(s"cast(sum(nv * ($wLaplace)) as bigint)").as("lap"))
-        .orderBy("ix", "iy")
     }),
 
     // DiversityFilter: distinct neighbour values.
@@ -207,7 +238,6 @@ object Focal extends Gates {
       halo(Raster.density(s, dir, 6))
         .groupBy("ix", "iy")
         .agg(countDistinct("nv").as("f_div"))
-        .orderBy("ix", "iy")
     }),
 
     // Resample nearest-neighbour (resample.rs:68-70): res-5 grid sampled
@@ -221,7 +251,6 @@ object Focal extends Gates {
           expr("ix div 4").as("pix"), expr("iy div 4").as("piy"))
       fine.join(coarse, Seq("pix", "piy"))
         .select("ix", "iy", "v")
-        .orderBy("ix", "iy")
     }),
 
     // Resample bilinear (resample.rs:68-70 "bilinear"): each res-7 target
@@ -257,7 +286,6 @@ object Focal extends Gates {
           expr("max(CASE WHEN ox = 1 AND oy = 1 THEN v END)").as("v11"))
         .filter(col("np") === 4)
         .selectExpr("ix", "iy", s"$bilinearE AS v_b")
-        .orderBy("ix", "iy")
     }),
 
     // Resample "cc" (resample.rs cc branch): 16-cell gather join + the
@@ -287,7 +315,6 @@ object Focal extends Gates {
       j.groupBy("ix", "iy")
         .agg(max("fx").as("fx"), aggs :+ max("fy").as("fy"): _*)
         .selectExpr("ix", "iy", s"$ccCombine AS v_cc")
-        .orderBy("ix", "iy")
     }),
 
     // Mosaic (mosaic.rs): two per-language layers, first-listed wins where
@@ -302,7 +329,6 @@ object Focal extends Gates {
         .agg(count(lit(1)).as("v_zh"))
       en.join(zh, Seq("ix", "iy"), "full_outer")
         .select(col("ix"), col("iy"), coalesce(col("v_en"), col("v_zh")).as("v"))
-        .orderBy("ix", "iy")
     }),
 
     // RasterHistogram: equal-width bins over the density values.
@@ -314,7 +340,6 @@ object Focal extends Gates {
           "least(cast(floor((cast(v - vmin as double)) / " +
             "(cast(vmax - vmin + 1 as double) / 10.0e0)) as bigint), 9)"))
         .groupBy("bin").agg(count(lit(1)).as("n"))
-        .orderBy("bin")
     }),
 
     // ImageCorrelation (image_correlation.rs): Pearson r between the en and
@@ -350,7 +375,6 @@ object Focal extends Gates {
         .agg(expr("cast(sum(CASE WHEN v > 2 THEN 1 ELSE 0 END) as bigint)").as("n_over"),
              count(lit(1)).as("n_layers"),
              expr("100.0e0 * sum(CASE WHEN v > 2 THEN 1 ELSE 0 END) / count(*)").as("pct"))
-        .orderBy("ix", "iy")
     }),
 
     // AttributeCorrelation (attribute_correlation.rs): Pearson r between
@@ -370,33 +394,8 @@ object Focal extends Gates {
             "(cast(n as double) * cast(syy as double) - cast(sy as double) * cast(sy as double))) AS pearson_r")
     }),
 
-    // BufferRaster (buffer_raster.rs): cells within max_dist of any page —
-    // a LEFT SEMI join on the FRS bucket block with the distance residual
-    // in the join condition (EXISTS semantics): no per-cell ranking, no
-    // candidate aggregation; the probe short-circuits on first match.
-    "buffer_raster" -> ((s, dir) => {
-      import graft.core.Lit.{d => L}
-      val res = 7; val n = 1 << res
-      val rx = 360.0 / n; val ry = 180.0 / n
-      val r = 1.0; val w = r / 2.0
-      val cells = s.range(n.toLong * n)
-        .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
-        .withColumn("cx", expr(s"-180.0e0 + ${L(rx)} / 2.0e0 + ix * ${L(rx)}"))
-        .withColumn("cy", expr(s"-90.0e0 + ${L(ry)} / 2.0e0 + iy * ${L(ry)}"))
-        .withColumn("dx", explode(sequence(lit(-2), lit(2))))
-        .withColumn("dy", explode(sequence(lit(-2), lit(2))))
-        .withColumn("bx", expr(s"cast(floor(cx / ${L(w)}) as bigint)") + col("dx"))
-        .withColumn("by", expr(s"cast(floor(cy / ${L(w)}) as bigint)") + col("dy"))
-      val pts = Tables.pages(s, dir).select(col("lon"), col("lat"),
-        expr(s"cast(floor(lon / ${L(w)}) as bigint)").as("pbx"),
-        expr(s"cast(floor(lat / ${L(w)}) as bigint)").as("pby"))
-      cells.join(pts,
-          col("bx") === col("pbx") && col("by") === col("pby") &&
-            expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)") <= lit(r * r),
-          "left_semi")
-        .select("ix", "iy").distinct()
-        .orderBy("ix", "iy")
-    })
+    // BufferRaster (buffer_raster.rs) at the default max_dist 1°.
+    "buffer_raster" -> ((s, dir) => bufferRaster(s, dir, 1.0))
   )
 
   def oracles: Map[String, String] = Map(
@@ -522,13 +521,6 @@ object Focal extends Gates {
         "SELECT n, (cast(n as double) * cast(sxy as double) - cast(sx as double) * cast(sy as double)) / " +
         "sqrt((cast(n as double) * cast(sxx as double) - cast(sx as double) * cast(sx as double)) * " +
         "(cast(n as double) * cast(syy as double) - cast(sy as double) * cast(sy as double))) AS pearson_r FROM a"),
-    "buffer_raster" -> {
-      val n = 128; val rx = graft.core.Lit.d(360.0 / n); val ry = graft.core.Lit.d(180.0 / n)
-      s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
-        s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
-        s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})) " +
-        "SELECT DISTINCT ix, iy FROM cells JOIN pages " +
-        "ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= 1.0e0 ORDER BY ix, iy"
-    }
+    "buffer_raster" -> bufferRasterDuck(1.0)
   )
 }

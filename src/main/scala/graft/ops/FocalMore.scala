@@ -133,16 +133,15 @@ object FocalMore extends Gates {
     val base: Map[String, (SparkSession, String) => DataFrame] = queryDefs.map {
       case (name, sel, _) =>
         name -> ((s: SparkSession, dir: String) =>
-          r1(s, dir).selectExpr("ix", "iy", sel).orderBy("ix", "iy"))
+          r1(s, dir).selectExpr("ix", "iy", sel))
     }.toMap
     base ++ Map(
       "knearest_mean_filter" -> ((s: SparkSession, dir: String) =>
-        r1(s, dir).selectExpr("ix", "iy", kNearestExpr(SparkD)).orderBy("ix", "iy")),
+        r1(s, dir).selectExpr("ix", "iy", kNearestExpr(SparkD))),
       "log_filter" -> ((s: SparkSession, dir: String) =>
         haloR2(Raster.density(s, dir, 6))
           .groupBy("ix", "iy")
-          .agg(expr(s"cast(sum(nv * ($wLoG)) as bigint)").as("v_log"))
-          .orderBy("ix", "iy")),
+          .agg(expr(s"cast(sum(nv * ($wLoG)) as bigint)").as("v_log"))),
       "diff_of_gaussian" -> ((s: SparkSession, dir: String) =>
         haloR2(Raster.density(s, dir, 6))
           .groupBy("ix", "iy")
@@ -151,8 +150,7 @@ object FocalMore extends Gates {
             expr(s"cast(sum(nv * ($wB2)) as bigint)").as("s2"),
             expr(s"cast(sum($wB2) as bigint)").as("w2"))
           .selectExpr("ix", "iy",
-            "cast(s1 as double) / cast(w1 as double) - cast(s2 as double) / cast(w2 as double) AS v_dog")
-          .orderBy("ix", "iy"))
+            "cast(s1 as double) / cast(w1 as double) - cast(s2 as double) / cast(w2 as double) AS v_dog"))
     )
   }
 

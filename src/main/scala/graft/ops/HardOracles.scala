@@ -32,29 +32,27 @@ object HardOracles extends Gates {
       Hull.featureCircles(s, pts)
         .selectExpr("fid", "round(ccx, 6) AS ccx", "round(ccy, 6) AS ccy",
           "round(cr, 6) AS cr")
-        .orderBy("fid")
     }),
     // Clump (CCL via label propagation); clumpSql is the transitive
     // closure, ClumpSpec pins the partition against a scalar flood fill.
     "clump" -> ((s: SparkSession, dir: String) =>
       Clump.clump(s, Raster.density(s, dir, 5)
           .filter(!expr(Raster.nodataCond))
-          .withColumn("v", lit(1L)))
-        .orderBy("ix", "iy")),
+          .withColumn("v", lit(1L)))),
     // KMeansClustering — iterative; KMeansSpec also pins it against the
     // scalar Lloyd loop.
     "kmeans_clustering" -> ((s: SparkSession, dir: String) => {
       val cells = Raster.density(s, dir, 6)
         .selectExpr("ix * 1000000 + iy AS id",
           "cast(ix as double) AS x", "cast(iy as double) AS y")
-      KMeans.kmeans(s, cells, k = 5).orderBy("id")
+      KMeans.kmeans(s, cells, k = 5)
     }),
     "modified_kmeans_clustering" -> ((s: SparkSession, dir: String) => {
       val cells = Raster.density(s, dir, 6)
         .selectExpr("ix * 1000000 + iy AS id",
           "cast(ix as double) AS x", "cast(iy as double) AS y")
       KMeans.kmeansMerged(s, cells, k0 = 10, rounds = 10,
-        mergeD2 = 64.0).orderBy("id")
+        mergeD2 = 64.0)
     }),
     // MinimumConvexHull / MinimumBoundingBox per zone; HullSpec pins the
     // kernels to the reference vectors and the two-phase merge.
@@ -69,7 +67,6 @@ object HardOracles extends Gates {
       Hull.featureHulls(s, pts)
         .selectExpr("fid", "hull_n", "round(hull_area, 6) AS hull_area",
           "round(mbb_area, 4) AS mbb_area")
-        .orderBy("fid")
     })
   )
 

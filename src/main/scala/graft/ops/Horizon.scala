@@ -54,7 +54,6 @@ object Horizon extends Gates {
       g.join(east, Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy",
           "round(degrees(atan(coalesce(mx, -9999999.0e0))), 6) AS horizon_deg")
-        .orderBy("ix", "iy")
     }),
 
     "fetch_analysis" -> ((s, dir) => {
@@ -68,7 +67,6 @@ object Horizon extends Gates {
         .selectExpr("ix", "iy",
           s"CASE WHEN fd IS NOT NULL THEN cast(fd as double) " +
             s"ELSE -(cast(${G - 1} - ix as double)) END AS fetch_dist")
-        .orderBy("ix", "iy")
     }),
 
     "viewshed" -> ((s, dir) => {
@@ -109,7 +107,6 @@ object Horizon extends Gates {
           "CASE WHEN maxang IS NULL OR " +
             s"(cast(z as double) - zo) / sqrt(cast(dx * dx + dy * dy as double)) >= maxang " +
             "THEN 1 ELSE 0 END AS visible")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -101,13 +101,12 @@ object Hydro extends Gates {
       d8dirsKeep(s, dir)
         .selectExpr("ix", "iy", "dir",
           "CASE WHEN dir >= 0 THEN cast(pow(2.0e0, cast(dir as double)) as bigint) ELSE 0 END AS pointer")
-        .orderBy("ix", "iy")
     }),
 
     "d8_flow_accum" -> ((s, dir) => {
       val dd = d8dirsKeep(s, dir).localCheckpoint()
       val edges = dd.filter(col("dir") >= 0).select("ix", "iy", "tx", "ty")
-      Dem.faOn(dd.select("ix", "iy"), edges, "d8_flow_accum").orderBy("ix", "iy")
+      Dem.faOn(dd.select("ix", "iy"), edges, "d8_flow_accum")
     }),
 
     // Same tool, the SCALE-PATH schedule: wavefront (frontier-only)
@@ -123,7 +122,7 @@ object Hydro extends Gates {
         .select("ix", "iy", "tx", "ty").localCheckpoint()
       val grid = dd.select("ix", "iy").localCheckpoint()
       val (fa, _) = FaScale.faFrontier(grid, edges)
-      fa.orderBy("ix", "iy")
+      fa
     })
   )
 

@@ -95,7 +95,6 @@ object Hydro2 extends Gates {
       g.select("ix", "iy").join(agg, Seq("ix", "iy"), "left")
         .filter(expr("coalesce(n_lower, 0) = 0"))
         .select("ix", "iy")
-        .orderBy("ix", "iy")
     }),
 
     "fill_single_cell_pits" -> ((s, dir) => {
@@ -110,14 +109,12 @@ object Hydro2 extends Gates {
           "CASE WHEN coalesce(n_lower, 0) > 0 THEN cast(v as double) " +
             "WHEN min_zn IS NOT NULL THEN cast(min_zn as double) + 0.0001e0 " +
             "ELSE cast(v as double) END AS z_filled")
-        .orderBy("ix", "iy")
     }),
 
     "extract_streams" -> ((s, dir) => {
       Hydro.queries("d8_flow_accum")(s, dir)
         .selectExpr("ix", "iy",
           s"CASE WHEN fa > $streamT THEN 1 ELSE 0 END AS stream")
-        .orderBy("ix", "iy")
     }),
 
     // L(c) = steps to the terminus, carried as (n_card, n_diag) ints.
@@ -131,7 +128,6 @@ object Hydro2 extends Gates {
         len.join(stepped, Seq("ix", "iy"), "left")
           .selectExpr("ix", "iy", "coalesce(nc2, 0) AS nc", "coalesce(nd2, 0) AS nd")
       }.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS flowpath_len")
-        .orderBy("ix", "iy")
     }),
 
     // Basins (hydro_analysis/basins.rs semantics): every cell labelled by
@@ -144,7 +140,6 @@ object Hydro2 extends Gates {
         "CASE WHEN dir >= 0 THEN ty ELSE iy END AS ry")
       Dem.roots(p0, "basins")
         .selectExpr("ix", "iy", "rx * 1000000 + ry AS basin")
-        .orderBy("ix", "iy")
     }),
 
     // longest upslope flowpath ending at each cell
@@ -159,7 +154,6 @@ object Hydro2 extends Gates {
         up.join(cand, Seq("ix", "iy"), "left")
           .selectExpr("ix", "iy", "coalesce(unc, 0) AS nc", "coalesce(und, 0) AS nd")
       }.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS upslope_len")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -101,40 +101,34 @@ object Hydro3 extends Gates {
 
     "downslope_distance_to_stream" -> ((s, dir) =>
       streamDown(s, dir).filter(col("nc").isNotNull)
-        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")),
 
     "elevation_above_stream" -> ((s, dir) =>
       streamDown(s, dir).filter(col("nc").isNotNull)
         .join(Dem.dem(s, dir), Seq("ix", "iy"))
-        .selectExpr("ix", "iy", "cast(z - zs as bigint) AS elev_above")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "cast(z - zs as bigint) AS elev_above")),
 
     "num_downslope_neighbours" -> ((s, dir) =>
       Dem.halo(Dem.dem(s, dir))
         .groupBy("ix", "iy")
-        .agg(expr("cast(sum(CASE WHEN nz < z THEN 1 ELSE 0 END) as bigint)").as("n_down"))
-        .orderBy("ix", "iy")),
+        .agg(expr("cast(sum(CASE WHEN nz < z THEN 1 ELSE 0 END) as bigint)").as("n_down"))),
 
     "num_upslope_neighbours" -> ((s, dir) =>
       Dem.halo(Dem.dem(s, dir))
         .groupBy("ix", "iy")
-        .agg(expr("cast(sum(CASE WHEN nz > z THEN 1 ELSE 0 END) as bigint)").as("n_up"))
-        .orderBy("ix", "iy")),
+        .agg(expr("cast(sum(CASE WHEN nz > z THEN 1 ELSE 0 END) as bigint)").as("n_up"))),
 
     "average_flowpath_slope" -> ((s, dir) =>
       divAgg(s, dir).filter(expr("n_in > 0"))
         .join(Dem.dem(s, dir), Seq("ix", "iy"))
         .selectExpr("ix", "iy",
           "round(degrees(atan((cast(tude as double) / cast(nfp as double) - cast(z as double)) / " +
-            s"((${lenOf("a", "b")}) / cast(nfp as double)))), 6) AS avg_fp_slope")
-        .orderBy("ix", "iy")),
+            s"((${lenOf("a", "b")}) / cast(nfp as double)))), 6) AS avg_fp_slope")),
 
     "average_upslope_flowpath_length" -> ((s, dir) =>
       divAgg(s, dir)
         .selectExpr("ix", "iy",
-          s"(${lenOf("a", "b")}) / cast(nfp as double) AS avg_upslope_len")
-        .orderBy("ix", "iy")),
+          s"(${lenOf("a", "b")}) / cast(nfp as double) AS avg_upslope_len")),
 
     "snap_pour_points" -> ((s, dir) => snapPour(s, dir, 2)),
 
@@ -153,7 +147,7 @@ object Hydro3 extends Gates {
           .distinct()
         cur.join(stepDown, Seq("ix", "iy"), "left")
           .selectExpr("ix", "iy", "greatest(m, coalesce(m2, 0)) AS m")
-      }.filter(col("m") === 1).select("ix", "iy").orderBy("ix", "iy")
+      }.filter(col("m") === 1).select("ix", "iy")
     }),
 
     "hypsometric_analysis" -> ((s, dir) => {
@@ -167,7 +161,6 @@ object Hydro3 extends Gates {
           "sum(n_cells) OVER (ORDER BY bin DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
         .selectExpr("bin", "n_cells",
           "round(cast(cum_above as double) / cast(ntot as double), 6) AS frac_above")
-        .orderBy("bin")
     })
   )
 
@@ -201,7 +194,6 @@ object Hydro3 extends Gates {
       .agg(expr("min_by(named_struct('sx', ix, 'sy', iy), " +
         "named_struct('nf', -fa, 'sx', ix, 'sy', iy))").as("b"))
       .selectExpr("pid", "b.sx AS sx", "b.sy AS sy")
-      .orderBy("pid")
   }
 
   private[ops] def snapPourDuck(r: Int): String = W(

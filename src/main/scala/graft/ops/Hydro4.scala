@@ -129,11 +129,10 @@ object Hydro4 extends Gates {
       Dem.dem(s, dir).select("ix", "iy").join(best, Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy",
           "CASE WHEN dir IS NOT NULL THEN cast(pow(2.0e0, cast(dir as double)) as bigint) ELSE 0 END AS pointer")
-        .orderBy("ix", "iy")
     }),
 
     "d8_mass_flux" -> ((s, dir) =>
-      massFlux(s, dir).select("ix", "iy", "flux").orderBy("ix", "iy")),
+      massFlux(s, dir).select("ix", "iy", "flux")),
 
     "find_parallel_flow" -> ((s, dir) => {
       val d = Dem.dd(s, dir)
@@ -146,30 +145,26 @@ object Hydro4 extends Gates {
         .join(nbrs, Seq("ix", "iy"), "left")
         .groupBy("ix", "iy")
         .agg(expr("cast(sum(CASE WHEN ndir = dir THEN 1 ELSE 0 END) as bigint)").as("n_parallel"))
-        .orderBy("ix", "iy")
     }),
 
     "elev_above_pit" -> ((s, dir) =>
       demRoots(s, dir)
         .join(Dem.dem(s, dir), Seq("ix", "iy"))
         .join(Dem.dem(s, dir).selectExpr("ix AS rx", "iy AS ry", "z AS rz"), Seq("rx", "ry"))
-        .selectExpr("ix", "iy", "cast(z - rz as bigint) AS elev_above_pit")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "cast(z - rz as bigint) AS elev_above_pit")),
 
     "longest_flowpath" -> ((s, dir) =>
       demRoots(s, dir)
         .join(downLen(s, dir), Seq("ix", "iy"))
         .groupBy(col("rx"), col("ry"))
         .agg(expr(s"max(${lenOf("nc", "nd")})").as("mx"))
-        .selectExpr("rx * 1000 + ry AS basin", "mx AS longest_len")
-        .orderBy("basin")),
+        .selectExpr("rx * 1000 + ry AS basin", "mx AS longest_len")),
 
     "flood_order" -> ((s, dir) =>
       HydroFill.filled(s, dir)
         .withColumn("flood_ord", row_number().over(
           Window.orderBy(col("f"), col("z"), col("ix"), col("iy"))))
-        .selectExpr("ix", "iy", "cast(flood_ord as bigint) AS flood_ord")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "cast(flood_ord as bigint) AS flood_ord")),
 
     "extract_valleys" -> ((s, dir) => {
       val g = Dem.dem(s, dir)
@@ -183,7 +178,7 @@ object Hydro4 extends Gates {
           "named_struct('nz', -z, 'x', ix, 'y', iy))").as("b"))
         .selectExpr("b.mx AS ix", "b.my AS iy").distinct()
       g.join(marked, Seq("ix", "iy"), "left_anti")
-        .select("ix", "iy").orderBy("ix", "iy")
+        .select("ix", "iy")
     }),
 
     "stream_slope_continuous" -> ((s, dir) => {
@@ -196,15 +191,13 @@ object Hydro4 extends Gates {
           s"cast(z - tz as double) / (${lenOf("ec", "ed")}) AS sl")
       Dem.streams(s, dir).join(sl, Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy", "coalesce(sl, 0.0e0) AS stream_slope")
-        .orderBy("ix", "iy")
     }),
 
     "long_profile" -> ((s, dir) =>
       Dem.links(s, dir)
         .join(Dem.downAgg(s, dir), Seq("ix", "iy"))
         .join(Dem.dem(s, dir), Seq("ix", "iy"))
-        .selectExpr("ix", "iy", "link_id", s"${lenOf("nc", "nd")} AS dist", "z")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "link_id", s"${lenOf("nc", "nd")} AS dist", "z")),
 
     // LongProfileFromPoints (long_profile_from_points.rs): the profile
     // table for the D8 paths from the seed points — one row per (seed,
@@ -233,21 +226,18 @@ object Hydro4 extends Gates {
         .join(downLen(s, dir), Seq("ix", "iy"))
         .join(Dem.dem(s, dir), Seq("ix", "iy"))
         .selectExpr("bit AS seed_bit", "ix", "iy", s"${lenOf("nc", "nd")} AS dist", "z")
-        .orderBy("seed_bit", "ix", "iy")
     }),
 
     "rasterize_streams" -> ((s, dir) =>
       Dem.dem(s, dir).select("ix", "iy")
         .join(Dem.links(s, dir), Seq("ix", "iy"), "left")
-        .selectExpr("ix", "iy", "coalesce(link_id, 0) AS stream_link")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "coalesce(link_id, 0) AS stream_link")),
 
     "raster_streams_to_vector" -> ((s, dir) =>
       Dem.links(s, dir)
         .groupBy("link_id").agg(count(lit(1)).as("n_cells"))
         .join(Streams2.linkLen(s, dir), Seq("link_id"), "left")
-        .selectExpr("link_id", "n_cells", "coalesce(link_len, 0.0e0) AS link_len")
-        .orderBy("link_id"))
+        .selectExpr("link_id", "n_cells", "coalesce(link_len, 0.0e0) AS link_len"))
   )
 
   // ---- DuckDB twins ----------------------------------------------------

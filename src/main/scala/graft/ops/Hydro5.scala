@@ -67,7 +67,6 @@ object Hydro5 extends Gates {
         .groupBy("ix", "iy").agg(min("bz").as("bz"))
       g.join(cand, Seq("ix", "iy"), "left")
         .selectExpr("ix", "iy", "coalesce(bz, cast(z as double)) AS z_breached")
-        .orderBy("ix", "iy")
     }),
 
     "elevation_above_stream_euclidean" -> ((s, dir) => {
@@ -78,7 +77,6 @@ object Hydro5 extends Gates {
         .join(g, Seq("ix", "iy"))
         .join(g.selectExpr("ix AS src_ix", "iy AS src_iy", "z AS sz"), Seq("src_ix", "src_iy"))
         .selectExpr("ix", "iy", "cast(z - sz as bigint) AS elev_above")
-        .orderBy("ix", "iy")
     }),
 
     "jenson_snap_pour_points" -> ((s, dir) => {
@@ -95,7 +93,6 @@ object Hydro5 extends Gates {
         .agg(expr("min_by(named_struct('sx', ix, 'sy', iy), " +
           "named_struct('d2', d2, 'sx', ix, 'sy', iy))").as("b"))
         .selectExpr("pid", "b.sx AS sx", "b.sy AS sy")
-        .orderBy("pid")
     }),
 
     "flatten_lakes" -> ((s, dir) => {
@@ -104,14 +101,12 @@ object Hydro5 extends Gates {
       g.crossJoin(broadcast(lakeMin))
         .selectExpr("ix", "iy",
           s"CASE WHEN $lakeBox THEN lz ELSE z END AS z_flat")
-        .orderBy("ix", "iy")
     }),
 
     "fill_burn" -> ((s, dir) =>
       Dem.dem(s, dir)
         .join(Dem.streams(s, dir).withColumn("st", lit(1)), Seq("ix", "iy"), "left")
-        .selectExpr("ix", "iy", "CASE WHEN st = 1 THEN z - 50 ELSE z END AS z_burned")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "CASE WHEN st = 1 THEN z - 50 ELSE z END AS z_burned")),
 
     "trend_surface_points" -> ((s, dir) => {
       Tables.register(s, dir)
@@ -123,7 +118,6 @@ object Hydro5 extends Gates {
       Raster.density(s, dir, 5)
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true").schema("ix BIGINT, iy BIGINT, v BIGINT").csv(tmp)
-        .orderBy("ix", "iy")
     }),
 
     "lidar_info" -> ((s, dir) =>
@@ -134,8 +128,7 @@ object Hydro5 extends Gates {
         .agg(count(lit(1)).as("n"), min("lon").as("min_x"), max("lon").as("max_x"),
           min("lat").as("min_y"), max("lat").as("max_y"),
           min("z").as("min_z"), max("z").as("max_z"),
-          expr("cast(sum(z) as bigint)").as("sum_z"))
-        .orderBy("fl"))
+          expr("cast(sum(z) as bigint)").as("sum_z")))
   )
 
   /** plane fit over NYC points, micro-unit-quantized sums + double Cramer. */

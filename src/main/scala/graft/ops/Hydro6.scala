@@ -149,7 +149,7 @@ object Hydro6 extends Gates {
         "CASE WHEN mk IS NOT NULL OR dir < 0 THEN ix ELSE tx END AS rx",
         "CASE WHEN mk IS NOT NULL OR dir < 0 THEN iy ELSE ty END AS ry")
     Dem.roots(p0, "isobasins_label")
-      .selectExpr("ix", "iy", s"rx * $G + ry AS basin").orderBy("ix", "iy")
+      .selectExpr("ix", "iy", s"rx * $G + ry AS basin")
   }
 
   // ---- queries ----------------------------------------------------------
@@ -159,8 +159,7 @@ object Hydro6 extends Gates {
     "fd8_pointer" -> ((s, dir) =>
       Dem.halo(Dem.dem(s, dir))
         .groupBy("ix", "iy")
-        .agg(expr(s"cast(sum($fd8BitE) as bigint)").as("fd8_dir"))
-        .orderBy("ix", "iy")),
+        .agg(expr(s"cast(sum($fd8BitE) as bigint)").as("fd8_dir"))),
 
     "raise_walls" -> ((s, dir) => {
       Dem.dem(s, dir).createOrReplaceTempView("dem")
@@ -178,7 +177,6 @@ object Hydro6 extends Gates {
       f.join(d2.select("ix", "iy", "dir"), Seq("ix", "iy"))
         .join(fa2, Seq("ix", "iy"))
         .selectExpr("ix", "iy", "cast(round(f) as bigint) AS z_fill", "dir", "fa")
-        .orderBy("ix", "iy")
     }),
 
     "unnest_basins" -> ((s, dir) => {
@@ -202,7 +200,6 @@ object Hydro6 extends Gates {
         .filter(expr("(m & shiftleft(1, cast(pid as int))) <> 0"))
         .join(broadcast(levels), Seq("pid"))
         .selectExpr("level", "pid", "ix", "iy")
-        .orderBy("level", "pid", "ix", "iy")
     }),
 
     "isobasins" -> ((s, dir) => isobasins(s, dir)),
@@ -224,7 +221,6 @@ object Hydro6 extends Gates {
         .selectExpr("ix", "iy",
           "CASE WHEN mx > mn THEN round(cast(z - mn as double) / cast(mx - mn as double), 6) " +
             "ELSE 0.0e0 END AS rel_elev")
-        .orderBy("ix", "iy")
     }),
 
     "impoundment_index" -> ((s, dir) => {
@@ -252,7 +248,6 @@ object Hydro6 extends Gates {
         .groupBy("pid")
         .agg(expr("count(*)").as("flooded_cells"),
           expr("cast(sum(crest - z) as bigint)").as("volume"))
-        .orderBy("pid")
     })
   )
 

@@ -70,19 +70,17 @@ object HydroFill extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "fill_depressions" -> ((s, dir) =>
-      filled(s, dir).selectExpr("ix", "iy", "f AS z_filled").orderBy("ix", "iy")),
+      filled(s, dir).selectExpr("ix", "iy", "f AS z_filled")),
 
     "sink" -> ((s, dir) => {
       val sc = filled(s, dir).filter(expr("f > cast(z as double)"))
         .selectExpr("ix", "iy", "cast(1 as bigint) AS v")
       Clump.clump(s, sc).selectExpr("ix", "iy", "label AS sink_id")
-        .orderBy("ix", "iy")
     }),
 
     "depth_in_sink" -> ((s, dir) =>
       filled(s, dir).filter(expr("f > cast(z as double)"))
-        .selectExpr("ix", "iy", "f - cast(z as double) AS depth")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", "f - cast(z as double) AS depth")),
 
     "watershed" -> ((s, dir) => {
       // 3-row gauge pick: bounded, deterministic (fa DESC, ix, iy); the
@@ -100,7 +98,6 @@ object HydroFill extends Gates {
       val rooted = Dem.roots(p0, "watershed")
       rooted.join(pour.selectExpr("ix AS rx", "iy AS ry", "pid"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "cast(pid as bigint) AS ws")
-        .orderBy("ix", "iy")
     }),
 
     // Hillslopes (hillslopes.rs:105-260): the stream set is segmented
@@ -122,7 +119,7 @@ object HydroFill extends Gates {
           "CASE WHEN is_st = 1 OR dir < 0 THEN iy ELSE ty END AS ry")
       val rooted = Dem.roots(p0, "hillslopes")
       rooted.join(hl.selectExpr("ix AS rx", "iy AS ry", "hs"), Seq("rx", "ry"))
-        .select("ix", "iy", "hs").orderBy("ix", "iy")
+        .select("ix", "iy", "hs")
     }),
 
     // StrahlerBasins (strahler_basins.rs:258-320): the head-walk order
@@ -139,7 +136,6 @@ object HydroFill extends Gates {
       val rooted = Dem.roots(p0, "strahler_basins")
       rooted.join(Dem.strahler(s, dir).selectExpr("ix AS rx", "iy AS ry", "ord"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "ord AS basin_order")
-        .orderBy("ix", "iy")
     }),
 
     "subbasins" -> ((s, dir) => {
@@ -152,7 +148,6 @@ object HydroFill extends Gates {
       val rooted = Dem.roots(p0, "subbasins")
       rooted.join(Dem.links(s, dir).selectExpr("ix AS rx", "iy AS ry", "link_id"), Seq("rx", "ry"))
         .selectExpr("ix", "iy", "link_id AS sub")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -78,6 +78,58 @@ object Knn extends Gates {
     s"lon >= ${Lit.d(nycX0)} AND lon <= ${Lit.d(nycX1)} AND " +
       s"lat >= ${Lit.d(nycY0)} AND lat <= ${Lit.d(nycY1)}"
 
+  /** (Σ z·w, Σ w) aggregate texts for IDW weight 1/d^w (the --weight
+    * parameter, idw_interpolation.rs:575-596); identical text on both
+    * engines (sqrt is correctly rounded in both, and the d = 0 row's
+    * inf/NULL contribution is discarded by the exact-hit CASE). */
+  private def idwKernel(w: Int): (String, String) = w match {
+    case 1 => ("sum(cast(n_chars as double) / sqrt(d2))", "sum(1.0e0 / sqrt(d2))")
+    case 2 => ("sum(cast(n_chars as double) / d2)", "sum(1.0e0 / d2)")
+    case 3 => ("sum(cast(n_chars as double) / (d2 * sqrt(d2)))", "sum(1.0e0 / (d2 * sqrt(d2)))")
+  }
+
+  /** IdwInterpolation: res-7 grid, radius r=3°, weight 1/d^wExp,
+    * min_points=3, exact-hit d=0 → copy z. */
+  private[ops] def idw(s: SparkSession, dir: String, wExp: Int): DataFrame = {
+    val res = 7; val n = 1 << res
+    val rx = 360.0 / n; val ry = 180.0 / n
+    val r = 3.0; val w = r // 3×3 block at width r — see withBlock
+    val (swzE, swE) = idwKernel(wExp)
+    val cells = s.range(n.toLong * n)
+      .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
+      .withColumn("cx", expr(s"-180.0e0 + ${Lit.d(rx)} / 2.0e0 + ix * ${Lit.d(rx)}"))
+      .withColumn("cy", expr(s"-90.0e0 + ${Lit.d(ry)} / 2.0e0 + iy * ${Lit.d(ry)}"))
+    val pts = bucketed(s, dir, w)
+    val cand = withBlock(cells, w, "cx", "cy")
+      .join(pts, Seq("bx", "by"))
+      .withColumn("d2", expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)"))
+      .filter(col("d2") <= lit(r * r))
+    cand.groupBy("ix", "iy")
+      .agg(count(lit(1)).as("np"),
+           expr("min(d2)").as("min_d2"),
+           expr("min_by(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0)").as("hit_z"),
+           expr(swzE).as("swz"),
+           expr(swE).as("sw"))
+      .filter(col("np") >= 3)
+      .select(col("ix"), col("iy"), col("np"),
+        expr("CASE WHEN min_d2 = 0.0e0 THEN cast(hit_z as double) ELSE round(swz / sw, 6) END").as("v"))
+  }
+
+  private[ops] def idwDuck(wExp: Int): String = {
+    val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
+    val (swzE, swE) = idwKernel(wExp)
+    s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
+      s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
+      s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
+      "cand AS (SELECT ix, iy, doc_id, n_chars, " +
+      "(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) AS d2 FROM cells JOIN pages " +
+      "ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= 9.0e0) " +
+      "SELECT ix, iy, count(*) AS np, " +
+      "CASE WHEN min(d2) = 0.0e0 THEN cast(arg_min(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0) as double) " +
+      s"ELSE round($swzE / $swE, 6) END AS v " +
+      "FROM cand GROUP BY ix, iy HAVING count(*) >= 3 ORDER BY ix, iy"
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // k=5 nearest pages within r=0.01° for every page in the NYC hot cells.
@@ -111,7 +163,6 @@ object Knn extends Gates {
         .select(col("qid"), posexplode(col("tk")))
         .select(col("qid"), expr("cast(pos + 1 as int)").as("rank"),
           col("col.id").as("nid"), col("col.dist").as("d2"))
-        .orderBy("qid", "rank")
     }),
 
     // NearestNeighbourGridding (nearest_neighbour_gridding.rs): res-7 grid,
@@ -135,35 +186,11 @@ object Knn extends Gates {
         .agg(graft.agg.TopKByDist.topK(1)(col("d2"), col("doc_id")).as("tk"))
         .select(col("ix"), col("iy"),
           expr("tk[0].id").as("doc_id"), expr("tk[0].dist").as("d2"))
-        .orderBy("ix", "iy")
     }),
 
-    // IdwInterpolation (idw_interpolation.rs:575-596): res-7 grid, radius
-    // r=3°, weight 1/d² (exponent 2), min_points=3, exact-hit d=0 → copy z.
-    "idw_interpolation" -> ((s, dir) => {
-      val res = 7; val n = 1 << res
-      val rx = 360.0 / n; val ry = 180.0 / n
-      val r = 3.0; val w = r // 3×3 block at width r — see withBlock
-      val cells = s.range(n.toLong * n)
-        .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
-        .withColumn("cx", expr(s"-180.0e0 + ${Lit.d(rx)} / 2.0e0 + ix * ${Lit.d(rx)}"))
-        .withColumn("cy", expr(s"-90.0e0 + ${Lit.d(ry)} / 2.0e0 + iy * ${Lit.d(ry)}"))
-      val pts = bucketed(s, dir, w)
-      val cand = withBlock(cells, w, "cx", "cy")
-        .join(pts, Seq("bx", "by"))
-        .withColumn("d2", expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)"))
-        .filter(col("d2") <= lit(r * r))
-      cand.groupBy("ix", "iy")
-        .agg(count(lit(1)).as("np"),
-             expr("min(d2)").as("min_d2"),
-             expr("min_by(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0)").as("hit_z"),
-             expr("sum(cast(n_chars as double) / d2)").as("swz"),
-             expr("sum(1.0e0 / d2)").as("sw"))
-        .filter(col("np") >= 3)
-        .select(col("ix"), col("iy"), col("np"),
-          expr("CASE WHEN min_d2 = 0.0e0 THEN cast(hit_z as double) ELSE round(swz / sw, 6) END").as("v"))
-        .orderBy("ix", "iy")
-    })
+    // IdwInterpolation (idw_interpolation.rs:575-596) at the default
+    // weight exponent 2.
+    "idw_interpolation" -> ((s, dir) => idw(s, dir, 2))
   )
 
   def oracles: Map[String, String] = Map(
@@ -188,18 +215,6 @@ object Knn extends Gates {
         "r AS (SELECT ix, iy, doc_id, d2, row_number() OVER (PARTITION BY ix, iy ORDER BY d2, doc_id) AS rn FROM cand) " +
         "SELECT ix, iy, doc_id, d2 FROM r WHERE rn = 1 ORDER BY ix, iy"
     },
-    "idw_interpolation" -> {
-      val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-      s"${Geo.pagesWith(DuckD)}, cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
-        s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
-        s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
-        "cand AS (SELECT ix, iy, doc_id, n_chars, " +
-        "(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) AS d2 FROM cells JOIN pages " +
-        "ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= 9.0e0) " +
-        "SELECT ix, iy, count(*) AS np, " +
-        "CASE WHEN min(d2) = 0.0e0 THEN cast(arg_min(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0) as double) " +
-        "ELSE round(sum(cast(n_chars as double) / d2) / sum(1.0e0 / d2), 6) END AS v " +
-        "FROM cand GROUP BY ix, iy HAVING count(*) >= 3 ORDER BY ix, iy"
-    }
+    "idw_interpolation" -> idwDuck(2)
   )
 }

@@ -54,7 +54,6 @@ object KnnShellGate extends Gates {
       val pts = Tables.pages(s, dir).filter(expr(nycBox))
         .selectExpr("doc_id AS id", "lon AS x", "lat AS y")
       KnnShell.knn(s, q, pts, k = k, r = 0.02)
-        .orderBy("qid", "rank")
     })
   )
 

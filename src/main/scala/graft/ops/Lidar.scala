@@ -67,7 +67,6 @@ object Lidar extends Gates {
         .groupBy("id").agg(max("z").as("z"), max("nemin").as("opened"))
       dil.selectExpr("id AS doc_id", "cast(z - opened as bigint) AS residual",
           s"CASE WHEN z - opened < $heightT THEN 1 ELSE 0 END AS is_ground")
-        .orderBy("doc_id")
     }),
 
     "lidar_outliers" -> ((s, dir) => {
@@ -81,7 +80,6 @@ object Lidar extends Gates {
           s"CASE WHEN n > 1 AND abs(cast(z as double) - " +
             s"cast(sz - z as double) / cast(n - 1 as double)) > ${Lit.d(elevDiff)} " +
             "THEN 1 ELSE 0 END AS is_outlier")
-        .orderBy("doc_id")
     })
   )
 

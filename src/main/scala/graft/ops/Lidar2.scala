@@ -64,7 +64,6 @@ object Lidar2 extends Gates {
       .groupBy("ix", "iy")
       .agg(expr("min_by(named_struct('id', id, 'z', z), named_struct('z', z, 'id', id))").as("b"))
       .selectExpr("ix", "iy", "b.id AS doc_id", "b.z AS z")
-      .orderBy("ix", "iy")
 
   private[ops] def thinDuck(rv: Double): String =
     s"${Geo.pagesWith(DuckD)}, ${ptsSql(DuckD)}, " +
@@ -99,7 +98,6 @@ object Lidar2 extends Gates {
         .agg(count(lit(1)).as("n"))
         .selectExpr("cix AS ix", "ciy AS iy",
           s"cast(n as double) / ($pi * $r2) AS density")
-        .orderBy("ix", "iy")
     }),
 
     "lidar_thin" -> ((s, dir) => thin(s, dir, res)),
@@ -109,14 +107,12 @@ object Lidar2 extends Gates {
         .selectExpr("id", "x", "y", s"$tileIxE AS tix", s"$tileIyE AS tiy")
         .groupBy("tix", "tiy")
         .agg(count(lit(1)).as("n"), min("x").as("min_x"), max("x").as("max_x"),
-          min("y").as("min_y"), max("y").as("max_y"))
-        .orderBy("tix", "tiy")),
+          min("y").as("min_y"), max("y").as("max_y"))),
 
     "filter_lidar_scan_angles" -> ((s, dir) =>
       pts(s, dir)
         .filter(expr(s"abs(scan_angle) <= $maxScanAngle"))
-        .selectExpr("id AS doc_id", "scan_angle")
-        .orderBy("doc_id")),
+        .selectExpr("id AS doc_id", "scan_angle")),
 
     // LasToAscii (las_to_ascii.rs): the point cloud through a REAL text
     // sink and back — CSV round trip certifies the export lossless.
@@ -126,7 +122,6 @@ object Lidar2 extends Gates {
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true")
         .schema("id BIGINT, x DOUBLE, y DOUBLE, z BIGINT").csv(tmp)
-        .orderBy("id")
     }),
 
     // LidarColourize (lidar_colourize.rs): points take the RGB of the
@@ -143,7 +138,6 @@ object Lidar2 extends Gates {
         .selectExpr("id", s"${Geo.ix(SparkD, "x", 5)} AS bx", s"${Geo.iy(SparkD, "y", 5)} AS by")
         .join(bands, Seq("bx", "by"), "left")
         .selectExpr("id AS doc_id", "coalesce(r, 0) AS r", "coalesce(g, 0) AS g", "coalesce(b, 0) AS b")
-        .orderBy("doc_id")
     }),
 
     // NormalVectors (normal_vectors.rs): per-point plane fit over the
@@ -177,15 +171,14 @@ object Lidar2 extends Gates {
           expr("cast(sum(nz) as bigint)").as("sz"),
           expr("cast(sum(nqx * nz) as bigint)").as("sxz"),
           expr("cast(sum(nqy * nz) as bigint)").as("syz"))
-      sums.selectExpr(Seq("id AS doc_id") ++ normalSelect: _*).orderBy("doc_id")
+      sums.selectExpr(Seq("id AS doc_id") ++ normalSelect: _*)
     }),
 
     "lidar_histogram" -> ((s, dir) =>
       pts(s, dir)
         .selectExpr("id", "z", s"(z div $binW) AS bin")
         .groupBy("bin")
-        .agg(count(lit(1)).as("n"), min("z").as("min_z"), max("z").as("max_z"))
-        .orderBy("bin"))
+        .agg(count(lit(1)).as("n"), min("z").as("min_z"), max("z").as("max_z")))
   )
 
   /** normal = (-b, -c, 1)/|..| from the double-Cramer plane slopes. */

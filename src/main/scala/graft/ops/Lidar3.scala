@@ -115,7 +115,7 @@ object Lidar3 extends Gates {
       val segs = cellSegs(s, dir)
       pts(s, dir).selectExpr("id AS doc_id", s"$cellIxE AS cx", s"$cellIyE AS cy")
         .join(segs, Seq("cx", "cy"))
-        .select("doc_id", "seg").orderBy("doc_id")
+        .select("doc_id", "seg")
     }),
 
     "lidar_segmentation_based_filter" -> ((s, dir) => {
@@ -130,7 +130,7 @@ object Lidar3 extends Gates {
       pts(s, dir).selectExpr("id AS doc_id", s"$cellIxE AS cx", s"$cellIyE AS cy")
         .join(segs.select("cx", "cy", "seg"), Seq("cx", "cy"))
         .join(ground, Seq("seg"))
-        .select("doc_id", "is_ground").orderBy("doc_id")
+        .select("doc_id", "is_ground")
     }),
 
     "lidar_classify_subset" -> ((s, dir) => {
@@ -150,7 +150,7 @@ object Lidar3 extends Gates {
         .filter(expr(s"(bxp - x) * (bxp - x) + (byp - y) * (byp - y) <= $r2"))
         .groupBy("id")
         .agg(expr("min_by(cls, named_struct('d', (bxp - x) * (bxp - x) + (byp - y) * (byp - y), 'i', bid))").as("cls"))
-        .selectExpr("id AS doc_id", "cls").orderBy("doc_id")
+        .selectExpr("id AS doc_id", "cls")
     }),
 
     "lidar_tophat_transform" -> ((s, dir) => {
@@ -169,7 +169,7 @@ object Lidar3 extends Gates {
       val withEro = p.join(ero, Seq("id")).localCheckpoint()
       val open = nbrJoin(withEro, withEro, "ero").groupBy("id").agg(max("nv").as("open"))
       p.join(open, Seq("id"))
-        .selectExpr("id AS doc_id", "z - open AS tophat").orderBy("doc_id")
+        .selectExpr("id AS doc_id", "z - open AS tophat")
     }),
 
     "las_to_shapefile" -> ((s, dir) => {
@@ -178,7 +178,6 @@ object Lidar3 extends Gates {
         .withColumn("rec", row_number().over(Window.orderBy("id")))
         .selectExpr("cast(rec as bigint) AS rec", "id AS doc_id",
           "round(x, 6) AS x", "round(y, 6) AS y", "z", "scan_angle")
-        .orderBy("rec")
     }),
 
     "las_to_multipoint_shapefile" -> ((s, dir) =>
@@ -187,8 +186,7 @@ object Lidar3 extends Gates {
         .agg(count(lit(1)).as("n_points"),
           expr("round(min(x), 6)").as("min_x"), expr("round(max(x), 6)").as("max_x"),
           expr("round(min(y), 6)").as("min_y"), expr("round(max(y), 6)").as("max_y"),
-          min("id").as("first_id"), max("id").as("last_id"))
-        .orderBy("fl"))
+          min("id").as("first_id"), max("id").as("last_id")))
   )
 
   // ---- DuckDB twins -----------------------------------------------------

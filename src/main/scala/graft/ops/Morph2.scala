@@ -110,12 +110,10 @@ object Morph2 extends Gates {
     // after erasure stops, so each cap passes iff convergence happened
     // within the twin's unrolled rounds (ADVICE r4 parity rule).
     "line_thinning" -> ((s, dir) =>
-      iterate(mask4(s, dir), spur = false, 11, "line_thinning")
-        .orderBy("ix", "iy")),
+      iterate(mask4(s, dir), spur = false, 11, "line_thinning")),
 
     "remove_spurs" -> ((s, dir) =>
-      iterate(mask4(s, dir), spur = true, 9, "remove_spurs")
-        .orderBy("ix", "iy")),
+      iterate(mask4(s, dir), spur = true, 9, "remove_spurs")),
 
     // thicken_line.rs:192-211 synchronous single pass: a background cell
     // joins the mask when two consecutive cardinal neighbours are present
@@ -129,12 +127,11 @@ object Morph2 extends Gates {
         "(m7 = 1 AND m1 = 1 AND m0 = 0) OR (m1 = 1 AND m3 = 1 AND m2 = 0) OR " +
           "(m3 = 1 AND m5 = 1 AND m4 = 0) OR (m5 = 1 AND m7 = 1 AND m6 = 0))"))
         .select("ix", "iy")
-      m.unionByName(grown).orderBy("ix", "iy")
+      m.unionByName(grown)
     }),
 
     "find_ridges" -> ((s, dir) =>
-      iterate(ridgeMask(s, dir), spur = false, 7, "find_ridges")
-        .orderBy("ix", "iy"))
+      iterate(ridgeMask(s, dir), spur = false, 7, "find_ridges"))
   )
 
   // ---- DuckDB twins ----------------------------------------------------

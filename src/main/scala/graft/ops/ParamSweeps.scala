@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{DuckD, Gates, Geo, Lit}
+import graft.core.{DuckD, Gates, Geo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,93 +67,6 @@ object ParamSweeps extends Gates {
     s.sql("WITH " + meanFilterSql(r))
   }
 
-  // ---- IDW weight sweep --------------------------------------------------
-
-  /** (swz, sw) aggregate texts per weight exponent; identical text on
-    * both engines (sqrt is correctly rounded in both, and the d = 0 row's
-    * inf/NULL contribution is discarded by the exact-hit CASE). */
-  private def idwKernel(w: Int): (String, String) = w match {
-    case 1 => ("sum(cast(n_chars as double) / sqrt(d2))", "sum(1.0e0 / sqrt(d2))")
-    case 3 => ("sum(cast(n_chars as double) / (d2 * sqrt(d2)))", "sum(1.0e0 / (d2 * sqrt(d2)))")
-  }
-
-  private def idw(s: SparkSession, dir: String, wExp: Int): DataFrame = {
-    val res = 7; val n = 1 << res
-    val rx = 360.0 / n; val ry = 180.0 / n
-    val r = 3.0; val w = r // 3×3 block at width r — see Knn.withBlock
-    val (swzE, swE) = idwKernel(wExp)
-    val cells = s.range(n.toLong * n)
-      .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
-      .withColumn("cx", expr(s"-180.0e0 + ${Lit.d(rx)} / 2.0e0 + ix * ${Lit.d(rx)}"))
-      .withColumn("cy", expr(s"-90.0e0 + ${Lit.d(ry)} / 2.0e0 + iy * ${Lit.d(ry)}"))
-    val pts = Knn.bucketed(s, dir, w)
-    val cand = Knn.withBlock(cells, w, "cx", "cy")
-      .join(pts, Seq("bx", "by"))
-      .withColumn("d2", expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)"))
-      .filter(col("d2") <= lit(r * r))
-    cand.groupBy("ix", "iy")
-      .agg(count(lit(1)).as("np"),
-        expr("min(d2)").as("min_d2"),
-        expr("min_by(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0)").as("hit_z"),
-        expr(swzE).as("swz"), expr(swE).as("sw"))
-      .filter(col("np") >= 3)
-      .select(col("ix"), col("iy"), col("np"),
-        expr("CASE WHEN min_d2 = 0.0e0 THEN cast(hit_z as double) ELSE round(swz / sw, 6) END").as("v"))
-      .orderBy("ix", "iy")
-  }
-
-  private def idwDuck(wExp: Int): String = {
-    val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-    val (swzE, swE) = idwKernel(wExp)
-    s"${Geo.pagesWith(DuckD)}, " +
-      s"cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
-      s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
-      s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})), " +
-      "cand AS (SELECT ix, iy, doc_id, n_chars, " +
-      "(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) AS d2 FROM cells JOIN pages " +
-      "ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= 9.0e0) " +
-      "SELECT ix, iy, count(*) AS np, " +
-      "CASE WHEN min(d2) = 0.0e0 THEN cast(arg_min(n_chars, doc_id) FILTER (WHERE d2 = 0.0e0) as double) " +
-      s"ELSE round($swzE / $swE, 6) END AS v " +
-      "FROM cand GROUP BY ix, iy HAVING count(*) >= 3 ORDER BY ix, iy"
-  }
-
-  // ---- buffer distance sweep ---------------------------------------------
-
-  private def buffer(s: SparkSession, dir: String, r: Double): DataFrame = {
-    import Lit.{d => L}
-    val res = 7; val n = 1 << res
-    val rx = 360.0 / n; val ry = 180.0 / n
-    val w = r / 2.0
-    val cells = s.range(n.toLong * n)
-      .select((col("id") % n).as("ix"), expr(s"id div $n").as("iy"))
-      .withColumn("cx", expr(s"-180.0e0 + ${L(rx)} / 2.0e0 + ix * ${L(rx)}"))
-      .withColumn("cy", expr(s"-90.0e0 + ${L(ry)} / 2.0e0 + iy * ${L(ry)}"))
-      .withColumn("dx", explode(sequence(lit(-2), lit(2))))
-      .withColumn("dy", explode(sequence(lit(-2), lit(2))))
-      .withColumn("bx", expr(s"cast(floor(cx / ${L(w)}) as bigint)") + col("dx"))
-      .withColumn("by", expr(s"cast(floor(cy / ${L(w)}) as bigint)") + col("dy"))
-    val pts = Tables.pages(s, dir).select(col("lon"), col("lat"),
-      expr(s"cast(floor(lon / ${L(w)}) as bigint)").as("pbx"),
-      expr(s"cast(floor(lat / ${L(w)}) as bigint)").as("pby"))
-    cells.join(pts,
-        col("bx") === col("pbx") && col("by") === col("pby") &&
-          expr("(lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)") <= lit(r * r),
-        "left_semi")
-      .select("ix", "iy").distinct()
-      .orderBy("ix", "iy")
-  }
-
-  private def bufferDuck(r: Double): String = {
-    val n = 128; val rx = Lit.d(360.0 / n); val ry = Lit.d(180.0 / n)
-    s"${Geo.pagesWith(DuckD)}, " +
-      s"cells AS (SELECT range % $n AS ix, range // $n AS iy, " +
-      s"-180.0e0 + $rx / 2.0e0 + (range % $n) * $rx AS cx, " +
-      s"-90.0e0 + $ry / 2.0e0 + (range // $n) * $ry AS cy FROM range(${n * n})) " +
-      "SELECT DISTINCT ix, iy FROM cells JOIN pages " +
-      s"ON (lon - cx) * (lon - cx) + (lat - cy) * (lat - cy) <= ${Lit.d(r * r)} ORDER BY ix, iy"
-  }
-
   // ---- queries -----------------------------------------------------------
 
   private val streamT20 = 20L
@@ -161,23 +74,20 @@ object ParamSweeps extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mean_filter_win7" -> ((s, dir) => meanFilter(s, dir, 3)),
     "mean_filter_win11" -> ((s, dir) => meanFilter(s, dir, 5)),
-    "idw_interpolation_w1" -> ((s, dir) => idw(s, dir, 1)),
-    "idw_interpolation_w3" -> ((s, dir) => idw(s, dir, 3)),
+    "idw_interpolation_w1" -> ((s, dir) => Knn.idw(s, dir, 1)),
+    "idw_interpolation_w3" -> ((s, dir) => Knn.idw(s, dir, 3)),
     "hillshade_az135_alt60" -> ((s, dir) =>
-      Terrain.fxy(s, dir).selectExpr("ix", "iy", Terrain.hillshadeFor(60, 45))
-        .orderBy("ix", "iy")),
+      Terrain.fxy(s, dir).selectExpr("ix", "iy", Terrain.hillshadeFor(60, 45))),
     "extract_streams_t20" -> ((s, dir) =>
       Dem.fa(s, dir)
-        .selectExpr("ix", "iy", s"CASE WHEN fa > $streamT20 THEN 1 ELSE 0 END AS stream")
-        .orderBy("ix", "iy")),
-    "buffer_raster_d05" -> ((s, dir) => buffer(s, dir, 0.5)),
+        .selectExpr("ix", "iy", s"CASE WHEN fa > $streamT20 THEN 1 ELSE 0 END AS stream")),
+    "buffer_raster_d05" -> ((s, dir) => Focal.bufferRaster(s, dir, 0.5)),
     "aggregate_raster_f2" -> ((s, dir) =>
       Raster.density(s, dir, 7)
         .groupBy(expr("ix div 2").as("ax"), expr("iy div 2").as("ay"))
         .agg(expr("cast(sum(v) as bigint)").as("v_sum"),
           expr("cast(sum(v) as double) / cast(count(*) as double)").as("v_mean"),
-          min("v").as("v_min"), max("v").as("v_max"))
-        .orderBy("ax", "ay"))
+          min("v").as("v_min"), max("v").as("v_max")))
   )
 
   def oracles: Map[String, String] = Map(
@@ -185,15 +95,15 @@ object ParamSweeps extends Gates {
       s"WITH RECURSIVE ${Dem.duckDemCtes}, ${meanFilterSql(3)}",
     "mean_filter_win11" ->
       s"WITH RECURSIVE ${Dem.duckDemCtes}, ${meanFilterSql(5)}",
-    "idw_interpolation_w1" -> idwDuck(1),
-    "idw_interpolation_w3" -> idwDuck(3),
+    "idw_interpolation_w1" -> Knn.idwDuck(1),
+    "idw_interpolation_w3" -> Knn.idwDuck(3),
     "hillshade_az135_alt60" ->
       s"${Terrain.duckFxy()} SELECT ix, iy, ${Terrain.hillshadeFor(60, 45)} FROM fxy ORDER BY ix, iy",
     "extract_streams_t20" ->
       (s"WITH RECURSIVE ${Dem.duckFaCtes} " +
         s"SELECT ix, iy, CASE WHEN fa > $streamT20 THEN 1 ELSE 0 END AS stream " +
         "FROM fa ORDER BY ix, iy"),
-    "buffer_raster_d05" -> bufferDuck(0.5),
+    "buffer_raster_d05" -> Focal.bufferRasterDuck(0.5),
     "aggregate_raster_f2" ->
       (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 7)} " +
         s"SELECT ${DuckD.idiv("ix", "2")} AS ax, ${DuckD.idiv("iy", "2")} AS ay, " +

@@ -32,7 +32,6 @@ object ParamSweeps3 extends Gates {
         expr("ix div 8").as("pix"), expr("iy div 8").as("piy"))
     fine.join(coarse, Seq("pix", "piy"))
       .select("ix", "iy", "v")
-      .orderBy("ix", "iy")
   }
 
   private def resampleNnF8Duck: String = {

@@ -68,7 +68,6 @@ object Pipeline extends Gates {
       annotated(s, dir)
         .filter("lang_ok AND q_ok AND x_ok AND nd_ok")
         .select("doc_id", "pred_lang", "quality")
-        .orderBy("doc_id")
     }),
 
     // Funnel accounting: survivor counts after each cumulative stage —

@@ -101,7 +101,6 @@ object Polygonize extends Gates {
         .agg(expr("cast(sum(hi - lo + 1) as bigint)").as("n_cells"),
           min("lo").as("min_ix"), max("hi").as("max_ix"),
           min("iy").as("min_iy"), max("iy").as("max_iy"))
-        .orderBy("face_id")
     })
   )
 

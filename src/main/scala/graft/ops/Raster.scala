@@ -70,6 +70,30 @@ object Raster extends Gates {
     }.toSeq.toDF("v", "cdf")
   }
 
+  /** VectorHexBinning at hex `width` (the --width parameter): page
+    * counts per hex (row, col), extent from the data. */
+  private[ops] def hexBinning(s: SparkSession, dir: String, width: Double): DataFrame = {
+    val p = Tables.pages(s, dir)
+    val ext = p.agg(min("lon").as("minx"), min("lat").as("miny"),
+                    max("lon").as("maxx"), max("lat").as("maxy"))
+    p.crossJoin(broadcast(ext))
+      .withColumn("h", graft.expr.HexBin.hexBin(
+        col("lon"), col("lat"), col("minx"), col("miny"),
+        col("maxx"), col("maxy"), width))
+      .groupBy(expr("h >> 32").as("hex_row"),
+               expr("h & 4294967295").as("hex_col"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  private[ops] def hexBinningDuck(width: Double): String = {
+    val h = graft.expr.HexBin.assignSql("lon", "lat", "minx", "miny", "maxx", "maxy", width)
+    s"${Geo.pagesWith(DuckD)}, ext AS (SELECT min(lon) AS minx, min(lat) AS miny, " +
+      "max(lon) AS maxx, max(lat) AS maxy FROM pages), " +
+      s"assigned AS (SELECT $h AS h FROM pages, ext) " +
+      "SELECT (h >> 32) AS hex_row, (h & 4294967295) AS hex_col, count(*) AS n " +
+      "FROM assigned GROUP BY 1, 2 ORDER BY hex_row, hex_col"
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // VectorPointsToRaster with all assign modes at once:
@@ -84,7 +108,6 @@ object Raster extends Gates {
              min("n_chars").as("v_min"), max("n_chars").as("v_max"),
              expr("cast(sum(n_chars) as bigint)").as("v_sum"),
              count(lit(1)).as("n"))
-        .orderBy("ix", "iy")
     }),
 
     // RasterToVectorPoints: non-zero, non-nodata cells → cell-centre points.
@@ -95,7 +118,6 @@ object Raster extends Gates {
         .withColumn("x", expr(s"-180.0e0 + ${rx}e0 / 2.0e0 + ix * ${rx}e0"))
         .withColumn("y", expr(s"-90.0e0 + ${ry}e0 / 2.0e0 + iy * ${ry}e0"))
         .select("ix", "iy", "x", "y", "v")
-        .orderBy("ix", "iy")
     }),
 
     // AggregateRaster: downsample density by agg_factor 4 (res 7 → res 5).
@@ -105,7 +127,6 @@ object Raster extends Gates {
         .agg(expr("cast(sum(v) as bigint)").as("v_sum"),
              expr("cast(sum(v) as double) / cast(count(*) as double)").as("v_mean"),
              min("v").as("v_min"), max("v").as("v_max"))
-        .orderBy("ax", "ay")
     }),
 
     // Average/Sum/Max/Min Overlay across 3 same-grid layers (per-language
@@ -120,24 +141,11 @@ object Raster extends Gates {
              expr("cast(sum(v) as bigint)").as("v_sum"),
              max("v").as("v_max"), min("v").as("v_min"),
              count(lit(1)).as("n_layers"))
-        .orderBy("ix", "iy")
     }),
 
     // VectorHexBinning (vector_hex_bin.rs): nearest-hex-centre assignment
     // via the codegen'd HexBinAssign expression; extent from the data.
-    "hex_binning" -> ((s, dir) => {
-      val p = Tables.pages(s, dir)
-      val ext = p.agg(min("lon").as("minx"), min("lat").as("miny"),
-                      max("lon").as("maxx"), max("lat").as("maxy"))
-      p.crossJoin(broadcast(ext))
-        .withColumn("h", graft.expr.HexBin.hexBin(
-          col("lon"), col("lat"), col("minx"), col("miny"),
-          col("maxx"), col("maxy"), 10.0))
-        .groupBy(expr("h >> 32").as("hex_row"),
-                 expr("h & 4294967295").as("hex_col"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("hex_row", "hex_col")
-    }),
+    "hex_binning" -> ((s, dir) => hexBinning(s, dir, 10.0)),
 
     // ZScores (z_scores.rs): (v − μ)/σ over the density grid; μ,σ from
     // exact integer sums, one double expression per cell.
@@ -149,7 +157,6 @@ object Raster extends Gates {
         .selectExpr("ix", "iy",
           "(cast(v as double) - cast(s as double) / cast(n as double)) / " +
             "sqrt(greatest(0.0e0, (cast(q as double) - cast(s as double) * cast(s as double) / cast(n as double)) / (cast(n as double) - 1.0e0))) AS z")
-        .orderBy("ix", "iy")
     }),
 
     // CumulativeDistribution (cumulative_distribution.rs): CDF(v) per cell,
@@ -159,7 +166,6 @@ object Raster extends Gates {
       val g = density(s, dir, 6)
       g.join(broadcast(cdfLut(s, g)), "v")
         .select("ix", "iy", "cdf")
-        .orderBy("ix", "iy")
     }),
 
     // HighestPosition (highest_position.rs): argmax layer index per cell
@@ -174,7 +180,6 @@ object Raster extends Gates {
         .groupBy("ix", "iy")
         .agg(expr("min_by(layer, struct(-v, layer))").as("pos"),
              max("v").as("v_max"))
-        .orderBy("ix", "iy")
     }),
 
     // HistogramEqualization (histogram_equalization.rs): v' = floor(CDF·255)
@@ -184,7 +189,6 @@ object Raster extends Gates {
       g.join(broadcast(cdfLut(s, g)), "v")
         .withColumn("v_eq", expr("cast(floor(cdf * 255.0e0) as bigint)"))
         .select("ix", "iy", "v_eq")
-        .orderBy("ix", "iy")
     }),
 
     // RandomField / RandomSample (random_field.rs): reproducible hash-rand
@@ -195,7 +199,6 @@ object Raster extends Gates {
         .withColumn("u", expr(
           s"${SparkD.md5Bits("cast(ix * 1000000 + iy as string)", 1)} / 4294967296.0e0"))
         .select("ix", "iy", "u")
-        .orderBy("ix", "iy")
     }),
 
     // LowestPosition (lowest_position.rs): argmin layer per cell.
@@ -209,7 +212,6 @@ object Raster extends Gates {
         .groupBy("ix", "iy")
         .agg(expr("min_by(layer, struct(v, layer))").as("pos"),
              min("v").as("v_min"))
-        .orderBy("ix", "iy")
     }),
 
     // RasterCellAssignment: cell = row / col / x / y projections.
@@ -219,7 +221,6 @@ object Raster extends Gates {
         .withColumn("x", expr(s"-180.0e0 + ${rx}e0 / 2.0e0 + ix * ${rx}e0"))
         .withColumn("y", expr(s"-90.0e0 + ${ry}e0 / 2.0e0 + iy * ${ry}e0"))
         .select("ix", "iy", "x", "y")
-        .orderBy("ix", "iy")
     }),
 
     // Global raster summary stats over the density grid (exact-int mean/std).
@@ -261,14 +262,7 @@ object Raster extends Gates {
         s"SELECT ix, iy, cast(sum(v) as double) / cast(count(*) as double) AS v_avg, " +
         s"cast(sum(v) as bigint) AS v_sum, max(v) AS v_max, min(v) AS v_min, " +
         s"count(*) AS n_layers FROM layers GROUP BY 1, 2 ORDER BY ix, iy"),
-    "hex_binning" -> {
-      val h = graft.expr.HexBin.assignSql("lon", "lat", "minx", "miny", "maxx", "maxy", 10.0)
-      s"${Geo.pagesWith(DuckD)}, ext AS (SELECT min(lon) AS minx, min(lat) AS miny, " +
-        "max(lon) AS maxx, max(lat) AS maxy FROM pages), " +
-        s"assigned AS (SELECT $h AS h FROM pages, ext) " +
-        "SELECT (h >> 32) AS hex_row, (h & 4294967295) AS hex_col, count(*) AS n " +
-        "FROM assigned GROUP BY 1, 2 ORDER BY hex_row, hex_col"
-    },
+    "hex_binning" -> hexBinningDuck(10.0),
     "z_scores" ->
       (s"${Geo.pagesWith(DuckD)}, ${Geo.densityCte(DuckD, 6)}, " +
         "st AS (SELECT cast(sum(v) as bigint) AS s, cast(sum(v * v) as bigint) AS q, count(*) AS n FROM g) " +

@@ -57,7 +57,6 @@ object RasterClip extends Gates {
              max(when(col("is_hole"), 1).otherwise(0)).as("in_hole"))
         .filter(col("in_hull") === 1 && col("in_hole") === 0)
         .select("ix", "iy", "v")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -43,7 +43,6 @@ object Relational extends Gates {
     p.withColumn("bin0", expr(binExpr))
       .join(broadcast(lut), "bin0")
       .select("doc_id", "n_chars", "bin")
-      .orderBy("doc_id")
   }
 
   /** Reclass ranges over n_chars (reference assigns f64 class values). */
@@ -65,7 +64,6 @@ object Relational extends Gates {
              count(lit(1)).as("n_orders"))
       cust.join(lastOrder, Seq("c_custkey"), "left")
         .withColumn("n_orders", coalesce(col("n_orders"), lit(0L)))
-        .orderBy("c_custkey")
     }),
 
     // MergeVectors: two layers with different extra fields → union over the
@@ -74,13 +72,12 @@ object Relational extends Gates {
       val docs = Tables.table(s, dir, "documents")
       val a = docs.filter(col("lang") === "en").select("doc_id", "text", "lang", "source")
       val b = docs.filter(col("lang") === "zh").select("doc_id", "text", "lang", "n_chars")
-      mergeVectors(a, b).orderBy("doc_id")
+      mergeVectors(a, b)
     }),
 
     "reclass" -> ((s, dir) => {
       Tables.pages(s, dir)
         .select(col("doc_id"), expr(reclassCase).as("class"))
-        .orderBy("doc_id")
     }),
 
     // Quantiles (quantiles.rs:199-262): the reference's 10,000-bin
@@ -95,13 +92,11 @@ object Relational extends Gates {
     "cross_tabulation" -> ((s, dir) => {
       Tables.table(s, dir, "documents")
         .groupBy("lang", "source").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "source")
     }),
 
     "list_unique_values" -> ((s, dir) => {
       Tables.table(s, dir, "documents")
         .groupBy("lang").agg(count(lit(1)).as("n"))
-        .orderBy("lang")
     }),
 
     // EliminateCoincidentPoints: snap to a res-10 cell, keep the first
@@ -113,7 +108,6 @@ object Relational extends Gates {
         .withColumn("iy", expr(Geo.iy(SparkD, "lat", 10)))
         .groupBy("ix", "iy")
         .agg(min("doc_id").as("kept_doc"), (count(lit(1)) - 1).as("n_dropped"))
-        .orderBy("ix", "iy")
     }),
 
     // ExtractRasterValuesAtPoints: sample the density raster at each page —
@@ -124,7 +118,6 @@ object Relational extends Gates {
         .withColumn("iy", expr(Geo.iy(SparkD, "lat", 6)))
         .withColumn("value1", count(lit(1)).over(Window.partitionBy("ix", "iy")))
         .select("doc_id", "value1")
-        .orderBy("doc_id")
     }),
 
     // Gap sessionization, batch form (twin of the streaming
@@ -134,7 +127,6 @@ object Relational extends Gates {
           s, Tables.table(s, dir, "events")
             .select("event_id", "ts", "user_id", "event_type", "value"))
         .withColumn("v_sum", expr("round(v_sum, 6)"))
-        .orderBy("user_id", "session_start")
     }),
 
     // Events: tumbling 1-hour windowed aggregation (batch twin of the
@@ -143,7 +135,6 @@ object Relational extends Gates {
       Tables.table(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), expr("round(sum(value), 6)").as("v_sum"))
-        .orderBy("hour", "event_type")
     })
   )
 

@@ -250,7 +250,6 @@ object ShapeMetrics extends Gates {
         .join(VectorOps.ringsDF(s).selectExpr("fid", "ring_id",
           s"(${perimE(SparkD)}) / (${areaE(SparkD)}) AS pa_ratio",
           s"${rogE(SparkD)} AS rog"), Seq("fid", "ring_id"))
-        .orderBy("fid", "ring_id")
     }),
     "hole_proportion" -> ((s, dir) => {
       VectorOps.ringsDF(s)
@@ -259,19 +258,16 @@ object ShapeMetrics extends Gates {
         .agg(expr("sum(CASE WHEN is_hole_flag THEN area ELSE 0.0e0 END)").as("holes"),
           expr("sum(CASE WHEN is_hole_flag THEN 0.0e0 ELSE area END)").as("outer_a"))
         .selectExpr("fid", "holes / outer_a AS hole_prop")
-        .orderBy("fid")
     }),
-    "shape_metrics_hull" -> ((s, dir) => hullMetrics(s).orderBy("fid", "ring_id")),
+    "shape_metrics_hull" -> ((s, dir) => hullMetrics(s)),
     // PolygonLongAxis / PolygonShortAxis (gis_analysis/polygon_long_axis
     // .rs, polygon_short_axis.rs): the reference emits the axis as a line
     // feature through the polygon; the informative attribute — the
     // min-area-MBB side lengths from the same calipers — is emitted here.
     "polygon_long_axis" -> ((s, dir) => axes(s)
-      .selectExpr("fid", "ring_id", "round(greatest(d1, d2), 6) AS long_axis")
-      .orderBy("fid", "ring_id")),
+      .selectExpr("fid", "ring_id", "round(greatest(d1, d2), 6) AS long_axis")),
     "polygon_short_axis" -> ((s, dir) => axes(s)
-      .selectExpr("fid", "ring_id", "round(least(d1, d2), 6) AS short_axis")
-      .orderBy("fid", "ring_id"))
+      .selectExpr("fid", "ring_id", "round(least(d1, d2), 6) AS short_axis"))
   )
 
   /** min-area MBB side lengths per ring (same calipers as hullMetrics). */

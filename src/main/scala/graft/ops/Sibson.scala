@@ -93,7 +93,6 @@ object Sibson extends Gates {
       .agg(count(lit(1)).as("nn"),
         expr("cast((1000000 * sum(w * sv)) div sum(w) as bigint)")
           .as("v_micro"))
-      .orderBy("qx", "qy")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

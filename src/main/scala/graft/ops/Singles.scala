@@ -146,7 +146,6 @@ object Singles extends Gates {
     }
     pairs(1, 0).unionByName(pairs(0, 1))
       .groupBy("ix", "iy").agg(expr("round(max(bl), 6)").as("branch_len"))
-      .orderBy("ix", "iy")
   }
 
   private def mblDuck: String = {

@@ -23,7 +23,6 @@ object Spatial extends Gates {
       m.groupBy("fid")
         .agg(count(lit(1)).as("n_pages"),
              min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-        .orderBy("fid")
     }),
 
     // Same result via the documented degraded path: shuffled salted cell
@@ -33,7 +32,6 @@ object Spatial extends Gates {
       m.groupBy("fid")
         .agg(count(lit(1)).as("n_pages"),
              min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-        .orderBy("fid")
     }),
 
     // Clip (semi-join) to the zone with a hole — carries `text` through so
@@ -43,7 +41,7 @@ object Spatial extends Gates {
       val keep = PipJoin.zoneMembership(s, p).filter(col("fid") === 3)
         .select("doc_id")
       p.join(keep, Seq("doc_id"), "left_semi")
-        .select("doc_id", "url", "text").orderBy("doc_id")
+        .select("doc_id", "url", "text")
     }),
 
     // Erase (anti-join) — complement of clip (erase_polygon_from_raster.rs).
@@ -52,7 +50,7 @@ object Spatial extends Gates {
       val keep = PipJoin.zoneMembership(s, p).filter(col("fid") === 3)
         .select("doc_id")
       p.join(keep, Seq("doc_id"), "left_anti")
-        .select("doc_id", "url", "text").orderBy("doc_id")
+        .select("doc_id", "url", "text")
     }),
 
     // LidarTile: tile assignment + min_points filter.
@@ -61,7 +59,6 @@ object Spatial extends Gates {
         .withColumn("tile_x", expr(tileX)).withColumn("tile_y", expr(tileY))
         .groupBy("tile_x", "tile_y").agg(count(lit(1)).as("n_points"))
         .filter(col("n_points") >= 3)
-        .orderBy("tile_x", "tile_y")
     }),
 
     // Batched H3/S2-style Morton cell encoder (custom codegen expression);
@@ -69,7 +66,6 @@ object Spatial extends Gates {
     "cell_encode" -> ((s, dir) => {
       PipJoin.withCell(Tables.pages(s, dir), 10)
         .select(col("doc_id"), col("ix"), col("iy"), col("cell"))
-        .orderBy("doc_id")
     })
   )
 

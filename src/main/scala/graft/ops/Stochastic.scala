@@ -86,7 +86,6 @@ object Stochastic extends Gates {
         .agg(sum("dep").cast("bigint").as("dep_count"))
         .selectExpr("ix", "iy", "dep_count",
           s"cast(dep_count as double) / ${K}.0e0 AS pdep")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -40,7 +40,7 @@ object Streams2 extends Gates {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "strahler_stream_order" -> ((s, dir) =>
-      Dem.strahler(s, dir).orderBy("ix", "iy")),
+      Dem.strahler(s, dir)),
 
     // junction-sum Jacobi; convergence asserted (ADVICE r3: no fixed-round
     // stop against the oracle's exact head-path counting)
@@ -53,21 +53,21 @@ object Streams2 extends Gates {
           .agg(expr("cast(sum(mag) as bigint)").as("msum"))
         st.join(inflow, Seq("ix", "iy"), "left")
           .selectExpr("ix", "iy", "coalesce(msum, 1) AS mag")
-      }.orderBy("ix", "iy")
+      }
     }),
 
     "stream_link_id" -> ((s, dir) =>
-      Dem.links(s, dir).orderBy("ix", "iy")),
+      Dem.links(s, dir)),
 
     "tributary_id" -> ((s, dir) =>
-      Dem.trib(s, dir).orderBy("ix", "iy")),
+      Dem.trib(s, dir)),
 
     "horton_stream_order" -> ((s, dir) => {
       val t = Dem.trib(s, dir)
       val hmax = t.join(Dem.strahler(s, dir), Seq("ix", "iy"))
         .groupBy("trib").agg(max("ord").as("horton"))
       t.join(hmax, Seq("trib"))
-        .select("ix", "iy", "horton").orderBy("ix", "iy")
+        .select("ix", "iy", "horton")
     }),
 
     "hack_stream_order" -> ((s, dir) => {
@@ -91,34 +91,31 @@ object Streams2 extends Gates {
         cur.join(fromParent, Seq("trib"), "left")
           .selectExpr("trib", "coalesce(hack, ch) AS hack")
       }
-      t.join(h, Seq("trib")).select("ix", "iy", "hack").orderBy("ix", "iy")
+      t.join(h, Seq("trib")).select("ix", "iy", "hack")
     }),
 
     "topological_stream_order" -> ((s, dir) =>
-      Dem.downAgg(s, dir).select("ix", "iy", "topo").orderBy("ix", "iy")),
+      Dem.downAgg(s, dir).select("ix", "iy", "topo")),
 
     "dist_to_outlet" -> ((s, dir) =>
       Dem.downAgg(s, dir)
-        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")),
 
     "farthest_channel_head" -> ((s, dir) =>
       Dem.triblen(s, dir)
-        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")
-        .orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS dist")),
 
     "find_main_stem" -> ((s, dir) => {
       val t = Dem.trib(s, dir)
       val mains = t.join(Dem.outlets(s, dir), Seq("ix", "iy"), "left_semi")
         .select("trib").distinct()
-      t.join(mains, Seq("trib")).select("ix", "iy").orderBy("ix", "iy")
+      t.join(mains, Seq("trib")).select("ix", "iy")
     }),
 
     "stream_link_length" -> ((s, dir) => {
       val lk = Dem.links(s, dir)
       lk.join(linkLen(s, dir), Seq("link_id"), "left")
         .selectExpr("ix", "iy", "coalesce(link_len, 0.0e0) AS link_len")
-        .orderBy("ix", "iy")
     }),
 
     "stream_link_slope" -> ((s, dir) => {
@@ -141,7 +138,7 @@ object Streams2 extends Gates {
           "CASE WHEN coalesce(link_len, 0.0e0) > 0.0e0 " +
             "THEN cast(ztop - ztail as double) / link_len ELSE 0.0e0 END AS link_slope")
       lk.join(slope, Seq("link_id"))
-        .select("ix", "iy", "link_slope").orderBy("ix", "iy")
+        .select("ix", "iy", "link_slope")
     }),
 
     // exterior (head-bearing) links shorter than min_length are pruned
@@ -153,7 +150,7 @@ object Streams2 extends Gates {
         .filter(expr(s"coalesce(link_len, 0.0e0) < $minLinkLen"))
         .select("link_id")
       lk.join(short, Seq("link_id"), "left_anti")
-        .select("ix", "iy").orderBy("ix", "iy")
+        .select("ix", "iy")
     }),
 
     // StreamLinkClass (stream_link_class.rs:245-365): 3 = channel head,
@@ -172,7 +169,6 @@ object Streams2 extends Gates {
         .selectExpr("ix", "iy",
           "CASE WHEN is_out = 1 THEN 5 WHEN coalesce(n_in, 0) >= 2 THEN 4 " +
             "WHEN is_h = 1 THEN 3 WHEN is_ext = 1 THEN 1 ELSE 2 END AS link_class")
-        .orderBy("ix", "iy")
     }),
 
     "total_length_channels" -> ((s, dir) =>

@@ -131,7 +131,6 @@ object Stretch extends Gates {
     val (lo, hi) = clipBounds(hist.toSeq, clipPct)
     g.selectExpr("ix", "iy",
         s"${toneMapE(s"${Lit.d(lo.toDouble)}", s"${Lit.d((hi - lo).toDouble)}")} AS v_pct")
-      .orderBy("ix", "iy")
   }
 
   private def pctDuck: String = {
@@ -193,7 +192,7 @@ object Stretch extends Gates {
       val xv = invRef(p)
       (v, math.round((xv + 3.0) / 6.0 * (tones - 1.0)).toDouble)
     }.toSeq.toDF("v", "v_gauss")
-    g.join(broadcast(lut), "v").select("ix", "iy", "v_gauss").orderBy("ix", "iy")
+    g.join(broadcast(lut), "v").select("ix", "iy", "v_gauss")
   }
 
   private def gaussDuck: String = {

@@ -73,11 +73,11 @@ object Terrain extends Gates {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "slope" -> ((s, dir) =>
-      fxy(s, dir).selectExpr("ix", "iy", slopeE).orderBy("ix", "iy")),
+      fxy(s, dir).selectExpr("ix", "iy", slopeE)),
     "aspect" -> ((s, dir) =>
-      fxy(s, dir).selectExpr("ix", "iy", aspectE).orderBy("ix", "iy")),
+      fxy(s, dir).selectExpr("ix", "iy", aspectE)),
     "hillshade" -> ((s, dir) =>
-      fxy(s, dir).selectExpr("ix", "iy", hillshadeE).orderBy("ix", "iy"))
+      fxy(s, dir).selectExpr("ix", "iy", hillshadeE))
   )
 
   // ---- DuckDB twins -----------------------------------------------------

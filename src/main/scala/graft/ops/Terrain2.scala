@@ -133,12 +133,11 @@ object Terrain2 extends Gates {
         ag(s, dir)
           .selectExpr(Seq("ix", "iy") ++ partials: _*)
           .selectExpr(Seq("ix", "iy") ++ curvPre: _*)
-          .selectExpr("ix", "iy", sel)
-          .orderBy("ix", "iy"))
+          .selectExpr("ix", "iy", sel))
     }.toMap
     val stats = statDefs.map { case (name, sel) =>
       name -> ((s: SparkSession, dir: String) =>
-        ag(s, dir).selectExpr("ix", "iy", sel).orderBy("ix", "iy"))
+        ag(s, dir).selectExpr("ix", "iy", sel))
     }.toMap
     curv ++ stats ++ Map(
       // ElevRelativeToMinMax (elev_relative_to_min_max.rs:199-203):
@@ -149,14 +148,12 @@ object Terrain2 extends Gates {
         g.crossJoin(broadcast(ext))
           .selectExpr("ix", "iy",
             "cast(v - mn as double) / cast(mx - mn as double) * 100.0e0 AS rel_elev")
-          .orderBy("ix", "iy")
       }),
       "pennock_landform_class" -> ((s: SparkSession, dir: String) =>
         ag(s, dir)
           .selectExpr(Seq("ix", "iy") ++ partials: _*)
           .selectExpr(Seq("ix", "iy") ++ curvPre ++ (0 until 8).map(c => s"n$c"): _*)
-          .selectExpr("ix", "iy", s"$pennockE AS landform")
-          .orderBy("ix", "iy"))
+          .selectExpr("ix", "iy", s"$pennockE AS landform"))
     )
   }
 

@@ -36,14 +36,12 @@ object Terrain3 extends Gates {
     "max_downslope_elev_change" -> ((s, dir) =>
       Dem.halo(Dem.dem(s, dir))
         .groupBy("ix", "iy")
-        .agg(expr("cast(coalesce(max(CASE WHEN nz < z THEN z - nz END), 0) as bigint)").as("max_drop"))
-        .orderBy("ix", "iy")),
+        .agg(expr("cast(coalesce(max(CASE WHEN nz < z THEN z - nz END), 0) as bigint)").as("max_drop"))),
 
     "min_downslope_elev_change" -> ((s, dir) =>
       Dem.halo(Dem.dem(s, dir))
         .groupBy("ix", "iy")
-        .agg(expr("cast(coalesce(min(CASE WHEN nz < z THEN z - nz END), 0) as bigint)").as("min_drop"))
-        .orderBy("ix", "iy")),
+        .agg(expr("cast(coalesce(min(CASE WHEN nz < z THEN z - nz END), 0) as bigint)").as("min_drop"))),
 
     "downslope_index" -> ((s, dir) => {
       val ddf = Dem.dd(s, dir).localCheckpoint()
@@ -76,13 +74,11 @@ object Terrain3 extends Gates {
       walked.selectExpr("ix", "iy",
         s"CASE WHEN nc + nd > 0 THEN round(degrees(atan(cast(z0 - zc as double) / (${lenOf("nc", "nd")}))), 6) " +
           "ELSE 0.0e0 END AS ds_index")
-        .orderBy("ix", "iy")
     }),
 
     "turning_bands" -> ((s, dir) => {
       Raster.density(s, dir, 6)
         .selectExpr("ix", "iy", s"${tbExpr(SparkD)} AS tb_z")
-        .orderBy("ix", "iy")
     })
   )
 

@@ -91,16 +91,16 @@ object TerrainIdx extends Gates {
 
     "wetness_index" -> ((s, dir) =>
       withFa(s, dir).filter(expr("sd <> 0.0e0"))
-        .selectExpr("ix", "iy", wiE).orderBy("ix", "iy")),
+        .selectExpr("ix", "iy", wiE)),
 
     "sediment_transport_index" -> ((s, dir) =>
-      withFa(s, dir).selectExpr("ix", "iy", stiE).orderBy("ix", "iy")),
+      withFa(s, dir).selectExpr("ix", "iy", stiE)),
 
     "relative_stream_power" -> ((s, dir) =>
-      withFa(s, dir).selectExpr("ix", "iy", rspE).orderBy("ix", "iy")),
+      withFa(s, dir).selectExpr("ix", "iy", rspE)),
 
     "relative_aspect" -> ((s, dir) =>
-      fxz(s, dir).selectExpr("ix", "iy", raE).orderBy("ix", "iy")),
+      fxz(s, dir).selectExpr("ix", "iy", raE)),
 
     // SlopeVsElevationPlot (terrain_analysis/slope_vs_elevation_plot.rs):
     // the 2-D (slope band, elevation decile) histogram of the atlas plot.
@@ -111,7 +111,6 @@ object TerrainIdx extends Gates {
         .selectExpr("cast(floor(sd / 5.0e0) as bigint) AS slope_band",
           "(z - zmn) * 10 div (zmx - zmn + 1) AS elev_bin")
         .groupBy("slope_band", "elev_bin").agg(count(lit(1)).as("n"))
-        .orderBy("slope_band", "elev_bin")
     }),
 
     "standard_deviation_of_slope" -> ((s, dir) => {
@@ -127,7 +126,6 @@ object TerrainIdx extends Gates {
         .groupBy(col("cix").as("ix"), col("ciy").as("iy"))
         .agg(count(lit(1)).as("n"), sum("si").as("s1"), sum(expr("si * si")).as("s2"))
         .selectExpr("ix", "iy", sdsE)
-        .orderBy("ix", "iy")
     })
   )
 

@@ -60,7 +60,6 @@ object Text extends Gates {
         .withColumn("keep_doc", min("doc_id").over(Window.partitionBy("fp")))
         .withColumn("is_dup", col("doc_id") =!= col("keep_doc"))
         .select("doc_id", "fp", "keep_doc", "is_dup")
-        .orderBy("doc_id")
     }),
 
     // Token counting: whitespace tokens + BPE-ish regex token count.
@@ -70,7 +69,6 @@ object Text extends Gates {
         .withColumn("n_re_tokens",
           expr("cast(regexp_count(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]') as bigint)"))
         .select("doc_id", "n_ws_tokens", "n_re_tokens")
-        .orderBy("doc_id")
     }),
 
     // Language-ID heuristic: stopword-marker scores, argmax.
@@ -80,7 +78,6 @@ object Text extends Gates {
           markers.map(m => langScore(m._2)).mkString("greatest(", ", ", ")")))
         .withColumn("pred_lang", expr(langIdCase))
         .select("doc_id", "lang", "pred_lang")
-        .orderBy("doc_id")
     }),
 
     // Quality scoring: length, punctuation density, stopword ratio →
@@ -100,7 +97,6 @@ object Text extends Gates {
             "0.3e0 * least(stop_ratio * 10.0e0, 1.0e0) + " +
             "0.3e0 * (1.0e0 - least(punct_ratio * 5.0e0, 1.0e0))"))
         .select("doc_id", "n_tok", "punct_ratio", "stop_ratio", "quality")
-        .orderBy("doc_id")
     }),
 
     // Document fingerprint: 48-bit md5 prefix + min-shingle-hash (winnowing
@@ -117,7 +113,6 @@ object Text extends Gates {
           s"array_min(transform($sh, s -> ${SparkD.md5Bits("s", 1)}))"))
         .withColumn("n_shingles", expr(s"cast(size(array_distinct($sh)) as bigint)"))
         .select("doc_id", "fp48", "min_shingle_hash", "n_shingles")
-        .orderBy("doc_id")
     }),
 
     // Multimodal plumbing: html carried as opaque binary with typed
@@ -130,7 +125,6 @@ object Text extends Gates {
         .select(col("doc_id"),
           expr("cast(octet_length(html) as bigint)").as("byte_len"),
           md5(col("html")).as("content_hash"))
-        .orderBy("doc_id")
     })
   )
 

@@ -105,8 +105,7 @@ object Tin extends Gates {
     // itself as output — vertex ids + shoelace area.
     "construct_vector_tin" -> ((s, dir) =>
       triangles(s, dir)
-        .selectExpr("a", "b", "c", s"round(abs($detE) / 2.0e0, 10) AS area")
-        .orderBy("a", "b", "c")),
+        .selectExpr("a", "b", "c", s"round(abs($detE) / 2.0e0, 10) AS area")),
 
     // VoronoiDiagram (voronoi_diagram.rs:21-33): the circumcentre dual —
     // one Voronoi edge per INTERIOR Delaunay edge (shared by 2 triangles),
@@ -125,7 +124,6 @@ object Tin extends Gates {
         .filter(col("cnt") === 2)
         .selectExpr("e1", "e2", "round(c1.x, 6) AS x1", "round(c1.y, 6) AS y1",
           "round(c2.x, 6) AS x2", "round(c2.y, 6) AS y2")
-        .orderBy("e1", "e2")
     }),
 
     "tin_gridding" -> ((s, dir) => {
@@ -147,7 +145,6 @@ object Tin extends Gates {
           "'cx', cx, 'cy', cy, 'zc', zc, 'tx', tx, 'ty', ty), " +
           "named_struct('a', a, 'b', b, 'c', c))").as("t"))
         .selectExpr("i", "j", s"${withT(zE)} AS z_tin")
-        .orderBy("i", "j")
     })
   )
 

@@ -81,7 +81,6 @@ object VectorOps extends Gates {
         .withColumn("perimeter", expr(perimExpr))
         .withColumn("compactness", expr(s"($areaExpr) / (($perimExpr) * ($perimExpr))"))
         .select("fid", "ring_id", "area", "perimeter", "compactness")
-        .orderBy("fid", "ring_id")
     }),
 
     // ExtractNodes: ring vertices → point rows.
@@ -91,7 +90,6 @@ object VectorOps extends Gates {
           posexplode(expr("zip_with(xs, ys, (x, y) -> struct(x, y))")))
         .select(col("fid"), col("ring_id"), col("pos").as("idx"),
           col("col.x").as("x"), col("col.y").as("y"))
-        .orderBy("fid", "ring_id", "idx")
     }),
 
     // RemovePolygonHoles: keep rings whose orientation is clockwise
@@ -101,7 +99,6 @@ object VectorOps extends Gates {
         .withColumn("signed_area", expr(signedAreaExpr))
         .filter(col("signed_area") < 0.0)
         .select("fid", "ring_id")
-        .orderBy("fid", "ring_id")
     }),
 
     // PolygonsToLines (polygons_to_lines.rs): shape-type cast — each ring
@@ -113,7 +110,6 @@ object VectorOps extends Gates {
           "cast(size(xs) as bigint) AS n_points",
           "CASE WHEN element_at(xs, 1) = element_at(xs, size(xs)) AND " +
             "element_at(ys, 1) = element_at(ys, size(ys)) THEN 1 ELSE 0 END AS was_closed")
-        .orderBy("fid", "ring_id")
     }),
 
     // SinglePartToMultiPart: group parts back per feature.
@@ -122,7 +118,6 @@ object VectorOps extends Gates {
         .groupBy("fid")
         .agg(count(lit(1)).as("n_parts"),
           expr("cast(sum(size(xs)) as bigint)").as("total_points"))
-        .orderBy("fid")
     }),
 
     // ExtendVectorLines (extend_vector_lines.rs): treat each ring as an
@@ -131,7 +126,6 @@ object VectorOps extends Gates {
     "extend_vector_lines" -> ((s, dir) => {
       ringsDF(s)
         .selectExpr(Seq("fid", "ring_id") ++ extendSelect(graft.core.SparkD): _*)
-        .orderBy("fid", "ring_id")
     }),
 
     // MultiPartToSinglePart: each ring becomes its own feature.
@@ -140,7 +134,6 @@ object VectorOps extends Gates {
         .withColumn("new_fid", expr("row_number() OVER (ORDER BY fid, ring_id)"))
         .selectExpr("new_fid", "fid AS parent_fid", "ring_id",
           "cast(size(xs) as bigint) AS n_points")
-        .orderBy("new_fid")
     }),
 
     // LineIntersections (line_intersections.rs + line_segment.rs:33-56):
@@ -151,8 +144,7 @@ object VectorOps extends Gates {
     // the oracle keeps the brute-force windowed form.
     "line_intersections" -> ((s, dir) =>
       lineIntersections(s, dir)
-        .select("sa", "sb", "px", "py")
-        .orderBy("sa", "sb")),
+        .select("sa", "sb", "px", "py")),
 
     // SplitWithLines (split_with_lines.rs:254-330, line_ops.rs:32-69):
     // split the l1 polyline features (20-vertex parents) at their strict-
@@ -182,7 +174,6 @@ object VectorOps extends Gates {
           expr("max_by(x, k)").as("x_last"), expr("max_by(y, k)").as("y_last"))
         .selectExpr("parent AS parent_fid", "cast(part as bigint) AS part_id",
           "n_vertices", "x_first", "y_first", "x_last", "y_last")
-        .orderBy("parent_fid", "part_id")
     }),
 
     // SmoothVectors (smooth_vectors.rs:294-315): 3-point moving average
@@ -195,7 +186,6 @@ object VectorOps extends Gates {
         .select(col("fid"), col("ring_id"), posexplode(expr(sm)))
         .select(col("fid"), col("ring_id"), col("pos").as("idx"),
           col("col.sx").as("sx"), col("col.sy").as("sy"))
-        .orderBy("fid", "ring_id", "idx")
     })
   )
 

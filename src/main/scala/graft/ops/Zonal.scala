@@ -51,7 +51,6 @@ object Zonal extends Gates {
              count(lit(1)).as("n"),
              min("n_chars").as("mn"), max("n_chars").as("mx"))
         .selectExpr("fid" +: statsSelect: _*)
-        .orderBy("fid")
     }),
 
     // Per-zone centroid (centroid_vector.rs): mean x/y, rounded to stabilise
@@ -61,7 +60,6 @@ object Zonal extends Gates {
         .groupBy("fid")
         .agg(expr("round(sum(lon) / cast(count(*) as double), 6)").as("cx"),
              expr("round(sum(lat) / cast(count(*) as double), 6)").as("cy"))
-        .orderBy("fid")
     }),
 
     // Medoid (medoid.rs:245-260): the member nearest the zone centroid;
@@ -78,7 +76,6 @@ object Zonal extends Gates {
           Window.partitionBy("fid").orderBy(col("d2"), col("doc_id"))))
         .filter(col("rn") === 1)
         .select("fid", "doc_id", "d2")
-        .orderBy("fid")
     }),
 
     // LayerFootprint / MinimumBoundingEnvelope per zone.
@@ -87,7 +84,6 @@ object Zonal extends Gates {
         .groupBy("fid")
         .agg(min("lon").as("min_x"), max("lon").as("max_x"),
              min("lat").as("min_y"), max("lat").as("max_y"))
-        .orderBy("fid")
     })
   )
 

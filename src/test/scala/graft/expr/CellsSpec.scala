@@ -1,7 +1,6 @@
 package graft.expr
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class CellsSpec extends SparkSpec {
 

@@ -6,7 +6,6 @@ import java.nio.file.{Files, Paths}
 class CommitSpec extends SparkSpec {
 
   test("committed write: snapshot metadata + per-partition rows + resume") {
-    import spark.implicits._
     val out = Files.createTempDirectory("graft_commit").toString
     val df = spark.range(1000).toDF("id").repartition(4)
 

@@ -64,7 +64,6 @@ class ParamSweepsSpec extends SparkSpec {
   }
 
   test("smaller buffer distance yields a subset of the larger buffer") {
-    import org.apache.spark.sql.functions._
     val d05 = q("buffer_raster_d05").select("ix", "iy")
     val d1 = graft.SparkEntry.queries("buffer_raster")(spark, dir).select("ix", "iy")
     assert(d05.count() > 0, "0.5-degree buffer must be non-empty")
