@@ -44,7 +44,7 @@ class DedupClustersSpec extends SparkSpec {
     val lab = q("dedup_clusters")
     val n = lab.count()
     val sum = lab.filter(col("doc_id") === col("rep"))
-      .agg(org.apache.spark.sql.functions.sum("cluster_size")).head.getLong(0)
+      .agg(org.apache.spark.sql.functions.sum("cluster_size")).head().getLong(0)
     assert(sum == n, "per-rep sizes must partition the labelled docs")
     // docs enter only via a verified pair, so singleton clusters are impossible
     assert(lab.filter(col("cluster_size") < 2).count() == 0,

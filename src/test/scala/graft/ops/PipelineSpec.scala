@@ -28,7 +28,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("funnel is monotone and every filtering arm the fixture can exercise bites") {
-    val f = q("corpus_clean_funnel").head
+    val f = q("corpus_clean_funnel").head()
     val Seq(nTotal, nLang, nQuality, nExact, nClean) =
       Seq("n_total", "n_lang", "n_quality", "n_exact", "n_clean")
         .map(c => f.getLong(f.fieldIndex(c)))
@@ -44,10 +44,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("token accounting agrees with the token_count gate over the survivors") {
-    val t = q("corpus_clean_tokens").head
+    val t = q("corpus_clean_tokens").head()
     val survivors = q("corpus_clean").select("doc_id")
     val expectTokens = q("token_count").join(survivors, "doc_id")
-      .agg(sum("n_ws_tokens")).head.getLong(0)
+      .agg(sum("n_ws_tokens")).head().getLong(0)
     assert(t.getLong(t.fieldIndex("n_docs")) == survivors.count(),
       "token gate's doc count must match the survivor table")
     assert(t.getLong(t.fieldIndex("n_tokens")) == expectTokens,
@@ -55,7 +55,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("funnel n_clean equals the clean-corpus row count") {
-    val f = q("corpus_clean_funnel").head
+    val f = q("corpus_clean_funnel").head()
     assert(f.getLong(f.fieldIndex("n_clean")) == q("corpus_clean").count(),
       "the funnel's terminal count and the survivor table must agree")
   }
